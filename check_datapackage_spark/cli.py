@@ -16,6 +16,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from contextlib import contextmanager
 
 from .issue import DataPackageError, explain, pretty_print
 from .plans.validation import check_table
@@ -121,6 +122,35 @@ def load_toml_config(path: str = ".cdp.toml") -> dict:
     return out
 
 
+@contextmanager
+def _executed_once(violations):
+    """Persist the violations for one report: the first action executes
+    the plan (and completes its observed summary), every later one
+    reads the cached rows. The cache is released on the way out."""
+    violations.persist()
+    try:
+        yield
+    finally:
+        violations.unpersist()
+
+
+def _report(v, n: int, results: list, issues: list, audit) -> int:
+    """Sink, summaries and sample of one run; 1 when it failed."""
+    if audit and v is not None:
+        write_violations(v, audit)
+    for name, r in results:
+        if name is not None:
+            print(f"== {name}")
+        r.summary.show(100, truncate=False)
+    if n == 0 and not issues:
+        print("All checks passed!")  # ref cli.py:84
+        return 0
+    print(f"{n} violation row(s) found.", file=sys.stderr)
+    if v is not None:
+        v.show(20, truncate=False)
+    return 1
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="check-datapackage-spark")
     p.add_argument("--data", required=True, help="sf dir or iceberg:<catalog.db>")
@@ -177,12 +207,13 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
     toml_cfg = load_toml_config(args.config)
 
-    # only stop a session WE created: embedding main() in a host app
-    # (or the test suite) must not kill the host's session
+    # a host's session (an embedding app, the test suite) is used as it
+    # is: --cores shapes only a session the CLI creates, and only that
+    # one is stopped on the way out
     from pyspark.sql import SparkSession
 
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark("cdp-cli", cores=args.cores)
+    host = SparkSession.getActiveSession()
+    spark = host if host is not None else get_spark("cdp-cli", cores=args.cores)
     try:
         spec = read_spec(
             args.spec,
@@ -238,19 +269,13 @@ def main(argv=None) -> int:
                     file=sys.stderr,
                 )
             v = pres.violations()
-            n = v.count() if v is not None else 0
-            if args.audit and v is not None:
-                write_violations(v, args.audit)
-            for rname, r in pres.resources.items():
-                print(f"== {rname}")
-                r.summary.orderBy("check").show(100, truncate=False)
-            if n == 0 and not all_issues:
-                print("All checks passed!")  # ref cli.py:84
-                return 0
-            print(f"{n} violation row(s) found.", file=sys.stderr)
-            if v is not None:
-                v.show(20, truncate=False)
-            return 1 if args.error else 0
+            if v is None:
+                rc = _report(None, 0, [], all_issues, args.audit)
+            else:
+                with _executed_once(v):
+                    results = list(pres.resources.items())
+                    rc = _report(v, v.count(), results, all_issues, args.audit)
+            return rc if args.error else 0
 
         df = load_table(spark, args.data, args.table)
         extra = None
@@ -325,22 +350,14 @@ def main(argv=None) -> int:
                 explain(all_issues, subject="datapackage.json"),
                 file=sys.stderr,
             )
-        n = res.violations.count()
-        if args.audit:
-            write_violations(res.violations, args.audit)
-        res.summary.orderBy("check").show(100, truncate=False)
-        if n == 0 and not all_issues:
-            print("All checks passed!")  # ref cli.py:84
-            return 0
-        print(f"{n} violation row(s) found.", file=sys.stderr)
-        res.violations.show(20, truncate=False)
-        if args.error:
-            raise DataPackageError(f"{n} violation row(s); see output above")
-        return 0
+        with _executed_once(res.violations):
+            n = res.violation_count()
+            rc = _report(res.violations, n, [(None, res)], all_issues, args.audit)
+        return rc if args.error else 0
     except DataPackageError:
         return 1
     finally:
-        if not pre_existing:
+        if host is None:
             spark.stop()
 
 

@@ -1097,6 +1097,7 @@ def compile_json_schema_checks(
     sub-schemas in data-package-2-0.json (SURVEY §1.4).
     """
     import hashlib
+    import json
 
     js = resolve_refs(field.constraints.json_schema or {})
     col = F.col(field.name)
@@ -1110,9 +1111,13 @@ def compile_json_schema_checks(
     # checks — the previous per-check let-binding still re-parsed the
     # JSON once per check per row (13x/row on q38; variant exprs are
     # interpreted, no codegen CSE). Names are md5-scoped to the field
-    # so multi-JSON-field tables can't collide; unused slots are pruned
-    # by Catalyst's column pruning.
-    fkey = "js" + hashlib.md5(field.name.encode()).hexdigest()[:8]
+    # AND its resolved schema: slot i of one schema is not slot i of
+    # another, so two compiles of one field with different schemas that
+    # meet in one bind_check_lets keep distinct slots instead of
+    # silently overwriting each other's. Unused slots are pruned by
+    # Catalyst's column pruning.
+    scope = json.dumps([field.name, js], sort_keys=True, default=str)
+    fkey = "js" + hashlib.md5(scope.encode()).hexdigest()[:8]
     vname = f"__{fkey}_v"
     lets_layers: tuple = ({}, {}, {}, {})
     _path_slots: dict = {}

@@ -9,10 +9,16 @@ does the table analog in one scan:
   ``explode`` yields violation rows. No shuffle, no Python — the whole
   expression runs inside whole-stage codegen, and Catalyst prunes the
   scan down to exactly the checked columns.
-* **summary**: one ``groupBy(partition).agg`` of
-  ``sum(when(~ok, 1))`` per check — the per-partition pass/fail matrix.
-  Partial aggregation (map-side combine) makes this one light shuffle of
-  |partitions| × |checks| longs regardless of table size.
+* **summary**: without ``partitionBy``, an ``Observation`` on the
+  pre-explode frame counts ``n_rows`` and one fail count per check from
+  the same failing-check array, so the action that executes the
+  violations also yields the summary — no second scan, no extra job.
+  The array covers every runnable check, including those exclusions
+  prune from the explode. With ``partitionBy`` (an observation cannot
+  group), or when no complete observation exists, :func:`summary_plan`
+  builds it lazily: one ``groupBy(partition).agg`` of
+  ``sum(when(~ok, 1))`` per check, a light shuffle of |partitions| ×
+  |checks| longs regardless of table size.
 
 Never ``limit`` violations (mirror the reference's no-short-circuit
 rule, SURVEY §4); optionally cap *persisted examples* per check with a
@@ -23,7 +29,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field as dc_field
-from typing import Optional, Sequence, Union
+from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -70,6 +76,23 @@ def _jsonpath_col(table: str, row_key: Optional[Column], column: Optional[str]) 
     return F.concat(*parts)
 
 
+#: the failing-check index array column of the fused branch
+_FAILS = "__cdp_fails"
+
+
+def _with_failing_checks(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame:
+    """``df`` plus the checks' shared columns and ``__cdp_fails``: the
+    indices of the checks a row fails (``array<int>``, empty when it
+    passes). This is the fused branch's only per-row work: each ``ok``
+    predicate is evaluated once, here; the violation payload is built
+    after the explode, on violating rows only, and the observed summary
+    reads its fail counts from this same array."""
+    fails = F.array_compact(
+        F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(checks)])
+    )
+    return bind_check_lets(df, checks).withColumn(_FAILS, fails)
+
+
 def violations_plan(
     df: DataFrame,
     checks: Sequence[CompiledCheck],
@@ -88,8 +111,26 @@ def violations_plan(
     """
     if not checks:
         return df.sparkSession.createDataFrame([], schema=_empty_schema())
+    return _explode_violations(
+        _with_failing_checks(df, checks),
+        checks,
+        range(len(checks)),
+        table_name,
+        row_key,
+        partition,
+    )
 
-    df = bind_check_lets(df, checks)
+
+def _explode_violations(
+    framed: DataFrame,
+    checks: Sequence[CompiledCheck],
+    emit: Sequence[int],
+    table_name: str,
+    row_key: Optional[Union[str, list]],
+    partition: Optional[str],
+) -> DataFrame:
+    """Violation rows from a :func:`_with_failing_checks` frame of
+    ``checks``; only the indices in ``emit`` are exploded."""
     if row_key is None:
         key_col = F.monotonically_increasing_id().cast("string")
     elif isinstance(row_key, (list, tuple)):
@@ -107,8 +148,9 @@ def violations_plan(
     # row inside one giant interpreted expression (variant checks
     # disable codegen): q38 measured 14.2 s per execution vs ~2 s with
     # this emission at sf0.1.
-    elems = [F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(checks)]
-    arr = F.array_compact(F.array(*elems))
+    fails = F.col(_FAILS)
+    if len(emit) < len(checks):
+        fails = F.filter(fails, lambda i: i.isin(*emit))
 
     # Columns the post-explode payload references: derived from the
     # ``instance`` expressions THEMSELVES (one driver-side analysis of
@@ -119,18 +161,18 @@ def violations_plan(
     # columns through the Generate is free (Generate appends to the
     # input row) and keeps column pruning intact — unreferenced table
     # columns never leave the scan.
-    carry = _instance_carry_columns(df, checks)
+    carry = _instance_carry_columns(framed, [checks[i] for i in emit])
 
     # No explicit pre-filter on size(_v): explode (non-outer) already
     # drops empty arrays. Catalyst's InferFiltersFromGenerate would add
     # a size(_v) > 0 Filter that DUPLICATES the array expression on
     # every row (13× measured with interpreted variant checks) — the
     # rule is excluded session-wide (session.exclude_infer_filters).
-    exploded = df.select(
+    exploded = framed.select(
         key_col.cast("string").alias("_k"),
         part_col.alias("_p"),
         *[F.col(c) for c in carry],
-        F.explode(arr).alias("_ci"),
+        F.explode(fails).alias("_ci"),
     )
 
     idx = F.col("_ci") + 1  # element_at is 1-based
@@ -152,8 +194,8 @@ def violations_plan(
     # nesting would embed the whole previous chain per branch: O(N²)
     # expression size, measured 90 s vs ~3 s on the 29-check q07
     instance: Optional[Column] = None
-    for i, ck in enumerate(checks):
-        branch = (F.col("_ci") == i, ck.instance.cast("string"))
+    for i in emit:
+        branch = (F.col("_ci") == i, checks[i].instance.cast("string"))
         instance = F.when(*branch) if instance is None else instance.when(*branch)
     instance = instance.otherwise(F.lit(None).cast("string"))
 
@@ -422,17 +464,124 @@ def cap_examples(
 # ---------------------------------------------------------------------------
 
 
+class _ObservedSummary:
+    """The unpartitioned summary as observed metrics of the fused
+    branch: ``n_rows`` plus one fail count per check, collected by
+    whichever action first executes the violations. The counts read the
+    failing-check array, not the ``ok`` predicates, which would evaluate
+    every check a second time per row."""
+
+    def __init__(self, checks: Sequence[CompiledCheck]):
+        from pyspark.sql import Observation
+
+        self.checks = list(checks)
+        self.observation = Observation()
+
+    def attach(self, framed: DataFrame) -> DataFrame:
+        self.spark = framed.sparkSession
+        fails = F.col(_FAILS)
+        return framed.observe(
+            self.observation,
+            F.count(F.lit(1)).alias("n_rows"),
+            *[
+                F.sum(F.when(F.array_contains(fails, i), 1).otherwise(0)).alias(f"_c{i}")
+                for i in range(len(self.checks))
+            ],
+        )
+
+    def frame(self) -> Optional[DataFrame]:
+        """The summary in :func:`summary_plan`'s schema, ordered by check;
+        None until an action completed the observation with every metric.
+        A first action that ran the branch inside a broadcast exchange
+        completes it with an empty row. Classic mode only (no JVM handle
+        elsewhere)."""
+        jo = getattr(self.observation, "_jo", None)
+        if jo is None:
+            return None
+        if not jo.future().isCompleted():
+            # completion arrives on the listener bus just after the
+            # action returns; drain it (immediate when idle)
+            try:
+                self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            except Exception:
+                pass
+            if not jo.future().isCompleted():
+                return None
+        try:
+            if jo.getRow().length() != len(self.checks) + 1:
+                return None
+            got = self.observation.get
+        except Exception:  # the first action failed
+            return None
+        import pandas as pd
+
+        n_rows = got["n_rows"]
+        rows = []
+        for i, ck in enumerate(self.checks):
+            fails = got[f"_c{i}"]
+            passed = None if fails is None else fails == 0
+            rows.append((n_rows, ck.name, ck.column or "", ck.issue_type, fails, passed))
+        rows.sort(key=lambda r: r[1])
+        # built from pandas (Arrow) it is a LocalRelation: show runs no job
+        return self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=_SUMMARY_COLUMNS), schema=_SUMMARY_SCHEMA
+        )
+
+
+#: :func:`summary_plan`'s output schema without a partition column
+_SUMMARY_COLUMNS = ["n_rows", "check", "column", "type", "fail_count", "passed"]
+_SUMMARY_SCHEMA = (
+    "n_rows long not null, check string, column string, type string,"
+    " fail_count long, passed boolean"
+)
+
+
 @dataclass
 class ValidationResult:
     """Outcome of a full table validation run."""
 
     spec_issues: list  # driver-side Issues (spec-level, structural)
     violations: DataFrame  # data-plane violation rows (full schema)
-    summary: DataFrame  # per-partition pass/fail matrix
+    #: builds the :func:`summary_plan` frame (a rescan of the table)
+    _summary_plan: Callable[[], DataFrame] = dc_field(repr=False)
+    _observed: Optional[_ObservedSummary] = dc_field(default=None, repr=False)
+    _summary: Optional[DataFrame] = dc_field(default=None, repr=False)
+    _n_violations: Optional[int] = dc_field(default=None, repr=False)
+
+    @property
+    def summary(self) -> DataFrame:
+        """Pass/fail matrix: one row per (partition, check) with
+        ``n_rows``, ``fail_count`` and ``passed`` — the values and schema
+        of :func:`summary_plan`, ordered by partition, then check.
+
+        Unpartitioned, it comes from the metrics the first action on
+        :attr:`violations` observed: a small local frame, no rescan.
+        Before that action, when it completed without every metric, and
+        for specs with ``partitionBy`` (an observation cannot group) it
+        is :func:`summary_plan`, built lazily on access."""
+        if self._summary is None:
+            if self._observed is None:
+                self._summary = self._summary_plan()
+            else:
+                self._summary = self._observed.frame()
+        return self._summary if self._summary is not None else self._summary_plan()
+
+    def violation_count(self) -> int:
+        """Number of violation rows; runs one job the first time, then
+        returns the same count."""
+        if self._n_violations is None:
+            self._n_violations = self.violations.count()
+        return self._n_violations
 
     def passed(self) -> bool:
-        """True iff no spec issues and no data violations (triggers jobs)."""
-        return not self.spec_issues and self.violations.isEmpty()
+        """True iff no spec issues and no data violations. Reuses
+        :meth:`violation_count` once it ran; otherwise one ``isEmpty``
+        job."""
+        if self.spec_issues:
+            return False
+        if self._n_violations is not None:
+            return self._n_violations == 0
+        return self.violations.isEmpty()
 
 
 def check_table(
@@ -525,7 +674,25 @@ def check_table(
     # plan pruning: checks whose every violation a type/whole-column
     # exclusion would drop are never computed (U4 pushdown)
     emitted = prune_excluded_checks(runnable, config.exclusions, spec.name)
-    v = violations_plan(df, emitted, spec.name, row_key=row_key, partition=partition)
+    observed = None
+    if emitted and partition is None and not df.isStreaming:
+        # one failing-check array over ALL runnable checks: the observed
+        # summary counts every check, the explode emits only the
+        # unpruned ones
+        keep = {id(ck) for ck in emitted}
+        observed = _ObservedSummary(runnable)
+        v = _explode_violations(
+            observed.attach(_with_failing_checks(df, runnable)),
+            runnable,
+            [i for i, ck in enumerate(runnable) if id(ck) in keep],
+            spec.name,
+            row_key,
+            None,
+        )
+    else:
+        v = violations_plan(
+            df, emitted, spec.name, row_key=row_key, partition=partition
+        )
     parts = [v]
 
     # Gate (R1, ref check.py:330-337): skip data-level key checks whose
@@ -596,12 +763,13 @@ def check_table(
         all_v = cap_examples(all_v, config.max_examples_per_check)
     all_v = finalize_violations(all_v)
 
-    summ = summary_plan(df, runnable, partition=partition)
-
     from ..issue import finalize_issues
 
     return ValidationResult(
         spec_issues=finalize_issues(spec_issues),
         violations=all_v,
-        summary=summ,
+        _summary_plan=lambda: summary_plan(df, runnable, partition=partition).orderBy(
+            *(["partition"] if partition else []), "check"
+        ),
+        _observed=observed,
     )

@@ -212,3 +212,119 @@ def test_cli_package_mode(tmp_path):
     assert p.returncode == 0, p.stdout + p.stderr
     assert "All checks passed!" in p.stdout
     assert "== region" in p.stdout and "== nation" in p.stdout
+
+
+# ---------------------------------------------------------------------------
+# In-process runs: main() on the suite's own session
+# ---------------------------------------------------------------------------
+
+
+def _orders_spec(tmp_path):
+    spec = {
+        "resources": [
+            {
+                "name": "orders",
+                "path": "orders.parquet",
+                "schema": {
+                    "fields": [
+                        {"name": "o_orderkey", "type": "integer", "constraints": {"required": True}},
+                        {"name": "o_orderstatus", "type": "string", "constraints": {"enum": ["F", "O"]}},
+                    ],
+                    "primaryKey": "o_orderkey",
+                },
+            }
+        ]
+    }
+    path = tmp_path / "datapackage.json"
+    path.write_text(json.dumps(spec))
+    return str(path)
+
+
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _in_process(spark, tmp_path, *args):
+    """Run main() in-process; assert it leaves no persisted RDD behind."""
+    from check_datapackage_spark.cli import main
+
+    before = _persisted_ids(spark)
+    rc = main([*args, "--config", str(tmp_path / "none.toml")])
+    assert _persisted_ids(spark) == before
+    return rc
+
+
+def test_cli_in_process_sink_equals_violations(spark, sf_dir, tmp_path):
+    """The sink holds exactly check_table's violations, from the one
+    execution that also feeds the count, the sample and the summary."""
+    from check_datapackage_spark import check_table
+    from check_datapackage_spark.issue import VIOLATION_COLUMNS
+    from check_datapackage_spark.sources.registry import load_table, read_spec
+
+    spec_path = _orders_spec(tmp_path)
+    audit = str(tmp_path / "violations")
+    data = sf_dir
+    rc = _in_process(
+        spark, tmp_path,
+        "--data", data, "--table", "orders", "--spec", spec_path,
+        "--audit", audit, "--error",
+    )
+    assert rc == 1  # 'P' status rows violate the enum
+
+    rows = lambda df: sorted(map(tuple, df.select(VIOLATION_COLUMNS).collect()), key=str)
+    want = check_table(
+        load_table(spark, data, "orders"), read_spec(spec_path, resource="orders")
+    ).violations
+    assert rows(spark.read.parquet(audit)) == rows(want)
+    assert rows(want)
+
+    # without --error the same findings exit 0; excluded, the run passes
+    args = ("--data", data, "--table", "orders", "--spec", spec_path)
+    assert _in_process(spark, tmp_path, *args) == 0
+    assert _in_process(spark, tmp_path, *args, "--exclude-type", "enum", "--error") == 0
+
+
+def test_cli_in_process_package_mode(spark, sf_dir, tmp_path):
+    spec = {
+        "resources": [
+            {"name": "region", "path": "region.parquet",
+             "schema": {"fields": [{"name": "r_regionkey", "type": "integer",
+                                    "constraints": {"maximum": 3}}],
+                        "primaryKey": "r_regionkey"}},
+            {"name": "nation", "path": "nation.parquet",
+             "schema": {"fields": [{"name": "n_nationkey", "type": "integer"},
+                                   {"name": "n_regionkey", "type": "integer"}],
+                        "primaryKey": "n_nationkey",
+                        "foreignKeys": [{"fields": "n_regionkey",
+                                         "reference": {"resource": "region",
+                                                       "fields": "r_regionkey"}}]}},
+        ]
+    }
+    spec_path = tmp_path / "datapackage.json"
+    spec_path.write_text(json.dumps(spec))
+    audit = str(tmp_path / "violations")
+    rc = _in_process(
+        spark, tmp_path,
+        "--data", sf_dir, "--spec", str(spec_path),
+        "--audit", audit, "--error",
+    )
+    assert rc == 1  # region key 4 exceeds the maximum
+    sink = spark.read.parquet(audit).collect()
+    assert [(r["resource"], r["type"]) for r in sink] == [("region", "maximum")]
+
+
+def test_cli_keeps_host_session_settings(spark, sf_dir, tmp_path):
+    """--cores shapes only a session the CLI creates: a host's session
+    keeps its shuffle partitions."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        _in_process(
+            spark, tmp_path,
+            "--data", sf_dir, "--table", "orders",
+            "--spec", _orders_spec(tmp_path), "--cores", "3",
+        )
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, old)

@@ -928,3 +928,38 @@ def test_json_schema_dependencies(spark):
     assert ("2", "allOf") in got
     assert ("4", "allOf") in got
     assert not any(rk in ("1", "3") for rk, _ in got)
+
+
+def test_json_schema_slots_distinct_across_specs(spark):
+    """Two specs constraining one field name with different jsonSchemas
+    get distinct shared-subexpression slots: fused into one plan, each
+    check still reads its own property. With slots scoped by the field
+    name alone, the second spec's ``$.q`` slot overwrote the first's
+    ``$.lang`` slot and row 1's bad ``lang`` went unreported."""
+    from check_datapackage_spark.plans.validation import violations_plan
+
+    df = spark.createDataFrame(
+        [(1, '{"lang": 5, "q": "x"}'), (2, '{"lang": "en", "q": 1}')],
+        "id int, meta string",
+    )
+
+    def checks(js):
+        spec = TableSpec.from_dict(
+            {"name": "t", "schema": {"primaryKey": ["id"], "fields": [
+                {"name": "meta", "type": "string",
+                 "constraints": {"jsonSchema": js}}]}}
+        )
+        return compile_table_checks(spec, schema=df.schema)
+
+    a = checks({"type": "object", "properties": {"lang": {"type": "string"}}})
+    b = checks({"type": "object", "properties": {"q": {"type": "number"}}})
+    slots = lambda cks: {n for ck in cks for layer in ck.lets for n in layer}
+    assert not slots(a) & slots(b)
+
+    def got(cks):
+        rows = violations_plan(df, cks, "t", row_key="id").collect()
+        return {(r["row_key"], r["check"]) for r in rows}
+
+    assert got(a) == {("1", "meta.jsonSchema.properties.lang.type")}
+    assert got(b) == {("1", "meta.jsonSchema.properties.q.type")}
+    assert got(a + b) == got(a) | got(b)

@@ -198,3 +198,109 @@ def test_exclusion_prunes_check_from_plan(spark, bad):
     res = run_check(spark, df, config=cfg)
     assert res.violations.where(F.col("type") == "pattern").count() == 0
     assert res.violations.where(F.col("type") == "required").count() == 2
+
+
+# ---------------------------------------------------------------------------
+# Observed summary: without partitionBy, the summary is read from metrics
+# observed while the violations execute, and must equal summary_plan.
+# ---------------------------------------------------------------------------
+
+
+def _flat_spec():
+    import dataclasses
+
+    return dataclasses.replace(sequences_spec(), partition_by=())
+
+
+def _flat_check(spark, df, config=None):
+    return check_table(
+        df,
+        _flat_spec(),
+        config=config,
+        dims={"allowed_sources": allowed_sources_df(spark)},
+        extra_checks=token_invariant_checks(),
+    )
+
+
+def _plan_summary(df):
+    from check_datapackage_spark import compile_table_checks, summary_plan
+
+    checks = compile_table_checks(
+        _flat_spec(), extra=token_invariant_checks(), schema=df.schema
+    )
+    return summary_plan(df, checks)
+
+
+def _assert_observed_equals_plan(res, df):
+    assert res._observed.frame() is not None  # the observed path was taken
+    got, ref = res.summary, _plan_summary(df)
+    assert got.schema == ref.schema
+    by_check = lambda rows: sorted(rows, key=lambda r: r["check"])
+    assert by_check(got.collect()) == by_check(ref.collect())
+
+
+def test_observed_summary_equals_plan(spark, bad):
+    df = bad[0].drop("_row")
+    res = _flat_check(spark, df)
+    assert res.violations.count() == 14
+    _assert_observed_equals_plan(res, df)
+    failing = {r["check"] for r in res.summary.collect() if not r["passed"]}
+    assert {"doc_id.pattern", "tokens.size_eq_n_tok"} <= failing
+
+
+def test_observed_summary_zero_violations(spark, valid_df):
+    df = valid_df.drop("_row")
+    res = _flat_check(spark, df)
+    assert res.violations.count() == 0
+    _assert_observed_equals_plan(res, df)
+    assert all(r["passed"] for r in res.summary.collect())
+
+
+def test_observed_summary_keeps_pruned_check(spark, bad):
+    """An exclusion that prunes a check from the explode still reports
+    it in the summary, with its fail count."""
+    df = bad[0].drop("_row")
+    cfg = CheckConfig(exclusions=(Exclusion(type="pattern"),))
+    res = _flat_check(spark, df, config=cfg)
+    types = {r["type"] for r in res.violations.collect()}
+    assert "pattern" not in types and "required" in types
+    _assert_observed_equals_plan(res, df)
+    row = [r for r in res.summary.collect() if r["check"] == "doc_id.pattern"]
+    assert [r["fail_count"] for r in row] == [1]
+
+
+def test_observed_summary_after_is_empty(spark, bad):
+    """A short-circuiting first action still observes every row: the
+    dedup exchange runs the whole fused branch before any row is taken."""
+    df = bad[0].drop("_row")
+    res = _flat_check(spark, df)
+    assert not res.violations.isEmpty()
+    _assert_observed_equals_plan(res, df)
+
+
+def test_summary_after_unit_summary_first_action(spark, bad):
+    """When the violations first execute inside the resume ledger's
+    unit_summary join, the summary still has summary_plan's values."""
+    from check_datapackage_spark.operators.audit import unit_summary, with_bucket
+
+    df = bad[0].drop("_row")
+    res = _flat_check(spark, df)
+    unit_summary(with_bucket(df, "doc_id", 4), res.violations).collect()
+    by_check = lambda rows: sorted(rows, key=lambda r: r["check"])
+    assert by_check(res.summary.collect()) == by_check(_plan_summary(df).collect())
+
+
+def test_summary_before_any_action_is_plan(spark, bad):
+    """Read before the violations ever execute, the summary is
+    summary_plan's rescan; no observation is waited for."""
+    df = bad[0].drop("_row")
+    res = _flat_check(spark, df)
+    by_check = lambda rows: sorted(rows, key=lambda r: r["check"])
+    assert by_check(res.summary.collect()) == by_check(_plan_summary(df).collect())
+
+
+def test_passed_reuses_violation_count(spark, valid_df):
+    res = _flat_check(spark, valid_df.drop("_row"))
+    assert res.violation_count() == 0
+    res.violations = None  # passed() must not touch the plan again
+    assert res.passed()
