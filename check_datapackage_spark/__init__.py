@@ -48,6 +48,7 @@ from .compile import (
 )
 from .plans.validation import (
     ValidationResult,
+    bind_check_lets,
     check_table,
     exclusion_filter,
     summary_plan,
@@ -85,6 +86,7 @@ __all__ = [
     "VIOLATION_SCHEMA",
     "PackageResult",
     "ValidationResult",
+    "bind_check_lets",
     "check_package",
     "check_table",
     "compile_all_of",

@@ -31,6 +31,13 @@ class CompiledCheck:
     ``ok`` is a boolean Column (true ⇒ pass). ``instance`` is the value
     to surface in the violation row (stringified).
 
+    ``ok`` may read shared slot columns declared in ``lets`` (every
+    jsonSchema check does): they exist only on
+    ``bind_check_lets(df, checks)``, so evaluate ``ok`` there —
+    ``bind_check_lets(df, checks).filter(~ck.ok)``, not
+    ``df.filter(~ck.ok)``. ``check_table`` and the plan builders bind
+    them themselves.
+
     ``instance`` may reference ANY columns of the checked DataFrame
     (not just ``column``): the violations plan derives the columns it
     must carry through its explode from the instance expressions
@@ -364,6 +371,13 @@ _JS_SUPPORTED = frozenset(
      "propertyNames", "patternProperties", "dependencies", "format",
      "anyOf", "oneOf", "allOf", "not", "if", "then", "else"}
 )
+#: keywords that apply to arrays only (their checks read the value as
+#: ``array<variant>``) and to objects only (they read its keys).
+_JS_ARRAY_KEYWORDS = ("minItems", "maxItems", "uniqueItems", "items",
+                      "additionalItems", "contains")
+_JS_OBJECT_KEYWORDS = ("required", "properties", "minProperties",
+                       "maxProperties", "additionalProperties",
+                       "propertyNames", "patternProperties", "dependencies")
 
 
 def _json_pointer(root, ptr: str):
@@ -580,16 +594,17 @@ def _schema_pred(
     schema: dict, base: Column, path: str, slots: Optional[dict] = None
 ) -> Column:
     """Satisfaction predicate for a Draft-7 sub-schema over the variant
-    value at ``path`` within variant ``base`` — the recursive core that
-    lets ``anyOf``/``oneOf``/``allOf``/``not`` compose anywhere inside a
-    ``jsonSchema`` constraint (reference: arbitrary Draft-7 via
-    ``jsonschema``, ref check.py:559-561).
+    value at ``path`` within variant ``base`` — the recursive core
+    every ``jsonSchema`` keyword check compiles through, at the root,
+    on a property and inside ``anyOf``/``oneOf``/``allOf``/``not``
+    (reference: arbitrary Draft-7 via ``jsonschema``, ref
+    check.py:559-561).
 
     The value is assumed PRESENT (callers guard absence per Draft-7
     applicability); nested properties guard their own absence. Each
-    keyword predicate is applicability-guarded the same way the
-    top-level compile is (e.g. ``pattern`` is vacuous on non-strings).
-    Beyond the top-level compile's vocabulary it adds ``const``,
+    keyword predicate is applicability-guarded (e.g. ``pattern`` is
+    vacuous on non-strings). Besides the scalar, length and array
+    keywords it covers ``const``,
     ``multipleOf``, ``contains``, ``minProperties``/``maxProperties``,
     ``additionalProperties`` (boolean AND schema forms — the schema
     form walks the object as ``map<string, variant>`` entries, the
@@ -607,8 +622,8 @@ def _schema_pred(
     for key in schema:
         if key not in _JS_SUPPORTED and key not in _JS_ANNOTATIONS:
             raise ValueError(
-                f"jsonSchema keyword {key!r} is not supported inside "
-                f"combinator sub-schemas (supported: {sorted(_JS_SUPPORTED)})"
+                f"jsonSchema keyword {key!r} is not supported "
+                f"(supported: {sorted(_JS_SUPPORTED)})"
             )
     if not (set(schema) & _JS_SUPPORTED):
         return F.lit(True)  # annotations only: vacuously true, no extraction
@@ -672,17 +687,8 @@ def _let_chain_pred(
             for k in ("pattern", "format", "minLength", "maxLength")
         )
     )
-    arr_kw = any(
-        k in schema
-        for k in ("minItems", "maxItems", "uniqueItems", "items",
-                  "additionalItems", "contains")
-    )
-    obj_kw = any(
-        k in schema
-        for k in ("required", "properties", "minProperties",
-                  "maxProperties", "additionalProperties",
-                  "propertyNames", "patternProperties", "dependencies")
-    )
+    arr_kw = any(k in schema for k in _JS_ARRAY_KEYWORDS)
+    obj_kw = any(k in schema for k in _JS_OBJECT_KEYWORDS)
     need_entries = isinstance(
         schema.get("additionalProperties"), dict
     ) or bool(schema.get("patternProperties"))
@@ -787,8 +793,8 @@ def _schema_pred_body(
         for e in members:
             if e is not None and not isinstance(e, (bool, int, float, str)):
                 raise ValueError(
-                    "non-scalar enum/const members are not supported "
-                    f"inside combinator sub-schemas: {e!r}"
+                    "jsonSchema enum/const members must be scalars "
+                    f"(string, number, boolean or null), got {e!r}"
                 )
         preds.append(_enum_member_pred(members, tag, dbl, sstr))
     if "pattern" in schema:
@@ -817,12 +823,7 @@ def _schema_pred_body(
             (tag != "string") | (F.length(sstr) <= F.lit(int(schema["maxLength"])))
         )
 
-    arr_kw = any(
-        k in schema
-        for k in ("minItems", "maxItems", "uniqueItems", "items",
-                  "additionalItems", "contains")
-    )
-    if arr_kw:
+    if any(k in schema for k in _JS_ARRAY_KEYWORDS):
         not_array = tag != "array"
         if "minItems" in schema:
             preds.append(not_array | (F.size(arr_v) >= F.lit(int(schema["minItems"]))))
@@ -882,13 +883,7 @@ def _schema_pred_body(
 
     # object keywords: key presence via json_object_keys of the value's
     # JSON text (variant→string cast); non-objects are vacuous.
-    obj_kw = any(
-        k in schema
-        for k in ("required", "properties", "minProperties",
-                  "maxProperties", "additionalProperties",
-                  "propertyNames", "patternProperties", "dependencies")
-    )
-    if obj_kw:
+    if any(k in schema for k in _JS_OBJECT_KEYWORDS):
         for prop in schema.get("required", []):
             preds.append(keys.isNull() | F.array_contains(keys, F.lit(prop)))
         for prop, ps in (schema.get("properties") or {}).items():
@@ -1049,49 +1044,169 @@ def _schema_pred_body(
     return out
 
 
+#: One check per jsonSchema keyword present on a node, in emission
+#: order: check kind → (property message, root message). ``{p}`` is the
+#: property's dotted path and ``{v}`` the value the message quotes (see
+#: :func:`_keyword_mini`); root messages quote no bound. The issue type
+#: is the kind's last dotted part (``items.type`` → ``type``).
+_JS_KEYWORD_CHECKS = {
+    "type": ("{p} is not of type '{v}'", "value is not of type '{v}'"),
+    "enum": ("{p} is not one of the allowed values",
+             "value is not one of the allowed values"),
+    "pattern": ("{p} does not match '{v}'",
+                "value does not match the declared pattern"),
+    "minimum": ("{p} is less than the minimum of {v}",
+                "value is less than the minimum"),
+    "maximum": ("{p} is greater than the maximum of {v}",
+                "value is greater than the maximum"),
+    "exclusiveMinimum": ("{p} is not greater than the exclusive minimum of {v}",
+                         "value is not greater than the exclusive minimum"),
+    "exclusiveMaximum": ("{p} is not less than the exclusive maximum of {v}",
+                         "value is not less than the exclusive maximum"),
+    "minLength": ("{p} is shorter than {v} characters",
+                  "value is shorter than the minimum length"),
+    "maxLength": ("{p} is longer than {v} characters",
+                  "value is longer than the maximum length"),
+    "minItems": ("{p} has fewer than {v} items",
+                 "value has fewer than the minimum items"),
+    "maxItems": ("{p} has more than {v} items",
+                 "value has more than the maximum items"),
+    "uniqueItems": ("{p} items are not unique", "array items are not unique"),
+    "items.type": ("{p} items are not of type '{v}'", None),
+    "items": ("{p} items do not match the declared {v} schema",
+              "array items do not match the declared {v} schema"),
+    "anyOf": ("{p} does not match any of the allowed schemas",
+              "value does not match any of the allowed schemas"),
+    "oneOf": ("{p} does not match exactly one of the allowed schemas",
+              "value does not match exactly one of the allowed schemas"),
+    "allOf": ("{p} does not match all of the required schemas",
+              "value does not match all of the required schemas"),
+    "not": ("{p} matches the disallowed schema",
+            "value matches the disallowed schema"),
+    "const": ("{p} is not the const value", "value is not the const value"),
+    "multipleOf": ("{p} is not a multiple of the declared divisor",
+                   "value is not a multiple of the declared divisor"),
+    "contains": ("{p} has no item matching the contains schema",
+                 "value has no item matching the contains schema"),
+    "minProperties": ("{p} has fewer properties than the minimum",
+                      "value has fewer properties than the minimum"),
+    "maxProperties": ("{p} has more properties than the maximum",
+                      "value has more properties than the maximum"),
+    "additionalProperties": ("{p} has properties outside the declared set",
+                             "value has properties outside the declared set"),
+    "propertyNames": ("{p} has property names violating the schema",
+                      "value has property names violating the schema"),
+    "patternProperties": ("{p} has a property violating its pattern schema",
+                          "value has a property violating its pattern schema"),
+    "format": ("{p} does not conform to the declared format",
+               "value does not conform to the declared format"),
+    "dependencies": ("{p} violates a property dependency",
+                     "value violates a property dependency"),
+    "if": ("{p} violates the conditional schema",
+           "value violates the conditional schema"),
+}
+
+
+def _keyword_mini(kind: str, node: dict, at_root: bool, actual_type):
+    """``(mini-schema, quoted value)`` for the ``kind`` check of one
+    jsonSchema node, or ``None`` when the node emits no such check.
+
+    The mini-schema is what the check compiles through
+    :func:`_schema_pred`: the keyword alone, plus the siblings its
+    Draft-7 meaning depends on (``additionalItems`` for tuple
+    ``items``, ``then``/``else`` for ``if``, the declared names for
+    ``additionalProperties``). Keywords whose value makes them a no-op
+    emit nothing. Two splits differ by scope: a property checks
+    ``items.type`` on its own, and the root leaves ``items.required``
+    to the struct path of :func:`compile_json_schema_checks`."""
+    if kind == "items.type":
+        items = node.get("items")
+        t = None if at_root or not isinstance(items, dict) else items.get("type")
+        return ({"items": {"type": t}}, _shown_type(t)) if t else None
+    if kind not in node:
+        return None
+    v = node[kind]
+    if kind in ("type", "pattern", "uniqueItems", "anyOf", "oneOf", "allOf"):
+        if not v:
+            return None
+        return {kind: v}, _shown_type(v) if kind == "type" else v
+    if kind in ("minLength", "maxLength", "minItems", "maxItems"):
+        return {kind: v}, int(v)
+    if kind == "items":
+        if isinstance(v, (list, tuple)):
+            mini = {"items": list(v)}
+            if "additionalItems" in node:
+                mini["additionalItems"] = node["additionalItems"]
+            return mini, "tuple"
+        if not isinstance(v, dict) or (at_root and actual_type == "array"):
+            return None  # an array column has no JSON text to parse
+        split = "required" if at_root else "type"
+        rest = {k: s for k, s in v.items() if k != split}
+        return ({"items": rest}, "item") if rest else None
+    if kind == "additionalProperties":
+        if v is True:
+            return None  # the Draft-7 default
+        # coverage needs the declared NAMES only: empty sub-schemas
+        mini = {kind: v, "properties": {p: {} for p in node.get("properties") or {}}}
+        if node.get("patternProperties"):
+            mini["patternProperties"] = {p: {} for p in node["patternProperties"]}
+        return mini, None
+    if kind == "format" and _js_format_pred(F.lit("probe"), v) is None:
+        return None  # unregistered/interpreter-bound: ignored
+    if kind == "if":
+        if not (isinstance(node.get("then"), dict) or isinstance(node.get("else"), dict)):
+            return None
+        return {k: node[k] for k in ("if", "then", "else") if k in node}, None
+    if kind == "enum" and v is None:
+        return None
+    return {kind: v}, v
+
+
+def _shown_type(t):
+    """A declared ``type`` as messages quote it (lists joined by ``/``)."""
+    return "/".join(t) if isinstance(t, list) else t
+
+
 def compile_json_schema_checks(
     field: FieldSpec, actual_type: Optional[str] = None
 ) -> list[CompiledCheck]:
-    """Compile ``constraints.jsonSchema`` — a TYPED Draft-7 subset over
-    a JSON-string column.
+    """Compile ``constraints.jsonSchema`` — Draft-7 over a JSON-string
+    column.
 
-    Vocabulary: top-level ``type`` (object/array); ``required`` as KEY
-    PRESENCE via ``json_object_keys`` (Draft-7: ``{"k": null}``
-    satisfies required; non-objects and invalid JSON are no-ops for
-    ``required`` — the top-level type check owns that failure);
-    per-property ``type`` — string / number / integer / boolean /
-    object / array / null, or a list of those — decided on the VARIANT
-    type tag (``try_parse_json`` + ``try_variant_get`` +
-    ``schema_of_variant``), so ``{"k":"1"}`` fails an integer check
-    while ``{"k":1}`` and ``{"k":2.0}`` pass; ``enum`` (scalar members,
-    type-aware); ``pattern`` (applies to strings only, per Draft-7);
-    ``minimum``/``maximum``/``exclusiveMinimum``/``exclusiveMaximum``
-    (numbers only); ``minLength``/``maxLength`` (strings only);
-    ``minItems``/``maxItems``/``items.type`` (arrays only, elements
-    type-checked per item via array<variant> + ``forall``);
-    ``uniqueItems`` (variant elements canonicalized as
-    type-tag + JSON text, see :func:`_unique_items_pred` — closed the
-    round-3 documented gap); NESTED ``properties`` / ``required`` of
-    object-typed properties at any depth; ``items.required`` for arrays
-    of objects (the strict-mode contributors/sources item-``title``
-    rule, ref check.py:533-534); and Draft-7 COMBINATORS —
-    ``anyOf``/``oneOf``/``allOf``/``not`` of sub-schemas, at the root
-    or on any property, composed recursively by :func:`_schema_pred`
-    into one fused predicate per combinator (the other round-3 gap;
-    reference accepts arbitrary Draft-7 there via ``jsonschema``, ref
-    check.py:559-561). Local ``$ref``/``definitions``/``$defs`` are
-    expanded at compile time by :func:`resolve_refs` (recursive refs
-    raise); ``patternProperties``, schema-valued
-    ``additionalProperties``, tuple-form ``items``/``additionalItems``
-    and ``format`` (FormatChecker parity) compile through
-    :func:`_schema_pred`. Keywords it does not implement are rejected
-    at compile time rather than silently ignored.
+    Vocabulary: every validation keyword :func:`_schema_pred`
+    implements (``_JS_SUPPORTED``), at the root and on any property.
+    Each keyword present on a node compiles to ONE check whose ``ok``
+    is that keyword alone (with the siblings its meaning depends on,
+    see :func:`_keyword_mini`) through :func:`_schema_pred`, the
+    recursive core the parity suite tests cell by cell against
+    ``jsonschema.Draft7Validator`` — so a keyword validates the same
+    at the root, on a property and inside a combinator, and whatever
+    the core refuses (an unsupported keyword, non-scalar ``enum``/
+    ``const`` members) raises here too instead of validating wrongly.
+    Names, issue types and messages come from ``_JS_KEYWORD_CHECKS``.
+    Three checks stay outside the core: the root ``type: object|array``
+    check (``value is not a JSON object``: the text must parse AND
+    start with ``{``/``[``), ``required`` per node as KEY PRESENCE via
+    ``json_object_keys`` (Draft-7: ``{"k": null}`` satisfies required;
+    non-objects and invalid JSON are no-ops, the type check owns that
+    failure), walked through nested ``properties`` at any depth, and
+    the root ``items.required`` for arrays of objects (the strict-mode
+    contributors/sources item-``title`` rule, ref check.py:533-534),
+    which also runs on a native array column. Local ``$ref``/
+    ``definitions``/``$defs`` are expanded first by
+    :func:`resolve_refs` (recursive refs raise).
 
-    Every per-property keyword is a no-op when the property is absent
-    or the parent is not an object (Draft-7 applicability). All
+    Every keyword check is a no-op when the column is NULL, the value
+    is absent or invalid JSON, or (Draft-7 applicability, inside the
+    core) the value is not of the kind the keyword applies to. All
     predicates are built-in JVM expressions — no UDFs — so the checks
     fuse into the single-scan violations plan like every other
     constraint.
+
+    ``ok`` reads shared slot columns (the parse and the per-path
+    extractions, listed in ``CompiledCheck.lets``) that exist only once
+    :func:`~check_datapackage_spark.plans.validation.bind_check_lets`
+    has added them: filter ``bind_check_lets(df, checks)``, not ``df``.
 
     Reference semantics: jsonschema.Draft7Validator over the constraint
     sub-schemas in data-package-2-0.json (SURVEY §1.4).
@@ -1179,22 +1294,24 @@ def compile_json_schema_checks(
             _key_slots[json_path] = name
         return name
 
-    def _slot_cols(path: str) -> dict:
+    def _slot_cols(path: str, mini: dict) -> dict:
         """Materialized slot columns for a path, in the form
         :func:`_schema_pred` accepts as ``slots`` — same-path schema
-        nodes then reference projection columns instead of binding."""
+        nodes then reference projection columns instead of binding.
+        The array<variant> slot joins only when ``mini`` has array
+        keywords, so no other check references it."""
         sub_n, tag_n, dbl_n, str_n = _slot(path)
-        return {
+        slots = {
             "sub": F.col(sub_n),
             "tag": F.col(tag_n),
             "dbl": F.col(dbl_n),
             "sstr": F.col(str_n),
         }
+        if any(k in mini for k in _JS_ARRAY_KEYWORDS):
+            slots["arr_v"] = F.col(_arr_slot(path))
+        return slots
 
-    def add(kind: str, issue_type: str, message: str, ok) -> None:
-        # ``ok`` may be a 1-arg builder over the shared parse column
-        if callable(ok):
-            ok = ok(_v())
+    def add(kind: str, issue_type: str, message: str, ok: Column) -> None:
         checks.append(
             CompiledCheck(
                 name=f"{field.name}.jsonSchema.{kind}",
@@ -1207,45 +1324,42 @@ def compile_json_schema_checks(
             )
         )
 
+    def keyword_checks(node: dict, path: str, kprefix: str, dotted) -> None:
+        """One check per keyword of ``node`` at ``path``, each through
+        the core over the path's slots; ``dotted`` is None at the root.
+        Absent values and NULL/invalid JSON pass (``required`` and the
+        type check own those failures)."""
+        for kind, (prop_msg, root_msg) in _JS_KEYWORD_CHECKS.items():
+            found = _keyword_mini(kind, node, dotted is None, actual_type)
+            if found is None:
+                continue
+            mini, shown = found
+            if dotted is None:
+                message = root_msg.format(v=shown)
+            else:
+                message = prop_msg.format(p=dotted, v=shown)
+            slots = _slot_cols(path, mini)
+            pred = _schema_pred(mini, _v(), path, slots)
+            add(
+                kprefix + kind,
+                kind.rsplit(".", 1)[-1],
+                message,
+                col.isNull()
+                | slots["sub"].isNull()
+                | F.coalesce(pred, F.lit(False)),
+            )
+
     top_type = js.get("type")
-    if top_type == "object":
+    if top_type in ("object", "array"):
+        opener = r"^\s*\{" if top_type == "object" else r"^\s*\["
         add(
             "type",
             "type",
-            "value is not a JSON object",
-            col.isNull() | (_v().isNotNull() & col.rlike(r"^\s*\{")),
-        )
-    elif top_type == "array":
-        add(
-            "type",
-            "type",
-            "value is not a JSON array",
-            col.isNull() | (_v().isNotNull() & col.rlike(r"^\s*\[")),
+            f"value is not a JSON {top_type}",
+            col.isNull() | (_v().isNotNull() & col.rlike(opener)),
         )
     elif top_type:
-        # scalar root type (string/integer/number/boolean/null) or a
-        # type LIST — decided on the variant tag via the recursive core
-        shown = top_type if isinstance(top_type, str) else "/".join(top_type)
-
-        def root_type_ok(_t):
-            def ok_of(vv):
-                return (
-                    col.isNull()
-                    | vv.isNull()
-                    | F.coalesce(
-                        _schema_pred({"type": _t}, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                )
-
-            return ok_of
-
-        add(
-            "type",
-            "type",
-            f"value is not of type '{shown}'",
-            root_type_ok(top_type),
-        )
+        keyword_checks({"type": top_type}, "$", "", None)
 
     def walk(node: dict, json_path: str, kind_prefix: str, dotted_prefix: str) -> None:
         # key presence for required: json_object_keys of this node's
@@ -1272,590 +1386,12 @@ def compile_json_schema_checks(
             path = f"{json_path}.{prop}"
             dotted = f"{dotted_prefix}{prop}"
             kprefix = f"{kind_prefix}properties.{prop}."
-
-            def P(build, _path=path):
-                # per-check builder over the SHARED per-path slots:
-                # sub/tag/dbl/sstr are materialized once per row for
-                # the whole field (not per check — interpreted variant
-                # exprs have no codegen CSE), so every reference the
-                # builder makes is a column read
-                def ok_of(vv):
-                    sub_n, tag_n, dbl_n, str_n = _slot(_path)
-                    return build(
-                        col.isNull() | F.col(sub_n).isNull(),  # absent
-                        F.col(tag_n),
-                        F.col(dbl_n),
-                        F.col(str_n),
-                        vv,
-                    )
-
-                return ok_of
-
-            declared = sub_schema.get("type")
-            if declared:
-                shown = declared if isinstance(declared, str) else "/".join(declared)
-                add(
-                    f"{kprefix}type",
-                    "type",
-                    f"{dotted} is not of type '{shown}'",
-                    P(lambda absent, tag, dbl, sstr, vv, d=declared: (
-                        absent | _json_type_pred(tag, dbl, d)
-                    )),
-                )
-            enum = sub_schema.get("enum")
-            if enum is not None:
-
-                def enum_ok(absent, tag, dbl, sstr, vv, _enum=tuple(enum)):
-                    member = F.lit(False)
-                    for e in _enum:
-                        if e is None:
-                            member = member | (tag == "null")
-                        elif isinstance(e, bool):  # before int: bool ⊂ int
-                            member = member | (
-                                (tag == "boolean")
-                                & (sstr == ("true" if e else "false"))
-                            )
-                        elif isinstance(e, (int, float)):
-                            member = member | (
-                                tag.isin("integer", "number")
-                                & (dbl == F.lit(float(e)))
-                            )
-                        elif isinstance(e, str):
-                            member = member | ((tag == "string") & (sstr == e))
-                    return absent | member
-
-                add(
-                    f"{kprefix}enum",
-                    "enum",
-                    f"{dotted} is not one of the allowed values",
-                    P(enum_ok),
-                )
-            pattern = sub_schema.get("pattern")
-            if pattern:
-                add(
-                    f"{kprefix}pattern",
-                    "pattern",
-                    f"{dotted} does not match '{pattern}'",
-                    P(lambda absent, tag, dbl, sstr, vv, p=pattern: (
-                        absent | (tag != "string") | sstr.rlike(p)
-                    )),
-                )
-            for kw, op, phrase in (
-                ("minimum", "__ge__", "is less than the minimum of"),
-                ("maximum", "__le__", "is greater than the maximum of"),
-                ("exclusiveMinimum", "__gt__",
-                 "is not greater than the exclusive minimum of"),
-                ("exclusiveMaximum", "__lt__",
-                 "is not less than the exclusive maximum of"),
-            ):
-                if kw not in sub_schema:
-                    continue
-                m = sub_schema[kw]
-                add(
-                    f"{kprefix}{kw}",
-                    kw,
-                    f"{dotted} {phrase} {m}",
-                    P(lambda absent, tag, dbl, sstr, vv, _op=op, _m=float(m): (
-                        absent
-                        | ~tag.isin("integer", "number")
-                        | getattr(dbl, _op)(F.lit(_m))
-                    )),
-                )
-            for kw, op, phrase in (
-                ("minLength", "__ge__", "is shorter than"),
-                ("maxLength", "__le__", "is longer than"),
-            ):
-                if kw not in sub_schema:
-                    continue
-                m = int(sub_schema[kw])
-                add(
-                    f"{kprefix}{kw}",
-                    kw,
-                    f"{dotted} {phrase} {m} characters",
-                    P(lambda absent, tag, dbl, sstr, vv, _op=op, _m=m: (
-                        absent
-                        | (tag != "string")
-                        | getattr(F.length(sstr), _op)(F.lit(_m))
-                    )),
-                )
-            # array keywords: variant→array<variant> cast gives the
-            # elements; Draft-7 applicability makes every keyword a
-            # no-op on non-arrays.
-            arr_kw = (
-                any(k in sub_schema for k in ("minItems", "maxItems"))
-                or sub_schema.get("uniqueItems")
-                or isinstance(sub_schema.get("items"), dict)
-            )
-            if arr_kw:
-
-                def A(build, _path=path):
-                    # array-keyword builder over the SHARED per-path
-                    # slots: absent gate, not-array gate and the
-                    # array<variant> cast all read materialized columns
-                    def ok_of(vv):
-                        sub_n, tag_n, _dbl_n, _str_n = _slot(_path)
-                        return build(
-                            col.isNull() | F.col(sub_n).isNull(),
-                            F.col(tag_n) != "array",
-                            F.col(_arr_slot(_path)),
-                        )
-
-                    return ok_of
-
-                if "minItems" in sub_schema:
-                    m = int(sub_schema["minItems"])
-                    add(
-                        f"{kprefix}minItems",
-                        "minItems",
-                        f"{dotted} has fewer than {m} items",
-                        A(lambda absent, not_array, arr_v, _m=m: (
-                            absent | not_array | (F.size(arr_v) >= F.lit(_m))
-                        )),
-                    )
-                if "maxItems" in sub_schema:
-                    m = int(sub_schema["maxItems"])
-                    add(
-                        f"{kprefix}maxItems",
-                        "maxItems",
-                        f"{dotted} has more than {m} items",
-                        A(lambda absent, not_array, arr_v, _m=m: (
-                            absent | not_array | (F.size(arr_v) <= F.lit(_m))
-                        )),
-                    )
-                if sub_schema.get("uniqueItems"):
-                    add(
-                        f"{kprefix}uniqueItems",
-                        "uniqueItems",
-                        f"{dotted} items are not unique",
-                        A(lambda absent, not_array, arr_v: (
-                            absent | not_array | _unique_items_pred(arr_v)
-                        )),
-                    )
-                items = sub_schema.get("items")
-                if isinstance(items, dict) and items.get("type"):
-                    it = items["type"]
-                    shown = it if isinstance(it, str) else "/".join(it)
-                    # bind via factory — Spark HOFs introspect lambda
-                    # arity, so no default-arg closures
-                    elem_pred = (
-                        lambda declared: lambda x: _json_type_pred(
-                            _variant_type_tag(x),
-                            F.try_variant_get(x, "$", "double"),
-                            declared,
-                        )
-                    )(it)
-                    add(
-                        f"{kprefix}items.type",
-                        "type",
-                        f"{dotted} items are not of type '{shown}'",
-                        A(lambda absent, not_array, arr_v, _ep=elem_pred: (
-                            absent | not_array | F.forall(arr_v, _ep)
-                        )),
-                    )
-                if isinstance(items, dict) and (set(items) - {"type"}):
-                    # FULL Draft-7 items sub-schema (enum/pattern/
-                    # ranges/nested combinators/... per element) via
-                    # the recursive core — type alone keeps its
-                    # dedicated message above
-                    rest = {k: v2 for k, v2 in items.items() if k != "type"}
-
-                    def items_ok(_rest, _path=path):
-                        def ok_of(vv):
-                            sub = F.col(_slot(_path)[0])  # shared per-path slot
-                            return (
-                                col.isNull()
-                                | sub.isNull()
-                                | F.coalesce(
-                                    _schema_pred(
-                                        {"items": _rest}, vv, _path,
-                                        _slot_cols(_path),
-                                    ),
-                                    F.lit(False),
-                                )
-                            )
-
-                        return ok_of
-
-                    add(
-                        f"{kprefix}items",
-                        "items",
-                        f"{dotted} items do not match the declared item schema",
-                        items_ok(rest),
-                    )
-            items_l = sub_schema.get("items")
-            if isinstance(items_l, (list, tuple)):
-                # tuple validation (+ additionalItems) via the
-                # recursive core — one fused predicate
-                mini_items = {"items": list(items_l)}
-                if "additionalItems" in sub_schema:
-                    mini_items["additionalItems"] = sub_schema[
-                        "additionalItems"
-                    ]
-
-                def tuple_items_ok(_mini, _path=path):
-                    def ok_of(vv):
-                        sub = F.col(_slot(_path)[0])  # shared per-path slot
-                        return (
-                            col.isNull()
-                            | sub.isNull()
-                            | F.coalesce(
-                                _schema_pred(
-                                    _mini, vv, _path, _slot_cols(_path)
-                                ),
-                                F.lit(False),
-                            )
-                        )
-
-                    return ok_of
-
-                add(
-                    f"{kprefix}items",
-                    "items",
-                    f"{dotted} items do not match the declared tuple schema",
-                    tuple_items_ok(mini_items),
-                )
-            # nested Draft-7 combinators of sub-schemas — each compiles
-            # to ONE fused predicate via the recursive _schema_pred, so
-            # an anyOf of 4 alternatives is still zero extra scans.
-            for comb, msg in (
-                ("anyOf", "does not match any of the allowed schemas"),
-                ("oneOf", "does not match exactly one of the allowed schemas"),
-                ("allOf", "does not match all of the required schemas"),
-            ):
-                subs = sub_schema.get(comb)
-                if subs:
-
-                    # closure factory → true 1-arg lambda (HOFs
-                    # introspect arity; default args would count)
-                    def comb_ok(_subs, _comb, _path=path):
-                        def ok_of(vv):
-                            sub = F.col(_slot(_path)[0])  # shared per-path slot
-                            member = [
-                                F.coalesce(
-                                    _schema_pred(
-                                        s, vv, _path, _slot_cols(_path)
-                                    ),
-                                    F.lit(False),
-                                )
-                                for s in _subs
-                            ]
-                            if _comb == "anyOf":
-                                okc = member[0]
-                                for p in member[1:]:
-                                    okc = okc | p
-                            elif _comb == "allOf":
-                                okc = member[0]
-                                for p in member[1:]:
-                                    okc = okc & p
-                            else:
-                                cnt = F.lit(0)
-                                for p in member:
-                                    cnt = cnt + p.cast("int")
-                                okc = cnt == 1
-                            return col.isNull() | sub.isNull() | okc
-
-                        return ok_of
-
-                    add(
-                        f"{kprefix}{comb}",
-                        comb,
-                        f"{dotted} {msg}",
-                        comb_ok(tuple(subs), comb),
-                    )
-            if "not" in sub_schema:
-
-                def not_ok(_s, _path=path):
-                    def ok_of(vv):
-                        sub = F.col(_slot(_path)[0])  # shared per-path slot
-                        return (
-                            col.isNull()
-                            | sub.isNull()
-                            | ~F.coalesce(
-                                _schema_pred(
-                                    _s, vv, _path, _slot_cols(_path)
-                                ),
-                                F.lit(False),
-                            )
-                        )
-
-                    return ok_of
-
-                add(
-                    f"{kprefix}not",
-                    "not",
-                    f"{dotted} matches the disallowed schema",
-                    not_ok(sub_schema["not"]),
-                )
-            # extended Draft-7 keywords at property level, each its own
-            # check compiled through the recursive predicate core
-            for kw, msg in (
-                ("const", "is not the const value"),
-                ("multipleOf", "is not a multiple of the declared divisor"),
-                ("contains", "has no item matching the contains schema"),
-                ("minProperties", "has fewer properties than the minimum"),
-                ("maxProperties", "has more properties than the maximum"),
-                ("additionalProperties",
-                 "has properties outside the declared set"),
-                ("propertyNames", "has property names violating the schema"),
-                ("patternProperties",
-                 "has a property violating its pattern schema"),
-                ("format", "does not conform to the declared format"),
-                ("dependencies", "violates a property dependency"),
-                ("if", "violates the conditional schema"),
-            ):
-                if kw not in sub_schema:
-                    continue
-                if kw == "additionalProperties" and sub_schema[kw] is True:
-                    continue  # boolean true = Draft-7 default, a no-op
-                if kw == "format" and _js_format_pred(
-                    F.lit("probe"), sub_schema[kw]
-                ) is None:
-                    continue  # unregistered/interpreter-bound: ignored
-                if kw == "if":
-                    if not (
-                        isinstance(sub_schema.get("then"), dict)
-                        or isinstance(sub_schema.get("else"), dict)
-                    ):
-                        continue  # if without then/else is a no-op
-                    mini = {
-                        k: sub_schema[k]
-                        for k in ("if", "then", "else")
-                        if k in sub_schema
-                    }
-                elif kw == "additionalProperties":
-                    # coverage needs the declared property NAMES and the
-                    # patternProperties PATTERNS only — empty sub-schemas
-                    # validate trivially
-                    mini = {
-                        "additionalProperties": sub_schema[kw],
-                        "properties": {
-                            p: {} for p in (sub_schema.get("properties") or {})
-                        },
-                    }
-                    if sub_schema.get("patternProperties"):
-                        mini["patternProperties"] = {
-                            p: {} for p in sub_schema["patternProperties"]
-                        }
-                else:
-                    mini = {kw: sub_schema[kw]}
-
-                def ext_ok(_mini, _path=path):
-                    def ok_of(vv):
-                        sub = F.col(_slot(_path)[0])  # shared per-path slot
-                        return (
-                            col.isNull()
-                            | sub.isNull()
-                            | F.coalesce(
-                                _schema_pred(
-                                    _mini, vv, _path, _slot_cols(_path)
-                                ),
-                                F.lit(False),
-                            )
-                        )
-
-                    return ok_of
-
-                add(f"{kprefix}{kw}", kw, f"{dotted} {msg}", ext_ok(mini))
+            keyword_checks(sub_schema, path, kprefix, dotted)
             if sub_schema.get("properties") or sub_schema.get("required"):
                 walk(sub_schema, path, kprefix, f"{dotted}.")
 
     walk(js, "$", "", "")
-
-    # root-level combinators and uniqueItems over the whole value —
-    # ``jsonSchema: {"anyOf": [...]}`` / ``{"type":"array",
-    # "uniqueItems": true}``. Invalid JSON passes vacuously (the
-    # top-level type check owns that failure, same as ``required``).
-    for comb, msg in (
-        ("anyOf", "does not match any of the allowed schemas"),
-        ("oneOf", "does not match exactly one of the allowed schemas"),
-        ("allOf", "does not match all of the required schemas"),
-    ):
-        subs = js.get(comb)
-        if not subs:
-            continue
-
-        def root_comb_ok(_subs, _comb):
-            def ok_of(vv):
-                member = [
-                    F.coalesce(
-                        _schema_pred(s, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                    for s in _subs
-                ]
-                if _comb == "anyOf":
-                    okc = member[0]
-                    for p in member[1:]:
-                        okc = okc | p
-                elif _comb == "allOf":
-                    okc = member[0]
-                    for p in member[1:]:
-                        okc = okc & p
-                else:
-                    cnt = F.lit(0)
-                    for p in member:
-                        cnt = cnt + p.cast("int")
-                    okc = cnt == 1
-                return col.isNull() | vv.isNull() | okc
-
-            return ok_of
-
-        add(comb, comb, f"value {msg}", root_comb_ok(tuple(subs), comb))
-    if "not" in js:
-
-        def root_not_ok(_s):
-            def ok_of(vv):
-                return (
-                    col.isNull()
-                    | vv.isNull()
-                    | ~F.coalesce(
-                        _schema_pred(_s, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                )
-
-            return ok_of
-
-        add(
-            "not",
-            "not",
-            "value matches the disallowed schema",
-            root_not_ok(js["not"]),
-        )
-    # root-level extended keywords — same mini-schema mechanism as the
-    # property-level loop, over the whole value at "$"
-    for kw, msg in (
-        ("const", "is not the const value"),
-        ("enum", "is not one of the allowed values"),
-        ("pattern", "does not match the declared pattern"),
-        ("minimum", "is less than the minimum"),
-        ("maximum", "is greater than the maximum"),
-        ("exclusiveMinimum", "is not greater than the exclusive minimum"),
-        ("exclusiveMaximum", "is not less than the exclusive maximum"),
-        ("minLength", "is shorter than the minimum length"),
-        ("maxLength", "is longer than the maximum length"),
-        ("minItems", "has fewer than the minimum items"),
-        ("maxItems", "has more than the maximum items"),
-        ("multipleOf", "is not a multiple of the declared divisor"),
-        ("contains", "has no item matching the contains schema"),
-        ("minProperties", "has fewer properties than the minimum"),
-        ("maxProperties", "has more properties than the maximum"),
-        ("additionalProperties", "has properties outside the declared set"),
-        ("propertyNames", "has property names violating the schema"),
-        ("patternProperties", "has a property violating its pattern schema"),
-        ("format", "does not conform to the declared format"),
-        ("dependencies", "violates a property dependency"),
-        ("if", "violates the conditional schema"),
-    ):
-        if kw not in js:
-            continue
-        if kw == "additionalProperties" and js[kw] is True:
-            continue
-        if kw == "format" and _js_format_pred(F.lit("probe"), js[kw]) is None:
-            continue
-        if kw == "if":
-            if not (
-                isinstance(js.get("then"), dict)
-                or isinstance(js.get("else"), dict)
-            ):
-                continue
-            mini = {
-                k: js[k] for k in ("if", "then", "else") if k in js
-            }
-        elif kw == "additionalProperties":
-            mini = {
-                "additionalProperties": js[kw],
-                "properties": {p: {} for p in (js.get("properties") or {})},
-            }
-            if js.get("patternProperties"):
-                mini["patternProperties"] = {
-                    p: {} for p in js["patternProperties"]
-                }
-        else:
-            mini = {kw: js[kw]}
-
-        def root_ext_ok(_mini):
-            def ok_of(vv):
-                return (
-                    col.isNull()
-                    | vv.isNull()
-                    | F.coalesce(
-                        _schema_pred(_mini, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                )
-
-            return ok_of
-
-        add(kw, kw, f"value {msg}", root_ext_ok(mini))
-    # root tuple-form items (+ additionalItems)
-    if isinstance(js.get("items"), (list, tuple)):
-        mini_items = {"items": list(js["items"])}
-        if "additionalItems" in js:
-            mini_items["additionalItems"] = js["additionalItems"]
-
-        def root_tuple_ok(_mini):
-            def ok_of(vv):
-                return (
-                    col.isNull()
-                    | vv.isNull()
-                    | F.coalesce(
-                        _schema_pred(_mini, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                )
-
-            return ok_of
-
-        add(
-            "items",
-            "items",
-            "array items do not match the declared tuple schema",
-            root_tuple_ok(mini_items),
-        )
-    if js.get("uniqueItems"):
-
-        def root_unique_ok(vv):
-            root_arr = F.try_variant_get(vv, "$", "array<variant>")
-            return (
-                col.isNull()
-                | vv.isNull()
-                | root_arr.isNull()
-                | _unique_items_pred(root_arr)
-            )
-
-        add("uniqueItems", "uniqueItems", "array items are not unique", root_unique_ok)
-
-    root_items = js.get("items")
-    if (
-        isinstance(root_items, dict)
-        and actual_type != "array"
-        and (set(root_items) - {"required"})
-    ):
-        # full root-level items sub-schema over the JSON-string path
-        # (actual array columns keep the dedicated struct-based
-        # items.required block below — variant parse needs JSON text)
-        rest = {k: v2 for k, v2 in root_items.items() if k != "required"}
-
-        def root_items_ok(_rest):
-            def ok_of(vv):
-                return (
-                    col.isNull()
-                    | vv.isNull()
-                    | F.coalesce(
-                        _schema_pred({"items": _rest}, vv, "$", _slot_cols("$")),
-                        F.lit(False),
-                    )
-                )
-
-            return ok_of
-
-        add(
-            "items",
-            "items",
-            "array items do not match the declared item schema",
-            root_items_ok(rest),
-        )
+    keyword_checks({k: s for k, s in js.items() if k != "type"}, "$", "", None)
 
     _root_items = js.get("items")
     items_required = (

@@ -357,9 +357,12 @@ def md5_head8_int64(msgs) -> "np.ndarray":  # noqa: F821
     overhead than one ``hashlib.md5`` call per shingle (measured: a
     10k-doc batch's signature pass spent 0.63 s of 1.11 s in hashlib
     calls). Longer messages fall back to hashlib, so values never
-    depend on the path taken."""
+    depend on the path taken. So does every message on a big-endian
+    host: the uint32 view of the padded blocks and the int64 view of
+    the digest heads read words in native byte order."""
     import hashlib
     import struct
+    import sys
 
     import numpy as np
 
@@ -371,7 +374,10 @@ def md5_head8_int64(msgs) -> "np.ndarray":  # noqa: F821
         ]
     n = len(msgs)
     out = np.empty(n, dtype=np.int64)
-    big = [i for i, m in enumerate(msgs) if len(m) > 55]
+    if sys.byteorder == "little":
+        big = [i for i, m in enumerate(msgs) if len(m) > 55]
+    else:
+        big = list(range(n))
     if len(big) < n:
         if big:
             bigset = set(big)

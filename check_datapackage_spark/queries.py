@@ -1111,7 +1111,13 @@ ORDER BY id_a, id_b
 
 def q30_json_props(spark, sf_dir):
     """P1 analog on data: JSONPath select over a JSON string column +
-    C2 'object' validity — get_json_object / try_parse_json."""
+    C2 'object' validity — get_json_object / try_parse_json.
+
+    Assumes ``k`` is integer-valued, as in the generated ``events``
+    table: only then does ``try_variant_get(.., "long")`` equal the
+    oracle's string-extract-then-cast. A fractional ``k`` (1.5) would
+    truncate to 1 and a boolean ``true`` read as 1, where the oracle
+    gives NULL for both."""
     ev = _t(spark, sf_dir, "events")
     # ONE parse per row: validity and $.k both come off the same
     # MATERIALIZED variant column (get_json_object + try_parse_json

@@ -963,3 +963,270 @@ def test_json_schema_slots_distinct_across_specs(spark):
     assert got(a) == {("1", "meta.jsonSchema.properties.lang.type")}
     assert got(b) == {("1", "meta.jsonSchema.properties.q.type")}
     assert got(a + b) == got(a) | got(b)
+
+
+def test_json_schema_non_scalar_enum_raises_everywhere(spark):
+    """Non-scalar enum/const members have no exact predicate, so they
+    raise at compile time wherever they appear, a property included:
+    comparing only the scalar members there would flag
+    ``{"k": {"a": 1}}``, which Draft7Validator accepts."""
+    import jsonschema
+
+    from check_datapackage_spark.compile import compile_json_schema_checks
+    from check_datapackage_spark.spec import Constraints, FieldSpec
+
+    on_property = {
+        "type": "object", "properties": {"k": {"enum": ["x", {"a": 1}]}}
+    }
+    assert jsonschema.Draft7Validator(on_property).is_valid({"k": {"a": 1}})
+    for js in (
+        on_property,
+        {"type": "object", "properties": {"k": {"const": [1]}}},
+        {"enum": ["x", {"a": 1}]},
+        {"anyOf": [{"const": {"a": 1}}]},
+    ):
+        f = FieldSpec(
+            name="m", type="string", constraints=Constraints(json_schema=js)
+        )
+        with pytest.raises(ValueError, match="members must be scalars"):
+            compile_json_schema_checks(f)
+
+
+def test_bind_check_lets_public(spark):
+    """A compiled jsonSchema check's ``ok`` reads slot columns that
+    ``bind_check_lets`` adds — usable with top-level imports only."""
+    from check_datapackage_spark import (
+        Constraints,
+        FieldSpec,
+        bind_check_lets,
+        compile_json_schema_checks,
+    )
+
+    df = spark.createDataFrame(
+        [(1, '{"k": 1}'), (2, '{"k": "x"}'), (3, None)], "id int, m string"
+    )
+    f = FieldSpec(
+        name="m",
+        type="string",
+        constraints=Constraints(json_schema={
+            "type": "object", "properties": {"k": {"type": "integer"}}
+        }),
+    )
+    checks = compile_json_schema_checks(f)
+    (ck,) = [c for c in checks if c.name == "m.jsonSchema.properties.k.type"]
+    bad = bind_check_lets(df, checks).filter(~ck.ok)
+    assert [r["id"] for r in bad.collect()] == [2]
+
+#: every keyword _schema_pred implements, all in one node — compiled
+#: below at the root AND at a nested property
+_EVERY_KEYWORD = {
+    "enum": ["a", 1, None],
+    "const": "a",
+    "pattern": "^a",
+    "multipleOf": 2,
+    "minimum": 0,
+    "maximum": 9,
+    "exclusiveMinimum": -1,
+    "exclusiveMaximum": 10,
+    "minLength": 1,
+    "maxLength": 5,
+    "minItems": 1,
+    "maxItems": 4,
+    "uniqueItems": True,
+    "contains": {"type": "integer"},
+    "minProperties": 1,
+    "maxProperties": 3,
+    "additionalProperties": False,
+    "propertyNames": {"maxLength": 3},
+    "patternProperties": {"^x": {"type": "string"}},
+    "dependencies": {"a": ["b"], "c": {"required": ["d"]}},
+    "format": "date",
+    "anyOf": [{"type": "string"}, {"type": "integer"}],
+    "oneOf": [{"minimum": 1}, {"maximum": 1}],
+    "allOf": [{"minLength": 1}],
+    "not": {"type": "null"},
+    "if": {"type": "string"},
+    "then": {"maxLength": 2},
+    "else": {"minimum": 1},
+}
+
+
+def test_json_schema_keyword_contract(spark):
+    """Golden contract of compile_json_schema_checks: every supported
+    keyword at the root and at a nested property, pinned as the sorted
+    (name, issue_type, message) list. Oracle SQL pins names, types and
+    messages for a handful of keywords only; this pins them all,
+    including both message forms (property vs root)."""
+    from check_datapackage_spark.compile import compile_json_schema_checks
+    from check_datapackage_spark.spec import Constraints, FieldSpec
+
+    def emitted(js):
+        f = FieldSpec(
+            name="m", type="string", constraints=Constraints(json_schema=js)
+        )
+        return [
+            (c.name, c.issue_type, c.message)
+            for c in compile_json_schema_checks(f)
+        ]
+
+    nested = {
+        "type": ["string", "integer"],
+        **_EVERY_KEYWORD,
+        "items": {"type": "integer", "maximum": 9},
+    }
+    got = sorted(
+        emitted({
+            "type": ["object", "array"],
+            **_EVERY_KEYWORD,
+            "items": {"type": "object", "required": ["t"], "minProperties": 1},
+            "required": ["p"],
+            "properties": {
+                "p": {
+                    "type": "object",
+                    "required": ["q"],
+                    "properties": {
+                        "q": nested,
+                        "r": {
+                            "items": [{"type": "string"}],
+                            "additionalItems": {"type": "integer"},
+                        },
+                    },
+                }
+            },
+        })
+        + emitted({"items": [{"type": "string"}], "additionalItems": False})
+        + emitted({"type": "object"})
+        + emitted({"type": "array"})
+    )
+    assert got == [
+        ('m.jsonSchema.additionalProperties', 'additionalProperties',
+         'value has properties outside the declared set'),
+        ('m.jsonSchema.allOf', 'allOf',
+         'value does not match all of the required schemas'),
+        ('m.jsonSchema.anyOf', 'anyOf',
+         'value does not match any of the allowed schemas'),
+        ('m.jsonSchema.const', 'const',
+         'value is not the const value'),
+        ('m.jsonSchema.contains', 'contains',
+         'value has no item matching the contains schema'),
+        ('m.jsonSchema.dependencies', 'dependencies',
+         'value violates a property dependency'),
+        ('m.jsonSchema.enum', 'enum',
+         'value is not one of the allowed values'),
+        ('m.jsonSchema.exclusiveMaximum', 'exclusiveMaximum',
+         'value is not less than the exclusive maximum'),
+        ('m.jsonSchema.exclusiveMinimum', 'exclusiveMinimum',
+         'value is not greater than the exclusive minimum'),
+        ('m.jsonSchema.format', 'format',
+         'value does not conform to the declared format'),
+        ('m.jsonSchema.if', 'if',
+         'value violates the conditional schema'),
+        ('m.jsonSchema.items', 'items',
+         'array items do not match the declared item schema'),
+        ('m.jsonSchema.items', 'items',
+         'array items do not match the declared tuple schema'),
+        ('m.jsonSchema.items.required.t', 'required',
+         't is a required property of every item'),
+        ('m.jsonSchema.maxItems', 'maxItems',
+         'value has more than the maximum items'),
+        ('m.jsonSchema.maxLength', 'maxLength',
+         'value is longer than the maximum length'),
+        ('m.jsonSchema.maxProperties', 'maxProperties',
+         'value has more properties than the maximum'),
+        ('m.jsonSchema.maximum', 'maximum',
+         'value is greater than the maximum'),
+        ('m.jsonSchema.minItems', 'minItems',
+         'value has fewer than the minimum items'),
+        ('m.jsonSchema.minLength', 'minLength',
+         'value is shorter than the minimum length'),
+        ('m.jsonSchema.minProperties', 'minProperties',
+         'value has fewer properties than the minimum'),
+        ('m.jsonSchema.minimum', 'minimum',
+         'value is less than the minimum'),
+        ('m.jsonSchema.multipleOf', 'multipleOf',
+         'value is not a multiple of the declared divisor'),
+        ('m.jsonSchema.not', 'not',
+         'value matches the disallowed schema'),
+        ('m.jsonSchema.oneOf', 'oneOf',
+         'value does not match exactly one of the allowed schemas'),
+        ('m.jsonSchema.pattern', 'pattern',
+         'value does not match the declared pattern'),
+        ('m.jsonSchema.patternProperties', 'patternProperties',
+         'value has a property violating its pattern schema'),
+        ('m.jsonSchema.properties.p.properties.q.additionalProperties', 'additionalProperties',
+         'p.q has properties outside the declared set'),
+        ('m.jsonSchema.properties.p.properties.q.allOf', 'allOf',
+         'p.q does not match all of the required schemas'),
+        ('m.jsonSchema.properties.p.properties.q.anyOf', 'anyOf',
+         'p.q does not match any of the allowed schemas'),
+        ('m.jsonSchema.properties.p.properties.q.const', 'const',
+         'p.q is not the const value'),
+        ('m.jsonSchema.properties.p.properties.q.contains', 'contains',
+         'p.q has no item matching the contains schema'),
+        ('m.jsonSchema.properties.p.properties.q.dependencies', 'dependencies',
+         'p.q violates a property dependency'),
+        ('m.jsonSchema.properties.p.properties.q.enum', 'enum',
+         'p.q is not one of the allowed values'),
+        ('m.jsonSchema.properties.p.properties.q.exclusiveMaximum', 'exclusiveMaximum',
+         'p.q is not less than the exclusive maximum of 10'),
+        ('m.jsonSchema.properties.p.properties.q.exclusiveMinimum', 'exclusiveMinimum',
+         'p.q is not greater than the exclusive minimum of -1'),
+        ('m.jsonSchema.properties.p.properties.q.format', 'format',
+         'p.q does not conform to the declared format'),
+        ('m.jsonSchema.properties.p.properties.q.if', 'if',
+         'p.q violates the conditional schema'),
+        ('m.jsonSchema.properties.p.properties.q.items', 'items',
+         'p.q items do not match the declared item schema'),
+        ('m.jsonSchema.properties.p.properties.q.items.type', 'type',
+         "p.q items are not of type 'integer'"),
+        ('m.jsonSchema.properties.p.properties.q.maxItems', 'maxItems',
+         'p.q has more than 4 items'),
+        ('m.jsonSchema.properties.p.properties.q.maxLength', 'maxLength',
+         'p.q is longer than 5 characters'),
+        ('m.jsonSchema.properties.p.properties.q.maxProperties', 'maxProperties',
+         'p.q has more properties than the maximum'),
+        ('m.jsonSchema.properties.p.properties.q.maximum', 'maximum',
+         'p.q is greater than the maximum of 9'),
+        ('m.jsonSchema.properties.p.properties.q.minItems', 'minItems',
+         'p.q has fewer than 1 items'),
+        ('m.jsonSchema.properties.p.properties.q.minLength', 'minLength',
+         'p.q is shorter than 1 characters'),
+        ('m.jsonSchema.properties.p.properties.q.minProperties', 'minProperties',
+         'p.q has fewer properties than the minimum'),
+        ('m.jsonSchema.properties.p.properties.q.minimum', 'minimum',
+         'p.q is less than the minimum of 0'),
+        ('m.jsonSchema.properties.p.properties.q.multipleOf', 'multipleOf',
+         'p.q is not a multiple of the declared divisor'),
+        ('m.jsonSchema.properties.p.properties.q.not', 'not',
+         'p.q matches the disallowed schema'),
+        ('m.jsonSchema.properties.p.properties.q.oneOf', 'oneOf',
+         'p.q does not match exactly one of the allowed schemas'),
+        ('m.jsonSchema.properties.p.properties.q.pattern', 'pattern',
+         "p.q does not match '^a'"),
+        ('m.jsonSchema.properties.p.properties.q.patternProperties', 'patternProperties',
+         'p.q has a property violating its pattern schema'),
+        ('m.jsonSchema.properties.p.properties.q.propertyNames', 'propertyNames',
+         'p.q has property names violating the schema'),
+        ('m.jsonSchema.properties.p.properties.q.type', 'type',
+         "p.q is not of type 'string/integer'"),
+        ('m.jsonSchema.properties.p.properties.q.uniqueItems', 'uniqueItems',
+         'p.q items are not unique'),
+        ('m.jsonSchema.properties.p.properties.r.items', 'items',
+         'p.r items do not match the declared tuple schema'),
+        ('m.jsonSchema.properties.p.required.q', 'required',
+         'p.q is a required property'),
+        ('m.jsonSchema.properties.p.type', 'type',
+         "p is not of type 'object'"),
+        ('m.jsonSchema.propertyNames', 'propertyNames',
+         'value has property names violating the schema'),
+        ('m.jsonSchema.required.p', 'required',
+         'p is a required property'),
+        ('m.jsonSchema.type', 'type',
+         'value is not a JSON array'),
+        ('m.jsonSchema.type', 'type',
+         'value is not a JSON object'),
+        ('m.jsonSchema.type', 'type',
+         "value is not of type 'object/array'"),
+        ('m.jsonSchema.uniqueItems', 'uniqueItems',
+         'array items are not unique'),
+    ]

@@ -545,3 +545,20 @@ def test_md5_head8_int64_matches_hashlib():
     ]
     got = text.md5_head8_int64(msgs)
     assert list(got) == want
+
+
+def test_md5_head8_int64_big_endian_fallback(monkeypatch):
+    """On a big-endian host every message takes the hashlib path (the
+    vectorized rounds read words in native byte order); forced here by
+    faking the host byte order."""
+    import hashlib
+    import sys
+
+    msgs = [b"", b"abc", b"a" * 55, b"a" * 56, "shingle é".encode()]
+    want = [
+        int.from_bytes(hashlib.md5(m).digest()[:8], "little", signed=True)
+        for m in msgs
+    ]
+    monkeypatch.setattr(sys, "byteorder", "big")
+    monkeypatch.setattr(text, "_MD5_K", None)  # the rounds must not run
+    assert list(text.md5_head8_int64(msgs)) == want
