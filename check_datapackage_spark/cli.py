@@ -278,13 +278,7 @@ def main(argv=None) -> int:
             return rc if args.error else 0
 
         df = load_table(spark, args.data, args.table)
-        extra = None
-        if config.extensions:
-            from .extensions import compile_extensions
-
-            # schema-aware: jsonpath RequiredChecks expand their
-            # wildcard/union/descent targets against the table schema
-            extra = compile_extensions(config.extensions, schema=df.schema)
+        extra = []
         if args.tokens_structure:
             from .operators.sequences import structure_checks
 
@@ -294,7 +288,7 @@ def main(argv=None) -> int:
                     "--tokens-structure expects BOS,EOS,PAD,MAXID[,COLUMN]"
                 )
             col = parts[4] if len(parts) == 5 else "tokens"
-            extra = (extra or []) + structure_checks(
+            extra = structure_checks(
                 col,
                 bos=int(parts[0]),
                 eos=int(parts[1]),

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .compile import CompiledCheck
+from .jsonpath import parse as parse_jsonpath
 
 
 class ExtensionError(ValueError):
@@ -60,7 +61,7 @@ class CustomCheck:
                 "CustomCheck needs exactly one of `column` or `jsonpath`."
             )
         if self.jsonpath is not None:
-            _parse_custom_jsonpath(self.jsonpath)  # ValueError parity
+            _schema_paths(self.jsonpath, "CustomCheck", name_leaf=False)
 
     def _ok_udf(self):
         fn = self.check
@@ -130,7 +131,7 @@ class CustomCheck:
                 "jsonpath CustomCheck requires a schema to derive targets."
             )
         checks = []
-        for alt in _parse_custom_jsonpath(self.jsonpath):
+        for alt in _schema_paths(self.jsonpath, "CustomCheck", name_leaf=False):
             for t in _resolve_targets(schema, alt):
                 display = t.path.removeprefix("$.")
                 if t.in_arr:
@@ -156,141 +157,41 @@ class CustomCheck:
         return checks
 
 
-# --- RequiredCheck jsonpath target derivation -------------------------------
+# --- jsonpath target derivation --------------------------------------------
 #
 # Mirrors ref extensions.py:109-138 (_jsonpath_to_targets) +
 # tests/test_extensions.py:120-240: wildcard (`$.*.id`), array wildcard
 # (`$.contributors[*].name`), name unions (`$['a','b']`), path unions
 # (`$.a | $.b`), non-final recursive descent (`$..licenses[*].title`).
-# Paths are validated at CONSTRUCTION time (ValueError parity): the
-# final segment must be a plain name selector — paths ending in `..x`,
-# a wildcard, or an index raise, as does the `&` intersection operator.
+# Paths parse in the one grammar of `jsonpath.py` and are validated at
+# CONSTRUCTION time (ValueError parity).
 
 
-def _parse_custom_jsonpath(path: str) -> list[list[tuple]]:
-    """CustomCheck paths: same grammar, but any leaf selector is fine
-    (the reference routes CustomCheck through the general jsonpath
-    library — only RequiredCheck restricts to name-selector leaves)."""
-    return _parse_jsonpath_segments(
-        path, require_name_leaf=False, label="CustomCheck"
-    )
-
-
-def _parse_jsonpath_segments(
-    path: str, require_name_leaf: bool = True, label: str = "RequiredCheck"
-) -> list[list[tuple]]:
-    """Parse a RequiredCheck jsonpath into path alternatives (split on
-    top-level ``|``), each a list of segment tuples:
-    ``("name", [names])``, ``("wild",)``, ``("wild_arr",)``,
-    ``("index", i)``, ``("desc", name)``.
-    """
-    if "&" in path:
-        raise ValueError(
-            f"Cannot use the JSON path `{path}` in `{label}`: the "
-            "`&` intersection operator is not supported."
-        )
-    alts = []
-    depth = 0
-    start = 0
-    for i, ch in enumerate(path):
-        if ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth -= 1
-        elif ch == "|" and depth == 0:
-            alts.append(path[start:i].strip())
-            start = i + 1
-    alts.append(path[start:].strip())
-
+def _schema_paths(path: str, label: str, name_leaf: bool) -> list[tuple]:
+    """The segments of each ``|`` alternative of ``path``, restricted to
+    what addresses a schema field: rooted paths of names, wildcards,
+    indices and ``..name``. With ``name_leaf`` (RequiredCheck) the last
+    segment must also be a plain name selector not reached by ``..``.
+    CustomCheck takes any leaf (the reference routes it through the
+    general jsonpath library)."""
     out = []
-    for alt in alts:
-        if not alt.startswith("$"):
-            raise ValueError(
-                f"Cannot use the JSON path `{alt}` in `RequiredCheck`: "
-                "paths must start at the root (`$`)."
-            )
-        s = alt[1:]
-        segs: list[tuple] = []
-        i = 0
-        n = len(s)
-        while i < n:
-            if s.startswith("..", i):
-                j = i + 2
-                name = []
-                while j < n and (s[j].isalnum() or s[j] in "_-"):
-                    name.append(s[j])
-                    j += 1
-                if not name:
-                    raise ValueError(
-                        f"Cannot use the JSON path `{alt}` in "
-                        "`RequiredCheck`: bare recursive descent."
-                    )
-                segs.append(("desc", "".join(name)))
-                i = j
-            elif s[i] == ".":
-                j = i + 1
-                if j < n and s[j] == "*":
-                    segs.append(("wild",))
-                    i = j + 1
-                    continue
-                name = []
-                while j < n and (s[j].isalnum() or s[j] in "_-"):
-                    name.append(s[j])
-                    j += 1
-                if not name:
-                    raise ValueError(
-                        f"Cannot use the JSON path `{alt}` in "
-                        "`RequiredCheck`: empty name selector."
-                    )
-                segs.append(("name", ["".join(name)]))
-                i = j
-            elif s[i] == "[":
-                j = s.find("]", i)
-                if j < 0:
-                    raise ValueError(
-                        f"Cannot use the JSON path `{alt}` in "
-                        "`RequiredCheck`: unbalanced brackets."
-                    )
-                inner = s[i + 1 : j].strip()
-                if inner == "*":
-                    segs.append(("wild_arr",))
-                elif inner.lstrip("-").isdigit():
-                    segs.append(("index", int(inner)))
-                else:
-                    names = []
-                    for part in inner.split(","):
-                        part = part.strip()
-                        if (
-                            len(part) >= 2
-                            and part[0] in "'\""
-                            and part[-1] == part[0]
-                        ):
-                            names.append(part[1:-1])
-                        else:
-                            raise ValueError(
-                                f"Cannot use the JSON path `{alt}` in "
-                                f"`RequiredCheck`: bad selector `{part}`."
-                            )
-                    segs.append(("name", names))
-                i = j + 1
-            else:
+    for alt in parse_jsonpath(path):
+        segs = alt.segments
+        where = f"Cannot use the JSON path `{path}` in `{label}`"
+        if not alt.rooted:
+            raise ValueError(f"{where}: paths must start at the root (`$`).")
+        for k, seg in enumerate(segs):
+            if seg[0] in ("key", "slice", "filter"):
+                raise ValueError(f"{where}: a {seg[0]} selector does not address a field.")
+            if seg[0] == "desc" and segs[k + 1][0] != "name":
+                raise ValueError(f"{where}: `..` must be followed by a name.")
+        if name_leaf and segs:
+            if len(segs) > 1 and segs[-2] == ("desc",):
                 raise ValueError(
-                    f"Cannot use the JSON path `{alt}` in `RequiredCheck`: "
-                    f"unexpected character {s[i]!r}."
+                    f"{where} because it ends in the recursive descent (`..`) operator."
                 )
-        if segs:
-            last = segs[-1]
-            if last[0] == "desc":
-                raise ValueError(
-                    f"Cannot use the JSON path `{alt}` in `RequiredCheck`"
-                    " because it ends in the recursive descent (`..`)"
-                    " operator."
-                )
-            if last[0] != "name":
-                raise ValueError(
-                    f"Cannot use `RequiredCheck` for the JSON path `{alt}`"
-                    " because it doesn't end in a name selector."
-                )
+            if segs[-1][0] != "name":
+                raise ValueError(f"{where} because it doesn't end in a name selector.")
         out.append(segs)
     return out
 
@@ -428,10 +329,16 @@ def _resolve_targets(schema, segments: list[tuple], path_so_far: str = "$"):
                 desc_all(nxt, name, acc)
         return acc
 
-    for seg in segments:
+    for k, seg in enumerate(segments):
+        if seg[0] == "desc":
+            continue  # applied with the name segment that follows it
+        descend = k > 0 and segments[k - 1] == ("desc",)
         new = []
         for c in cands:
-            if seg[0] == "name":
+            if descend:
+                for nm in seg[1]:
+                    desc_all(c, nm, new)
+            elif seg[0] == "name":
                 for nm in seg[1]:
                     # auto-enter a single array layer so `$.a.b` over
                     # array<struct> behaves like `$.a[*].b`; explicit
@@ -473,8 +380,6 @@ def _resolve_targets(schema, segments: list[tuple], path_so_far: str = "$"):
                         n["expr"] = F.try_element_at(arr, F.lit(idx))
                         n["na"] = arr.isNull() | (F.size(arr) < F.lit(-idx))
                     new.append(n)
-            elif seg[0] == "desc":
-                desc_all(c, seg[1], new)
         cands = new
 
     targets = []
@@ -525,7 +430,7 @@ class RequiredCheck:
                 "RequiredCheck needs exactly one of `column` or `jsonpath`."
             )
         if self.jsonpath is not None:
-            _parse_jsonpath_segments(self.jsonpath)  # ValueError parity
+            _schema_paths(self.jsonpath, "RequiredCheck", name_leaf=True)
 
     def compile(self) -> CompiledCheck:
         if self.column is None:
@@ -551,7 +456,7 @@ class RequiredCheck:
                 "jsonpath RequiredCheck requires a schema to derive targets."
             )
         checks = []
-        for alt in _parse_jsonpath_segments(self.jsonpath):
+        for alt in _schema_paths(self.jsonpath, "RequiredCheck", name_leaf=True):
             for t in _resolve_targets(schema, alt):
                 display = t.path.removeprefix("$.")
                 checks.append(
@@ -570,14 +475,17 @@ class RequiredCheck:
 
 def compile_extensions(extensions, schema=None) -> list[CompiledCheck]:
     """Concat required + custom checks (ref apply_extensions,
-    extensions.py:264-283) into compiled checks for the fused plan.
+    extensions.py:264-283) into compiled checks for the fused plan;
+    already compiled checks pass through in place.
 
     ``schema`` (the target DataFrame's StructType) is needed whenever a
     RequiredCheck uses jsonpath targets — wildcard/union/descent paths
     expand against the physical schema."""
     out: list[CompiledCheck] = []
     for ext in extensions or ():
-        if hasattr(ext, "compile_all"):
+        if isinstance(ext, CompiledCheck):
+            out.append(ext)
+        elif hasattr(ext, "compile_all"):
             out.extend(ext.compile_all(schema))
         elif hasattr(ext, "compile"):
             out.append(ext.compile())

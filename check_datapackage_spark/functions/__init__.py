@@ -159,11 +159,3 @@ def geopoint_array_ok(col: Column) -> Column:
         & F.try_element_at(col, F.lit(1)).between(-180.0, 180.0)
         & F.try_element_at(col, F.lit(2)).between(-90.0, 90.0)
     )
-
-
-def array_elements_ok(col: Column, element_pred) -> Column:
-    """C2 on array elements: every element satisfies ``element_pred``.
-
-    ``F.forall`` — JVM-side higher-order function, no shuffle, no Python.
-    """
-    return col.isNull() | F.forall(col, element_pred)

@@ -25,11 +25,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LEDGER_SCHEMA = (
-    "run_id string, source string, bucket int, n_rows long, n_violations long,"
-    " passed boolean, completed_at_ms long"
-)
-
 
 def with_bucket(df: DataFrame, key: str = "doc_id", n_buckets: int = 64) -> DataFrame:
     """Add the explicit salt/bucket column from the north_rule:

@@ -1,13 +1,14 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram
-Jaccard, embedding-cosine near-dup (task brief / SURVEY §2.8).
+"""Deduplication operators: exact, MinHash+LSH (n-gram Jaccard),
+SimHash, embedding-cosine near-dup (task brief / SURVEY §2.8).
 
 Scale shapes:
 * **exact**: groupBy(fingerprint) — one shuffle of (hash, id) pairs.
-* **MinHash+LSH**: shingle → per-seed min-hash (all JVM-side
-  ``array_min(transform(...))``, no UDF) → band hashes → ONE shuffle
-  grouping docs by (band, band_hash); candidate pairs only form inside
-  buckets, so no quadratic blowup. Verification re-computes exact
-  shingle Jaccard on the candidate pairs only.
+* **MinHash+LSH**: per-doc min-hash signatures in one Arrow-batched
+  numpy pass → band hashes → ONE shuffle grouping docs by (band,
+  band_hash); candidate pairs only form inside buckets, so no
+  quadratic blowup. Verification re-computes exact shingle Jaccard on
+  the candidate pairs only. n-gram Jaccard near-dups are the same
+  pipeline with a smaller ``k_shingle``.
 * **SimHash**: 64-bit signature via a vectorized pandas UDF (bit math
   over token hashes), bucketed by 16-bit chunks for candidate search
   (hamming ≤ k ⇒ some chunk equal, pigeonhole).
@@ -102,7 +103,7 @@ def shingles(col: Column, k: int = 5) -> Column:
     would re-normalize the whole document once per shingle position —
     O(doc_len x positions) instead of linear (this was q46's entire
     overrun; fixing it here also fixes every shingle consumer:
-    minhash SQL path, decontamination, cross-doc dup)."""
+    MinHash pair verification, decontamination, cross-doc dup)."""
 
     def sh(words: Column) -> Column:
         idx = F.sequence(
@@ -153,131 +154,61 @@ def shingles_arrow(col: Column, k: int = 5) -> Column:
     return sh(normalize_text(col))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    k_shingle: int = 5,
-) -> DataFrame:
-    """MinHash signatures as wide columns: (_id, _h0.._h{n-1}).
-
-    Shape matters here: computing the signature as
-    ``array(array_min(transform(shingles, hash_i)) for i)`` re-inlines
-    the whole shingle expression once PER SEED (higher-order functions
-    fall out of whole-stage codegen, so no common-subexpression reuse) —
-    measured 40× slower. Instead: explode shingles ONCE, hash with every
-    seed (plain codegen'd xxhash64), and take per-doc mins in one hash
-    aggregate. Map-side partial aggregation reduces each task to one
-    row per doc before the shuffle, so shuffle traffic is
-    |docs| × n_hashes longs regardless of document length.
-
-    (Kept as the pure-JVM fallback; the banding stage consumes the
-    ARRAY form — see :func:`_signature_array`.)
-    """
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(shingles(F.col(text_col), k_shingle)).alias("_sh"),
-    ).select(
-        "_id",
-        # hash the shingle STRING once; derive the seed family by
-        # universal hashing over the 8-byte value (a_i*h + b_i, wrapping
-        # int64) — 32 string hashes per shingle would cost 32x the bytes
-        F.xxhash64("_sh").alias("_h"),
-    )
-    # (integer multiply-mix would be cheaper still but ANSI mode rejects
-    # wrapping overflow; hashing 8 bytes per seed is already ~6x less
-    # data than re-hashing the shingle text per seed)
-    aggs = [
-        F.min(F.xxhash64("_h", F.lit(i))).alias(f"_h{i}") for i in range(n_hashes)
-    ]
-    return ex.groupBy("_id").agg(*aggs)
-
-
-def minhash_signatures_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    k_shingle: int = 5,
-) -> DataFrame:
-    """Arrow-batched MinHash signatures (same wide (_id, _h*) shape as
-    :func:`minhash_signatures`).
-
-    Measured ~4× faster than the SQL path at sf0.1: shingling is heavy
-    per-row string work, and Catalyst higher-order functions
-    (split→transform(slice+array_join)→array_distinct) evaluate
-    interpreted; one numpy pass per Arrow batch (md5 base hash +
-    wrapping multiply-add seed family, both process-stable) wins.
-    Signature VALUES differ from the SQL path (different hash family) —
-    candidate sets differ slightly, but the exact-Jaccard verification
-    step makes the final pairs threshold-equivalent.
-    """
-    arr = _signature_array(df, text_col, id_col, n_hashes, k_shingle, "arrow")
-    return arr.select(
-        "_id", *[F.element_at("_s", i + 1).alias(f"_h{i}") for i in range(n_hashes)]
-    )
-
-
 def _signature_array(
     df: DataFrame,
     text_col: str,
     id_col: str,
     n_hashes: int,
     k_shingle: int,
-    method: str,
 ) -> DataFrame:
-    """Signatures in ARRAY form (_id, _s: array<long>) — what banding
-    consumes. The wide → array round-trip used to cost 64 ``element_at``
-    projections + 16 four-column hashes of codegen per query; banding
-    on the array via ``transform``+``slice`` is one expression
-    (measured: candidates 2.1-3.3 s → 1.6-1.9 s warm at sf0.1, cold
-    fresh-JVM run 26.5 s → 15.5 s — generated-code size is the cold
-    cost)."""
-    if method == "arrow":
-        from pyspark.sql import types as T
+    """MinHash signatures in ARRAY form (_id, _s: array<long>) — what
+    banding consumes.
 
-        from .text import md5_head8_int64
+    Shingling is heavy per-row string work, and Catalyst higher-order
+    functions (split→transform(slice+array_join)→array_distinct)
+    evaluate interpreted; one numpy pass per Arrow batch (md5 base
+    hash + wrapping multiply-add seed family, both process-stable) was
+    measured ~4× faster at sf0.1 than an explode + per-seed min
+    aggregate in the JVM."""
+    from pyspark.sql import types as T
 
-        rng = np.random.default_rng(20260818)
-        mult = rng.integers(1, 2**62, n_hashes, dtype=np.int64) * 2 + 1
-        add = rng.integers(0, 2**62, n_hashes, dtype=np.int64)
-        k = k_shingle
+    from .text import md5_head8_int64
 
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def sig(texts: pd.Series) -> pd.Series:
-            # collect every shingle of the batch, hash them in ONE
-            # vectorized md5 pass (values bit-identical to the previous
-            # per-shingle hashlib loop — see md5_head8_int64), then take
-            # per-doc minima over slices. min() is order-free, so the
-            # per-doc set-iteration order changing the slice layout
-            # cannot change a signature.
-            counts = []
-            enc: list[bytes] = []
-            for t in texts:
-                words = (t or "").lower().split()
-                n = max(len(words) - k + 1, 1)
-                sh = {" ".join(words[i : i + k]) for i in range(n)}
-                counts.append(len(sh))
-                enc.extend(s.encode() for s in sh)
-            hs_all = md5_head8_int64(enc)
-            out = []
-            pos = 0
-            with np.errstate(over="ignore"):
-                for m in counts:
-                    hs = hs_all[pos : pos + m]
-                    pos += m
-                    out.append(
-                        (hs[:, None] * mult[None, :] + add[None, :]).min(axis=0)
-                    )
-            return pd.Series(out)
+    rng = np.random.default_rng(20260818)
+    mult = rng.integers(1, 2**62, n_hashes, dtype=np.int64) * 2 + 1
+    add = rng.integers(0, 2**62, n_hashes, dtype=np.int64)
+    k = k_shingle
 
-        return _spread(df).select(
-            F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_s")
-        )
-    wide = minhash_signatures(df, text_col, id_col, n_hashes, k_shingle)
-    return wide.select(
-        "_id", F.array(*[F.col(f"_h{i}") for i in range(n_hashes)]).alias("_s")
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def sig(texts: pd.Series) -> pd.Series:
+        # collect every shingle of the batch, hash them in ONE
+        # vectorized md5 pass (values bit-identical to the previous
+        # per-shingle hashlib loop — see md5_head8_int64), then take
+        # per-doc minima over slices. min() is order-free, so the
+        # per-doc set-iteration order changing the slice layout
+        # cannot change a signature.
+        counts = []
+        enc: list[bytes] = []
+        for t in texts:
+            words = (t or "").lower().split()
+            n = max(len(words) - k + 1, 1)
+            sh = {" ".join(words[i : i + k]) for i in range(n)}
+            counts.append(len(sh))
+            enc.extend(s.encode() for s in sh)
+        hs_all = md5_head8_int64(enc)
+        out = []
+        pos = 0
+        with np.errstate(over="ignore"):
+            for m in counts:
+                hs = hs_all[pos : pos + m]
+                pos += m
+                out.append(
+                    (hs[:, None] * mult[None, :] + add[None, :]).min(axis=0)
+                )
+        return pd.Series(out)
+
+    return _spread(df).select(
+        F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_s")
     )
 
 
@@ -288,14 +219,12 @@ def minhash_candidates(
     n_hashes: int = 64,
     bands: int = 16,
     k_shingle: int = 5,
-    method: str = "arrow",
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing ≥1 band bucket.
 
     rows per band (n_hashes/bands) are hashed together; two docs agreeing
     on all rows of any band collide. Output: (id_a, id_b) distinct,
-    id_a < id_b. ``method``: "arrow" (default, numpy signatures) or
-    "sql" (pure-JVM explode+agg — use when Python workers are scarce).
+    id_a < id_b.
 
     Banding runs on the signature ARRAY (one ``transform`` over band
     indices, each bucket = ``xxhash64(slice(_s, ...))``) rather than 64
@@ -312,7 +241,7 @@ def minhash_candidates(
     # |docs| × n_hashes longs is the bounded signature table; eager
     # count() barriers the cache before the join stages race for it.
     with_sig = _signature_array(
-        df, text_col, id_col, n_hashes, k_shingle, method
+        df, text_col, id_col, n_hashes, k_shingle
     ).persist()
     with_sig.count()
 
@@ -419,22 +348,6 @@ def minhash_near_dups(
     cands.count()
     return jaccard_pairs(df, cands, text_col, id_col, k_shingle).where(
         F.col("jaccard") >= threshold
-    )
-
-
-def ngram_jaccard_dups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    k_shingle: int = 3,
-    n_hashes: int = 64,
-    bands: int = 32,
-) -> DataFrame:
-    """n-gram Jaccard near-dup — same LSH scaffolding with smaller
-    shingles and more bands (higher recall for the lower threshold)."""
-    return minhash_near_dups(
-        df, text_col, id_col, threshold, n_hashes, bands, k_shingle
     )
 
 

@@ -27,18 +27,6 @@ from pyspark.sql import types as T
 
 from ..compile import CompiledCheck, compile_invariant
 
-#: Metadata contract for a multimodal asset column ``<name>_meta``.
-ASSET_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # e.g. image/png
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),  # audio/video
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -116,14 +104,6 @@ class DecoderRegistry:
         if media_type in self._decoders:
             return self._decoders[media_type]
         return fake_decode
-
-
-def real_decode(payload: bytes) -> np.ndarray:  # pragma: no cover - stub
-    """STUB: real image/audio decode requires codec libraries absent
-    from this environment."""
-    raise NotImplementedError(
-        "real decode requires PIL/librosa/ffmpeg — register a decoder"
-    )
 
 
 def fake_decode(payload: bytes, n_features: int = 16) -> np.ndarray:

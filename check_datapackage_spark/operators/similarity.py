@@ -84,16 +84,6 @@ def brute_force_topk(
     )
 
 
-def quantized_dot(a: Column, b: Column, scale: int = 1000) -> Column:
-    """Integer dot product of round(x*scale) vectors — exact in any
-    engine (no float summation order issues); used by oracle tests."""
-    qa = F.transform(a, lambda x: F.round(x.cast("double") * scale).cast("long"))
-    qb = F.transform(b, lambda x: F.round(x.cast("double") * scale).cast("long"))
-    return F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
-    )
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -152,35 +142,6 @@ def quantized_topk(
     )
     w = W.partitionBy("query_id").orderBy(F.desc("qdot"), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def hyperplane_sketch(vec: Column, dim: int, n_planes: int = 16, seed: int = 0) -> Column:
-    """Deterministic random-hyperplane sign sketch → int bucket.
-
-    Plane p, coord i weight = xxhash64(seed,p,i) mapped to ±1 — derived,
-    not sampled, so identical across runs/executors with no broadcast of
-    plane matrices. sign(Σᵢ wᵢ·vᵢ) per plane packed into an int.
-    Distinct ``seed`` values give independent tables.
-    """
-    bits = []
-    for p in range(n_planes):
-        s = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda x, i: x.cast("double")
-                * F.when(
-                    F.pmod(F.xxhash64(F.lit(seed), F.lit(p), i), 2) == 0, 1.0
-                ).otherwise(-1.0),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(s > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def multitable_sketch_udf(dim: int, n_planes: int, n_tables: int):

@@ -56,12 +56,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
 
 
-def upper_ratio(col: Column) -> Column:
-    n = F.length(col)
-    up = F.length(F.regexp_replace(col, r"[^A-Z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(up / n)
-
-
 def stopword_hits(col: Column, words: Sequence[str]) -> Column:
     """Number of occurrences of any marker word (word-bounded, lc)."""
     pat = r"\b(" + "|".join(words) + r")\b"
@@ -88,33 +82,6 @@ def quality_score(col: Column, n_chars: Optional[Column] = None) -> Column:
 
 #: Java regex ``\s`` (no UNICODE_CHARACTER_CLASS) is the ASCII set.
 _JAVA_WS = "[ \t\n\x0b\f\r]+"
-
-
-def ws_token_count_arrow(col: Column) -> Column:
-    """Arrow twin of :func:`ws_token_count` (guide §4.2) — identical
-    counts: Python splits on Java's exact ASCII ``\\s`` class, so no
-    regex-dialect or locale logic crosses the boundary."""
-    import re
-
-    from pyspark.sql import types as T
-
-    ws = re.compile(_JAVA_WS)
-
-    @F.pandas_udf(T.LongType())
-    def cnt(texts):
-        import pandas as pd
-
-        return pd.Series(
-            [
-                None
-                if t is None
-                else sum(1 for w in ws.split(t) if w != "")
-                for t in texts
-            ],
-            dtype="object",
-        ).astype("Int64")
-
-    return cnt(col)
 
 
 def token_counts_arrow(col: Column) -> Column:
@@ -450,12 +417,6 @@ def fingerprint_md5(col: Column) -> Column:
     """Content fingerprint over the normalized text (md5 — portable to
     any SQL engine for oracle checks)."""
     return F.md5(normalize_text(col))
-
-
-def fingerprint_xxh64(col: Column) -> Column:
-    """Scale-path fingerprint: xxhash64 (8-byte, cheaper shuffles than
-    md5 strings; Spark-side only)."""
-    return F.xxhash64(normalize_text(col))
 
 
 def rolling_fingerprints(col: Column, window: int = 8, step: int = 4) -> Column:

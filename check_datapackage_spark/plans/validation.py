@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..compile import CompiledCheck
 from ..issue import VIOLATION_COLUMNS, finalize_violations
+from ..jsonpath import address_regex
 from ..spec import CheckConfig, Exclusion, TableSpec
 
 
@@ -61,19 +62,6 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
         if layer:
             df = df.withColumns(layer)
     return df
-
-
-def _jsonpath_col(table: str, row_key: Optional[Column], column: Optional[str]) -> Column:
-    """Build ``$.<table>[<row_key>].<column>`` — the data-plane analog of
-    the reference's jsonpath addresses (FIXTURES.md F4 contract)."""
-    parts = [F.lit(f"$.{table}[")]
-    parts.append(
-        F.coalesce(row_key.cast("string"), F.lit("?")) if row_key is not None else F.lit("*")
-    )
-    parts.append(F.lit("]"))
-    if column:
-        parts.append(F.lit(f".{column}"))
-    return F.concat(*parts)
 
 
 #: the failing-check index array column of the fused branch
@@ -188,7 +176,7 @@ def _explode_violations(
         F.lit(f"$.{table_name}["),
         F.coalesce(F.col("_k"), F.lit("?")),
         F.lit("]"),
-        const(lambda ck: f".{ck.column}" if ck.column else ""),
+        const(_column_suffix),
     )
     # ONE flat CaseWhen (when().when()...), never nested otherwise() —
     # nesting would embed the whole previous chain per branch: O(N²)
@@ -210,6 +198,12 @@ def _explode_violations(
         F.col("_p").alias("partition"),
     ).select(VIOLATION_COLUMNS)
     return out
+
+
+def _column_suffix(ck: CompiledCheck) -> str:
+    """The address suffix after ``$.<table>[<row key>]``: ``.<column>``,
+    or nothing for a table-level check."""
+    return f".{ck.column}" if ck.column else ""
 
 
 def _empty_schema():
@@ -315,55 +309,8 @@ def summary_plan(
 # Exclusions (ref exclusion.py:50-84 → filter on the violations DataFrame)
 # ---------------------------------------------------------------------------
 
-
-#: one path segment: ``.name`` or ``[key]``
-_ANY_SEGMENT = r"(?:\.[^.\[\]]+|\[[^\]]+\])"
-
-
-def _wildcard_to_regex(path: str) -> str:
-    """Reference exclusion-path semantics (exclusion.py:81-117 +
-    tests/test_exclusion.py:87-121): EXACT match of the full path, where
-
-    * ``*`` as a name matches one segment name, ``[*]`` any index,
-    * ``..`` (recursive descent) matches any number of segments,
-    * a relative path (no leading ``$``) matches at any depth
-      (equivalent to a leading ``$..``),
-    * bare ``$`` matches only the root (never a data-plane issue).
-    """
-    if not path.startswith("$"):
-        path = "$.." + path
-    body = path[1:]
-    out = [r"^\$"]
-    i = 0
-    while i < len(body):
-        if body.startswith("..", i):
-            i += 2
-            if i < len(body) and body[i] == "*" and i + 1 == len(body):
-                out.append(_ANY_SEGMENT + "+")  # ..* → any descendant
-                i += 1
-            else:
-                out.append(_ANY_SEGMENT + "*")
-                # the following name/bracket is parsed by the next loop
-                # turns; re-add the implicit '.' unless a '[' follows
-                if i < len(body) and body[i] not in ".[":
-                    body = body[:i] + "." + body[i:]
-        elif body[i] == ".":
-            j = i + 1
-            k = j
-            while k < len(body) and body[k] not in ".[":
-                k += 1
-            name = body[j:k]
-            out.append(r"\.[^.\[\]]+" if name == "*" else r"\." + re.escape(name))
-            i = k
-        elif body[i] == "[":
-            k = body.index("]", i)
-            idx = body[i + 1 : k]
-            out.append(r"\[[^\]]+\]" if idx == "*" else r"\[" + re.escape(idx) + r"\]")
-            i = k + 1
-        else:  # stray token (shouldn't happen on validated paths)
-            out.append(re.escape(body[i]))
-            i += 1
-    return "".join(out) + "$"
+#: the row key of a check's generic address in prune_excluded_checks
+_ANY_ROW = "\x00"
 
 
 def exclusion_filter(violations: DataFrame, exclusions: Sequence[Exclusion]) -> DataFrame:
@@ -380,7 +327,7 @@ def exclusion_filter(violations: DataFrame, exclusions: Sequence[Exclusion]) -> 
             continue
         sub: list[Column] = []
         if ex.jsonpath is not None:
-            sub.append(F.col("jsonpath").rlike(_wildcard_to_regex(ex.jsonpath)))
+            sub.append(F.col("jsonpath").rlike(address_regex(ex.jsonpath)))
         if ex.type is not None:
             sub.append(F.col("type") == ex.type)
         cond = sub[0]
@@ -404,39 +351,33 @@ def prune_excluded_checks(
     compute excluded checks").
 
     A check is dropped from the violations plan when some exclusion is
-    guaranteed to match EVERY violation it could emit:
+    guaranteed to match EVERY violation it could emit: its type (if
+    set) is the check's issue type, and its jsonpath (if set) matches
+    the check's generic address ``$.<table>[<any row>].<column>`` —
+    e.g. ``$.<table>[*].<col>``, ``..<col>``, ``$.<table>[*]['a','b']``.
+    The any-row key is a character no row-key or index selector
+    matches, so only ``[*]`` and ``..`` cover it.
 
-    * ``Exclusion(type=T)`` with no jsonpath → drops all checks whose
-      issue type is T;
-    * ``Exclusion(jsonpath='$.<table>[*].<col>')`` (whole-column
-      pattern, optional type) → drops matching checks on that column.
-
-    Anything subtler (row-specific paths, recursive descent) stays in
-    the plan and is filtered post-hoc by :func:`exclusion_filter` —
-    pruning is an optimization, never a semantic change. The summary
-    matrix intentionally keeps all checks (it reports fail counts, not
-    issues).
+    Row-specific paths stay in the plan and are filtered post-hoc by
+    :func:`exclusion_filter` — pruning is an optimization, never a
+    semantic change. The summary matrix intentionally keeps all checks
+    (it reports fail counts, not issues).
     """
-    out = []
-    for ck in checks:
-        dropped = False
-        for ex in exclusions:
-            if ex.is_empty():
-                continue
-            type_covers = ex.type is None or ex.type == ck.issue_type
-            if ex.jsonpath is None:
-                path_covers = ex.type is not None  # bare empty handled above
-            else:
-                path_covers = ck.column is not None and ex.jsonpath in (
-                    f"$.{table_name}[*].{ck.column}",
-                    f"..{ck.column}",
-                )
-            if type_covers and path_covers:
-                dropped = True
-                break
-        if not dropped:
-            out.append(ck)
-    return out
+    covering = [
+        (ex.type, ex.jsonpath and re.compile(address_regex(ex.jsonpath)))
+        for ex in exclusions
+        if not ex.is_empty()
+    ]
+
+    def covered(ck: CompiledCheck) -> bool:
+        address = f"$.{table_name}[{_ANY_ROW}]{_column_suffix(ck)}"
+        return any(
+            (t is None or t == ck.issue_type)
+            and (p is None or p.match(address) is not None)
+            for t, p in covering
+        )
+
+    return [ck for ck in checks if not covered(ck)]
 
 
 def cap_examples(
@@ -604,6 +545,8 @@ def check_table(
       6. dedup + canonical order (ref check.py:279)
     """
     from ..compile import compile_table_checks, schema_conforms
+    from ..extensions import compile_extensions
+    from ..operators.dedup import _spread
     from ..operators.referential import referential_violations
     from ..operators.uniqueness import uniqueness_violations
     from ..spec import validate_spec, validate_spec_against
@@ -625,18 +568,12 @@ def check_table(
     # partitions) would run the whole fused plan through one task —
     # measured 20-30 s for 15 jsonSchema checks over 100k one-partition
     # rows vs ~2 s spread. A production 10^12-row table always has
-    # orders of magnitude more partitions than cores, so this guard
-    # never fires there; locally the round-robin shuffle is small by
-    # construction. Gated (ADVICE r3): opt out via
-    # ``CheckConfig(repartition_small_inputs=False)`` to preserve
-    # caller-provided co-partitioning/bucketing, and skipped entirely
-    # when there is no primary key — the positional jsonpath fallback
-    # (monotonically_increasing_id) must stay tied to the INPUT layout,
-    # not a round-robin shuffle's.
-    if config.repartition_small_inputs and row_key is not None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+    # orders of magnitude more partitions than cores, so this never
+    # fires there. Skipped when there is no primary key: the positional
+    # jsonpath fallback (monotonically_increasing_id) must stay tied to
+    # the INPUT layout, not a round-robin shuffle's.
+    if row_key is not None:
+        df = _spread(df)
 
     spec_issues = list(validate_spec(spec, version=config.version))
     spec_issues.extend(schema_conforms(df, spec))
@@ -647,20 +584,11 @@ def check_table(
 
     # extra_checks accepts CompiledCheck objects AND raw extension
     # objects (CustomCheck/RequiredCheck — ref check(extensions=...),
-    # check.py:250); the latter compile here against the physical
-    # schema so jsonpath targets resolve.
-    extra: Optional[list[CompiledCheck]] = None
-    if extra_checks:
-        extra = []
-        for x in extra_checks:
-            if isinstance(x, CompiledCheck):
-                extra.append(x)
-            elif hasattr(x, "compile_all"):
-                extra.extend(x.compile_all(df.schema))
-            elif hasattr(x, "compile"):
-                extra.append(x.compile())
-            else:
-                raise TypeError(f"not a check or extension: {x!r}")
+    # check.py:250); those and config.extensions compile here against
+    # the physical schema so jsonpath targets resolve.
+    extra = compile_extensions(
+        [*(extra_checks or ()), *config.extensions], schema=df.schema
+    )
     checks = compile_table_checks(spec, extra=extra, schema=df.schema)
     # dotted column paths (nested RequiredCheck targets) are runnable
     # when their ROOT column exists

@@ -44,16 +44,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (SQL entry path)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # --- spec sources (driver-side, S1-S3) --------------------------------------
 
 
@@ -109,17 +99,6 @@ def read_spec(
                 return TableSpec.from_dict(r)
         raise KeyError(f"no resource named {resource!r} in {address}")
     return TableSpec.from_dict(resources[0])
-
-
-def read_all_specs(source: str) -> dict[str, TableSpec]:
-    address = parse_source(source)
-    with open(address) as f:
-        doc = json.load(f)
-    out = {}
-    for r in doc.get("resources", []):
-        spec = TableSpec.from_dict(r)
-        out[spec.name] = spec
-    return out
 
 
 # --- sinks (S5-S7) -----------------------------------------------------------

@@ -21,6 +21,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional, Union
 
+from .jsonpath import address_regex, parse as parse_jsonpath
+
 #: The 15 Table Schema field types (ref constants.py:12-28).
 FIELD_TYPES = [
     "string",
@@ -54,9 +56,6 @@ RANGE_TYPES = {
 
 #: Types that accept length constraints (string = chars, rest = size()).
 LENGTH_TYPES = {"string", "object", "array", "geojson"}
-
-#: String formats with engine support (ref schema oneOf[0] formats).
-STRING_FORMATS = {"default", "email", "uri", "binary", "uuid"}
 
 #: Error-group keywords (ref constants.py:5).
 GROUP_ERRORS = ["oneOf", "anyOf", "allOf"]
@@ -278,23 +277,15 @@ class TableSpec:
 
 def is_jsonpath(path: str) -> bool:
     """Syntactic jsonpath validation (ref ``_is_jsonpath``,
-    internals.py:49-67): parseable path — relative paths are allowed
-    (the reference accepts ``created``, ``contributors[0].path``) — but
-    the ``&`` intersection operator is rejected at config-build time
-    exactly like the reference."""
-    if not isinstance(path, str) or not path:
+    internals.py:49-67): the path parses in the one grammar of
+    :mod:`.jsonpath` — relative paths are allowed (the reference accepts
+    ``created``, ``contributors[0].path``), the ``&`` intersection
+    operator is rejected exactly like the reference."""
+    try:
+        parse_jsonpath(path)
+    except ValueError:
         return False
-    if "&" in path:
-        return False
-    depth = 0
-    for ch in path:
-        if ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
+    return True
 
 
 @dataclass(frozen=True)
@@ -303,17 +294,25 @@ class Exclusion:
 
     Within one exclusion: AND of the set fields; across exclusions: OR.
     An empty exclusion matches nothing (ref exclusion.py:50-78).
-    ``jsonpath`` supports ``*`` wildcards like the reference's
-    wildcard-path matching (exclusion.py:81-84); syntax is validated at
-    construction (P4, ref internals.py:49-70 pydantic Annotated type).
+    ``jsonpath`` selects violation addresses with the wildcard, union,
+    descent and relative forms of :func:`.jsonpath.address_regex`
+    (ref exclusion.py:81-84). It is validated at construction (P4, ref
+    internals.py:49-70 pydantic Annotated type): a path outside the
+    grammar, or a slice/filter that cannot address a violation row,
+    raises :class:`SpecTypeError` instead of silently matching nothing.
     """
 
     jsonpath: Optional[str] = None
     type: Optional[str] = None
 
     def __post_init__(self) -> None:
-        if self.jsonpath is not None and not is_jsonpath(self.jsonpath):
-            raise SpecTypeError(f"invalid jsonpath: {self.jsonpath!r}")
+        if self.jsonpath is not None:
+            try:
+                address_regex(self.jsonpath)
+            except ValueError as e:
+                raise SpecTypeError(
+                    f"invalid jsonpath: {self.jsonpath!r} ({e})"
+                ) from None
 
     def is_empty(self) -> bool:
         return self.jsonpath is None and self.type is None
@@ -325,7 +324,9 @@ class CheckConfig:
 
     ``strict`` enables the strict-profile extra checks (ref
     check.py:516-538); ``exclusions`` filter emitted violations;
-    ``extensions`` append user checks (pandas-UDF surface).
+    ``extensions`` (CustomCheck/RequiredCheck) append user checks, which
+    :func:`~.plans.validation.check_table` compiles against the table's
+    schema (ref check(extensions=...), check.py:250).
     """
 
     strict: bool = False
@@ -338,12 +339,6 @@ class CheckConfig:
     #: max violation example rows persisted per (check, partition);
     #: summaries are always complete (SURVEY §4 short-circuit note).
     max_examples_per_check: Optional[int] = None
-    #: spread under-split inputs (fewer partitions than cores) across
-    #: the cluster before the fused scan. Opt out when the caller
-    #: pre-partitioned/bucketed the input deliberately; it is skipped
-    #: automatically when the spec has no primary key (positional
-    #: jsonpath addressing must stay tied to the input layout).
-    repartition_small_inputs: bool = True
 
     def __post_init__(self) -> None:
         if self.version not in ("v1", "v2"):

@@ -77,6 +77,11 @@ PATHS = [
         ("$.t[*].tokens[*].v", 1),
         ("$.t[doc-9].n_tok", 0),
         ("tokens", 0),  # no issue exactly AT ...tokens (exact match)
+        # quoted names and unions read like their dotted forms
+        ("$.t[*]['n_tok']", 2),
+        ('$.t[*]["n_tok"]', 2),
+        ("$.t[*]['n_tok','source']", 3),
+        ("$.t[*].n_tok | $.t[*].source", 3),
     ],
 )
 def test_exclusion_path_matrix(spark, pattern, n_excluded):
@@ -89,3 +94,42 @@ def test_exclusion_path_matrix(spark, pattern, n_excluded):
     )
     out = exclusion_filter(df, [Exclusion(jsonpath=pattern)])
     assert out.count() == len(PATHS) - n_excluded, pattern
+
+
+@pytest.mark.parametrize(
+    "pattern", ["$.t[0:2].n_tok", "$.t[1:].n_tok", "$.t[?(@.n_tok > 1)]"]
+)
+def test_exclusion_slice_or_filter_raises_at_build(pattern):
+    """A form that cannot address a violation row must fail loudly at
+    config-build time, never silently exclude nothing."""
+    with pytest.raises(SpecTypeError, match="invalid jsonpath"):
+        Exclusion(jsonpath=pattern)
+
+
+def test_name_union_whole_column_exclusion_prunes_both_checks(spark):
+    from check_datapackage_spark.compile import CompiledCheck
+    from check_datapackage_spark.plans.validation import prune_excluded_checks
+
+    def check(column):
+        return CompiledCheck(
+            name=f"{column}.minimum",
+            column=column,
+            issue_type="minimum",
+            message="m",
+            ok=F.col(column) >= 0,
+            instance=F.col(column).cast("string"),
+        )
+
+    checks = [check("n_tok"), check("source"), check("other")]
+    for pattern in (
+        "$.t[*]['n_tok','source']",
+        "$.t[*].n_tok | $.t[*].source",
+        "..['n_tok','source']",
+    ):
+        kept = prune_excluded_checks(checks, [Exclusion(jsonpath=pattern)], "t")
+        assert [c.column for c in kept] == ["other"], pattern
+    # a row-specific union still needs the post-filter
+    kept = prune_excluded_checks(
+        checks, [Exclusion(jsonpath="$.t[doc-1]['n_tok','source']")], "t"
+    )
+    assert kept == checks

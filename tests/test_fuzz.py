@@ -71,7 +71,7 @@ def test_integer_conformance_equals_python(spark):
 
 def test_exclusion_exact_path_always_matches(spark):
     """Property: excluding a violation by its own jsonpath removes it."""
-    from check_datapackage_spark.plans.validation import _wildcard_to_regex
+    from check_datapackage_spark.jsonpath import address_regex
     import re
 
     for _ in range(200):
@@ -83,4 +83,4 @@ def test_exclusion_exact_path_always_matches(spark):
             else:
                 parts.append(f"[{rng.randint(0, 99)}]")
         path = "".join(parts)
-        assert re.match(_wildcard_to_regex(path), path), path
+        assert re.match(address_regex(path), path), path

@@ -97,3 +97,45 @@ def test_check_package_descriptor_gate(spark):
 def test_check_package_requires_some_data_source(spark):
     with pytest.raises(ValueError):
         check_package(spark, {"resources": []})
+
+
+def test_config_extensions_apply_in_check_table_and_check_package(spark):
+    """``CheckConfig.extensions`` compile inside check_table, so a
+    RequiredCheck given through ``config=`` finds the same violations as
+    through ``extra_checks=`` — in check_table and in check_package."""
+    from check_datapackage_spark import CheckConfig, RequiredCheck, TableSpec, check_table
+
+    resource = {
+        "name": "docs",
+        "path": "docs.parquet",
+        "schema": {
+            "fields": [
+                {"name": "id", "type": "integer"},
+                {"name": "title", "type": "string"},
+            ],
+            "primaryKey": ["id"],
+        },
+    }
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, None)], "id int, title string"
+    )
+    spec = TableSpec.from_dict(resource)
+    config = CheckConfig(extensions=(RequiredCheck(jsonpath="$.title"),))
+
+    def required_keys(v):
+        return sorted(
+            r["row_key"] for r in v.where("type = 'required'").collect()
+        )
+
+    via_extra = check_table(df, spec, extra_checks=list(config.extensions))
+    assert required_keys(via_extra.violations) == ["2", "3"]
+    via_config = check_table(df, spec, config=config)
+    assert required_keys(via_config.violations) == ["2", "3"]
+
+    pkg = check_package(
+        spark,
+        {"name": "p", "resources": [resource]},
+        tables={"docs": df},
+        config=config,
+    )
+    assert required_keys(pkg.violations()) == ["2", "3"]
