@@ -134,10 +134,11 @@ def _executed_once(violations):
         violations.unpersist()
 
 
-def _report(v, n: int, results: list, issues: list, audit) -> int:
-    """Sink, summaries and sample of one run; 1 when it failed."""
+def _report(v, n: int, results: list, issues: list, audit, sunk=None) -> int:
+    """Sink, summaries and sample of one run; 1 when it failed. The sink
+    gets ``sunk`` (the same rows unordered) when given, else ``v``."""
     if audit and v is not None:
-        write_violations(v, audit)
+        write_violations(v if sunk is None else sunk, audit)
     for name, r in results:
         if name is not None:
             print(f"== {name}")
@@ -344,9 +345,14 @@ def main(argv=None) -> int:
                 explain(all_issues, subject="datapackage.json"),
                 file=sys.stderr,
             )
-        with _executed_once(res.violations):
+        # the count and the sink read the unordered rows; only the
+        # sample is sorted (a top-20 over the cached rows)
+        with _executed_once(res.unordered_violations):
             n = res.violation_count()
-            rc = _report(res.violations, n, [(None, res)], all_issues, args.audit)
+            rc = _report(
+                res.violations, n, [(None, res)], all_issues, args.audit,
+                sunk=res.unordered_violations,
+            )
         return rc if args.error else 0
     except DataPackageError:
         return 1

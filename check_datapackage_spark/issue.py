@@ -24,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,10 +99,16 @@ DEDUP_KEY = ["jsonpath", "type", "message"]
 
 
 def finalize_violations(violations: DataFrame) -> DataFrame:
-    """DataFrame analog of ``sorted(set(issues))`` (ref check.py:279).
+    """DataFrame analog of ``sorted(set(issues))`` (ref check.py:279):
+    :func:`dedup_violations`, then :func:`order_violations`."""
+    return order_violations(dedup_violations(violations))
 
-    One-row-per-Issue-equality-key then canonical order, via a window
-    ``row_number`` instead of ``dropDuplicates``: dedup-by-subset-key
+
+def dedup_violations(violations: DataFrame) -> DataFrame:
+    """One row per Issue-equality key ``(jsonpath, type, message)``, in
+    no particular order — what a sink needs.
+
+    A window ``row_number`` instead of ``dropDuplicates``: dedup-by-subset-key
     rewrites to first() aggregates whose var-width string buffers make
     HashAggregateExec ineligible — the planner emits a SortAggregate
     PAIR (sort, partial agg, exchange, sort, final agg), i.e. two full
@@ -124,8 +130,24 @@ def finalize_violations(violations: DataFrame) -> DataFrame:
         violations.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-        .orderBy(*[F.col(c) for c in key])
     )
+
+
+def order_violations(violations: DataFrame) -> DataFrame:
+    """The reference's canonical issue order: by ``(jsonpath, type,
+    message)`` — one global sort (a range-partition sample job plus an
+    exchange)."""
+    key = [c for c in DEDUP_KEY if c in violations.columns]
+    return violations.orderBy(*[F.col(c) for c in key]) if key else violations
+
+
+def address_key(key: Column) -> Column:
+    """A row key as written between the brackets of a violation address
+    ``$.<table>[<key>]...``: backslash and ``]`` are backslash-escaped, so
+    the bracket closes where the key ends and ``[*]``/``..``
+    (:func:`~.jsonpath.address_regex`) select every key, the empty one
+    included. Keys without either character are written unchanged."""
+    return F.regexp_replace(key, r"([\\\]])", r"\\$1")
 
 
 def issues_from_rows(rows: list) -> list[Issue]:

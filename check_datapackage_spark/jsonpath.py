@@ -143,7 +143,9 @@ def _bracket(body: str, i: int, alt: str) -> tuple[tuple, int]:
 # --- violation addresses -----------------------------------------------------
 
 _DOT_NAME = r"\.[^.\[\]]+"
-_BRACKET = r"\[[^\]]+\]"
+#: a bracket segment: a row key (``]`` and backslash escaped, see
+#: ``issue.address_key``; possibly empty) or an index
+_BRACKET = r"\[(?:[^\]\\]|\\.)*\]"
 _SEGMENT = rf"(?:{_DOT_NAME}|{_BRACKET})"
 
 

@@ -19,7 +19,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..issue import VIOLATION_COLUMNS
+from ..issue import VIOLATION_COLUMNS, address_key
 
 
 def missing_keys(
@@ -95,7 +95,7 @@ def referential_violations(
     )
     return misses.select(
         F.concat(
-            F.lit(f"$.{table_name}["), rk, F.lit(f"].{col_name}")
+            F.lit(f"$.{table_name}["), address_key(rk), F.lit(f"].{col_name}")
         ).alias("jsonpath"),
         F.lit("foreign-key").alias("type"),
         F.lit(

@@ -28,7 +28,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..issue import VIOLATION_COLUMNS
+from ..issue import VIOLATION_COLUMNS, address_key
 
 
 def dup_key_counts(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -84,7 +84,7 @@ def uniqueness_violations(
     dups = dup_key_counts_salted(df, keys) if salted else dup_key_counts(df, keys)
     key_str = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
     col_name = ",".join(keys)
-    jp = F.concat(F.lit(f"$.{table_name}["), key_str, F.lit(f"].{col_name}"))
+    jp = F.concat(F.lit(f"$.{table_name}["), address_key(key_str), F.lit(f"].{col_name}"))
     if order_by_jsonpath:
         # r6 (guide §2.3): build jsonpath ONCE on the narrow key frame
         # and sort on it BEFORE the other violation strings are built —

@@ -19,6 +19,11 @@ does the table analog in one scan:
   builds it lazily: one ``groupBy(partition).agg`` of
   ``sum(when(~ok, 1))`` per check, a light shuffle of |partitions| ×
   |checks| longs regardless of table size.
+* **compile once, apply per frame**: :class:`ValidationPlan` holds
+  everything that does not depend on the rows (spec issues, compiled
+  and pruned checks, every Column expression of the fused branch);
+  ``apply`` only builds DataFrames. :func:`check_table` is the two in a
+  row; a stream reuses one plan while its batch schema holds.
 
 Never ``limit`` violations (mirror the reference's no-short-circuit
 rule, SURVEY §4); optionally cap *persisted examples* per check with a
@@ -29,15 +34,35 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import CompiledCheck
-from ..issue import VIOLATION_COLUMNS, finalize_violations
+from ..issue import (
+    VIOLATION_FULL_SCHEMA,
+    address_key,
+    dedup_violations,
+    finalize_issues,
+    order_violations,
+)
 from ..jsonpath import address_regex
 from ..spec import CheckConfig, Exclusion, TableSpec
+
+
+def _let_layers(checks: Sequence[CompiledCheck]) -> list[dict]:
+    """The checks' :attr:`CompiledCheck.lets`, merged per layer."""
+    layers: list[dict] = []
+    for ck in checks:
+        for i, layer in enumerate(getattr(ck, "lets", ()) or ()):
+            if not layer:
+                continue
+            while len(layers) <= i:
+                layers.append({})
+            layers[i].update(layer)
+    return [layer for layer in layers if layer]
 
 
 def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame:
@@ -50,17 +75,8 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
     compiler, so merging across checks/fields is collision-free, and
     Catalyst's column pruning drops any slot the surviving checks don't
     reference — over-registration costs nothing at runtime."""
-    layers: list[dict] = []
-    for ck in checks:
-        for i, layer in enumerate(getattr(ck, "lets", ()) or ()):
-            if not layer:
-                continue
-            while len(layers) <= i:
-                layers.append({})
-            layers[i].update(layer)
-    for layer in layers:
-        if layer:
-            df = df.withColumns(layer)
+    for layer in _let_layers(checks):
+        df = df.withColumns(layer)
     return df
 
 
@@ -68,17 +84,122 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
 _FAILS = "__cdp_fails"
 
 
-def _with_failing_checks(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame:
-    """``df`` plus the checks' shared columns and ``__cdp_fails``: the
-    indices of the checks a row fails (``array<int>``, empty when it
-    passes). This is the fused branch's only per-row work: each ``ok``
-    predicate is evaluated once, here; the violation payload is built
-    after the explode, on violating rows only, and the observed summary
-    reads its fail counts from this same array."""
-    fails = F.array_compact(
-        F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(checks)])
-    )
-    return bind_check_lets(df, checks).withColumn(_FAILS, fails)
+class _FusedBranch:
+    """The fused branch of ``checks`` as Column expressions that do not
+    depend on the input frame: the let layers, the failing-check array
+    and the violation payload. Built once; :meth:`frame` and
+    :meth:`violations` only build DataFrames, so a plan reused across
+    micro-batches builds the expressions once.
+
+    Only the checks at the indices in ``emit`` are exploded; the array
+    (and an observed summary reading it) covers all of ``checks``."""
+
+    def __init__(
+        self,
+        checks: Sequence[CompiledCheck],
+        emit: Sequence[int],
+        table_name: str,
+        row_key: Optional[Union[str, list]],
+        partition: Optional[str],
+    ):
+        self.checks = list(checks)
+        self.emit_checks = [self.checks[i] for i in emit]
+        self.lets = _let_layers(self.checks)
+        # the per-row work is ONLY the ok predicates: the array carries
+        # the indices of failing checks (array<int>), nothing else
+        self.fails = F.array_compact(
+            F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(self.checks)])
+        )
+
+        if row_key is None:
+            key_col = F.monotonically_increasing_id().cast("string")
+        elif isinstance(row_key, (list, tuple)):
+            key_col = F.concat_ws("|", *[F.col(k).cast("string") for k in row_key])
+        else:
+            key_col = F.col(row_key)
+        part_col = F.col(partition).cast("string") if partition else F.lit(None).cast("string")
+        fails = F.col(_FAILS)
+        if len(emit) < len(self.checks):
+            fails = F.filter(fails, lambda i: i.isin(*emit))
+        # No explicit pre-filter on size(_v): explode (non-outer) already
+        # drops empty arrays. Catalyst's InferFiltersFromGenerate would add
+        # a size(_v) > 0 Filter that DUPLICATES the array expression on
+        # every row (13× measured with interpreted variant checks) — the
+        # rule is excluded session-wide (session.exclude_infer_filters).
+        self._head = [key_col.cast("string").alias("_k"), part_col.alias("_p")]
+        self._explode = F.explode(fails).alias("_ci")
+        #: input columns the instances reference, per input schema — see
+        #: :meth:`violations`
+        self._carry: Optional[list[Column]] = None
+
+        # All payload — jsonpath, constants, the instance value — is
+        # resolved AFTER the explode, i.e. on violating rows only. The
+        # previous shape (full payload structs inside the array)
+        # re-evaluated 15 jsonpath concats + 15 instance expressions +
+        # any staging when-chains per row inside one giant interpreted
+        # expression (variant checks disable codegen): q38 measured
+        # 14.2 s per execution vs ~2 s with this emission at sf0.1.
+        idx = F.col("_ci") + 1  # element_at is 1-based
+
+        def const(fn) -> Column:
+            """Per-check constant via literal-array lookup (one
+            expression, no N-branch CASE)."""
+            return F.element_at(F.array(*[F.lit(fn(ck)) for ck in self.checks]), idx)
+
+        # jsonpath = $.<table>[<key>]<.column-suffix> — suffix precomputed
+        # per check so table-level checks (column None) get no suffix
+        jsonpath = F.concat(
+            F.lit(f"$.{table_name}["),
+            F.coalesce(address_key(F.col("_k")), F.lit("?")),
+            F.lit("]"),
+            const(_column_suffix),
+        )
+        # ONE flat CaseWhen (when().when()...), never nested otherwise() —
+        # nesting would embed the whole previous chain per branch: O(N²)
+        # expression size, measured 90 s vs ~3 s on the 29-check q07
+        instance: Optional[Column] = None
+        for i in emit:
+            branch = (F.col("_ci") == i, self.checks[i].instance.cast("string"))
+            instance = F.when(*branch) if instance is None else instance.when(*branch)
+        instance = instance.otherwise(F.lit(None).cast("string"))
+        self._payload = [
+            jsonpath.alias("jsonpath"),
+            const(lambda ck: ck.issue_type).alias("type"),
+            const(lambda ck: ck.message).alias("message"),
+            instance.alias("instance"),
+            const(lambda ck: ck.name).alias("check"),
+            const(lambda ck: ck.column).cast("string").alias("column"),
+            F.col("_k").alias("row_key"),
+            F.col("_p").alias("partition"),
+        ]
+
+    def frame(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the checks' shared columns and ``__cdp_fails``:
+        the indices of the checks a row fails (``array<int>``, empty when
+        it passes). Each ``ok`` predicate is evaluated once, here; the
+        observed summary reads its fail counts from this same array."""
+        for layer in self.lets:
+            df = df.withColumns(layer)
+        return df.withColumn(_FAILS, self.fails)
+
+    def violations(self, framed: DataFrame) -> DataFrame:
+        """Violation rows (VIOLATION_FULL_SCHEMA) of a :meth:`frame`.
+
+        The post-explode payload may reference ANY input column
+        (cross-column invariants, column=None checks — the full
+        compile_invariant contract). The referenced columns come from
+        one driver-side analysis of the instances (~50 ms, no
+        execution) on the first frame; the branch belongs to one input
+        schema, so later frames reuse them. Carrying them through the
+        Generate is free (Generate appends to the input row) and keeps
+        column pruning intact — unreferenced table columns never leave
+        the scan."""
+        if self._carry is None:
+            self._carry = [
+                F.col(c) for c in _instance_carry_columns(framed, self.emit_checks)
+            ]
+        exploded = framed.select(*self._head, *self._carry, self._explode)
+        return exploded.select(*self._payload)
 
 
 def violations_plan(
@@ -98,118 +219,15 @@ def violations_plan(
     Issue-contract dedup would collapse them).
     """
     if not checks:
-        return df.sparkSession.createDataFrame([], schema=_empty_schema())
-    return _explode_violations(
-        _with_failing_checks(df, checks),
-        checks,
-        range(len(checks)),
-        table_name,
-        row_key,
-        partition,
-    )
-
-
-def _explode_violations(
-    framed: DataFrame,
-    checks: Sequence[CompiledCheck],
-    emit: Sequence[int],
-    table_name: str,
-    row_key: Optional[Union[str, list]],
-    partition: Optional[str],
-) -> DataFrame:
-    """Violation rows from a :func:`_with_failing_checks` frame of
-    ``checks``; only the indices in ``emit`` are exploded."""
-    if row_key is None:
-        key_col = F.monotonically_increasing_id().cast("string")
-    elif isinstance(row_key, (list, tuple)):
-        key_col = F.concat_ws("|", *[F.col(k).cast("string") for k in row_key])
-    else:
-        key_col = F.col(row_key)
-    part_col = F.col(partition).cast("string") if partition else F.lit(None).cast("string")
-
-    # The per-row work is ONLY the ok predicates: the array carries the
-    # indices of failing checks (array<int>), nothing else. All payload
-    # — jsonpath, constants, the instance value — is resolved AFTER the
-    # explode, i.e. on violating rows only. The previous shape (full
-    # payload structs inside the array) re-evaluated 15 jsonpath
-    # concats + 15 instance expressions + any staging when-chains per
-    # row inside one giant interpreted expression (variant checks
-    # disable codegen): q38 measured 14.2 s per execution vs ~2 s with
-    # this emission at sf0.1.
-    fails = F.col(_FAILS)
-    if len(emit) < len(checks):
-        fails = F.filter(fails, lambda i: i.isin(*emit))
-
-    # Columns the post-explode payload references: derived from the
-    # ``instance`` expressions THEMSELVES (one driver-side analysis of
-    # all instances against df — ~50 ms, no execution), so ``instance``
-    # may reference ANY input column (cross-column invariants,
-    # column=None checks — the full compile_invariant contract), not
-    # just its check's declared column root. Carrying the referenced
-    # columns through the Generate is free (Generate appends to the
-    # input row) and keeps column pruning intact — unreferenced table
-    # columns never leave the scan.
-    carry = _instance_carry_columns(framed, [checks[i] for i in emit])
-
-    # No explicit pre-filter on size(_v): explode (non-outer) already
-    # drops empty arrays. Catalyst's InferFiltersFromGenerate would add
-    # a size(_v) > 0 Filter that DUPLICATES the array expression on
-    # every row (13× measured with interpreted variant checks) — the
-    # rule is excluded session-wide (session.exclude_infer_filters).
-    exploded = framed.select(
-        key_col.cast("string").alias("_k"),
-        part_col.alias("_p"),
-        *[F.col(c) for c in carry],
-        F.explode(fails).alias("_ci"),
-    )
-
-    idx = F.col("_ci") + 1  # element_at is 1-based
-
-    def const(fn) -> Column:
-        """Per-check constant via literal-array lookup (one expression,
-        no N-branch CASE)."""
-        return F.element_at(F.array(*[F.lit(fn(ck)) for ck in checks]), idx)
-
-    # jsonpath = $.<table>[<key>]<.column-suffix> — suffix precomputed
-    # per check so table-level checks (column None) get no suffix
-    jsonpath = F.concat(
-        F.lit(f"$.{table_name}["),
-        F.coalesce(F.col("_k"), F.lit("?")),
-        F.lit("]"),
-        const(_column_suffix),
-    )
-    # ONE flat CaseWhen (when().when()...), never nested otherwise() —
-    # nesting would embed the whole previous chain per branch: O(N²)
-    # expression size, measured 90 s vs ~3 s on the 29-check q07
-    instance: Optional[Column] = None
-    for i in emit:
-        branch = (F.col("_ci") == i, checks[i].instance.cast("string"))
-        instance = F.when(*branch) if instance is None else instance.when(*branch)
-    instance = instance.otherwise(F.lit(None).cast("string"))
-
-    out = exploded.select(
-        jsonpath.alias("jsonpath"),
-        const(lambda ck: ck.issue_type).alias("type"),
-        const(lambda ck: ck.message).alias("message"),
-        instance.alias("instance"),
-        const(lambda ck: ck.name).alias("check"),
-        const(lambda ck: ck.column).cast("string").alias("column"),
-        F.col("_k").alias("row_key"),
-        F.col("_p").alias("partition"),
-    ).select(VIOLATION_COLUMNS)
-    return out
+        return df.sparkSession.createDataFrame([], schema=VIOLATION_FULL_SCHEMA)
+    branch = _FusedBranch(checks, range(len(checks)), table_name, row_key, partition)
+    return branch.violations(branch.frame(df))
 
 
 def _column_suffix(ck: CompiledCheck) -> str:
     """The address suffix after ``$.<table>[<row key>]``: ``.<column>``,
     or nothing for a table-level check."""
     return f".{ck.column}" if ck.column else ""
-
-
-def _empty_schema():
-    from ..issue import VIOLATION_FULL_SCHEMA
-
-    return VIOLATION_FULL_SCHEMA
 
 
 def _instance_carry_columns(
@@ -292,16 +310,16 @@ def summary_plan(
         )
     wide = df.groupBy(*group).agg(*aggs)
 
-    # unpivot via stack — stays distributed, no collect
-    n = len(checks)
-    stack_args = []
+    # unpivot via stack — stays distributed, no collect; names are
+    # literals, never pasted into SQL text
+    stack_args: list[Column] = []
     for i, ck in enumerate(checks):
-        stack_args.append(f"'{ck.name}', '{ck.column or ''}', '{ck.issue_type}', _c{i}")
-    stack_expr = f"stack({n}, {', '.join(stack_args)}) as (check, column, type, fail_count)"
+        stack_args += [F.lit(ck.name), F.lit(ck.column or ""), F.lit(ck.issue_type), F.col(f"_c{i}")]
     cols = (["partition"] if partition else []) + ["n_rows"]
-    long = wide.selectExpr(*cols, stack_expr).withColumn(
-        "passed", F.col("fail_count") == 0
-    )
+    long = wide.select(
+        *cols,
+        F.stack(F.lit(len(checks)), *stack_args).alias("check", "column", "type", "fail_count"),
+    ).withColumn("passed", F.col("fail_count") == 0)
     return long
 
 
@@ -321,6 +339,13 @@ def exclusion_filter(violations: DataFrame, exclusions: Sequence[Exclusion]) -> 
     vectorized predicate — no join needed since exclusion lists are tiny
     and driver-resident.
     """
+    kept = _kept_by_exclusions(exclusions)
+    return violations if kept is None else violations.where(kept)
+
+
+def _kept_by_exclusions(exclusions: Sequence[Exclusion]) -> Optional[Column]:
+    """The predicate on violation rows that no exclusion matches; None
+    when no exclusion can match anything."""
     conds: list[Column] = []
     for ex in exclusions:
         if ex.is_empty():
@@ -330,16 +355,8 @@ def exclusion_filter(violations: DataFrame, exclusions: Sequence[Exclusion]) -> 
             sub.append(F.col("jsonpath").rlike(address_regex(ex.jsonpath)))
         if ex.type is not None:
             sub.append(F.col("type") == ex.type)
-        cond = sub[0]
-        for s in sub[1:]:
-            cond = cond & s
-        conds.append(cond)
-    if not conds:
-        return violations
-    matched = conds[0]
-    for c in conds[1:]:
-        matched = matched | c
-    return violations.where(~matched)
+        conds.append(reduce(Column.__and__, sub))
+    return ~reduce(Column.__or__, conds) if conds else None
 
 
 def prune_excluded_checks(
@@ -412,23 +429,26 @@ class _ObservedSummary:
     failing-check array, not the ``ok`` predicates, which would evaluate
     every check a second time per row."""
 
-    def __init__(self, checks: Sequence[CompiledCheck]):
+    def __init__(self, checks: Sequence[CompiledCheck], framed: DataFrame, metrics: list):
         from pyspark.sql import Observation
 
         self.checks = list(checks)
-        self.observation = Observation()
-
-    def attach(self, framed: DataFrame) -> DataFrame:
         self.spark = framed.sparkSession
+        # an Observation serves one DataFrame: a fresh one per frame
+        self.observation = Observation()
+        self.observed = framed.observe(self.observation, *metrics)
+
+    @staticmethod
+    def metrics(n_checks: int) -> list[Column]:
+        """The observed aggregates of a frame over ``n_checks`` checks."""
         fails = F.col(_FAILS)
-        return framed.observe(
-            self.observation,
+        return [
             F.count(F.lit(1)).alias("n_rows"),
             *[
                 F.sum(F.when(F.array_contains(fails, i), 1).otherwise(0)).alias(f"_c{i}")
-                for i in range(len(self.checks))
+                for i in range(n_checks)
             ],
-        )
+        ]
 
     def frame(self) -> Optional[DataFrame]:
         """The summary in :func:`summary_plan`'s schema, ordered by check;
@@ -482,12 +502,24 @@ class ValidationResult:
     """Outcome of a full table validation run."""
 
     spec_issues: list  # driver-side Issues (spec-level, structural)
-    violations: DataFrame  # data-plane violation rows (full schema)
+    #: data-plane violation rows (full schema), deduplicated and in the
+    #: reference's canonical ``(jsonpath, type, message)`` order
+    violations: DataFrame
     #: builds the :func:`summary_plan` frame (a rescan of the table)
     _summary_plan: Callable[[], DataFrame] = dc_field(repr=False)
     _observed: Optional[_ObservedSummary] = dc_field(default=None, repr=False)
     _summary: Optional[DataFrame] = dc_field(default=None, repr=False)
     _n_violations: Optional[int] = dc_field(default=None, repr=False)
+    _unordered: Optional[DataFrame] = dc_field(default=None, repr=False)
+
+    @property
+    def unordered_violations(self) -> DataFrame:
+        """The rows of :attr:`violations` without the canonical order,
+        for sinks: a write partitioned by ``type`` does not keep the
+        order anyway, and the global sort costs a range-partition sample
+        job and an exchange. Showing or collecting rows goes through
+        :attr:`violations`."""
+        return self.violations if self._unordered is None else self._unordered
 
     @property
     def summary(self) -> DataFrame:
@@ -496,10 +528,11 @@ class ValidationResult:
         of :func:`summary_plan`, ordered by partition, then check.
 
         Unpartitioned, it comes from the metrics the first action on
-        :attr:`violations` observed: a small local frame, no rescan.
-        Before that action, when it completed without every metric, and
-        for specs with ``partitionBy`` (an observation cannot group) it
-        is :func:`summary_plan`, built lazily on access."""
+        :attr:`violations` (or :attr:`unordered_violations`) observed: a
+        small local frame, no rescan. Before that action, when it
+        completed without every metric, and for specs with
+        ``partitionBy`` (an observation cannot group) it is
+        :func:`summary_plan`, built lazily on access."""
         if self._summary is None:
             if self._observed is None:
                 self._summary = self._summary_plan()
@@ -511,7 +544,7 @@ class ValidationResult:
         """Number of violation rows; runs one job the first time, then
         returns the same count."""
         if self._n_violations is None:
-            self._n_violations = self.violations.count()
+            self._n_violations = self.unordered_violations.count()
         return self._n_violations
 
     def passed(self) -> bool:
@@ -522,7 +555,206 @@ class ValidationResult:
             return False
         if self._n_violations is not None:
             return self._n_violations == 0
-        return self.violations.isEmpty()
+        return self.unordered_violations.isEmpty()
+
+
+class ValidationPlan:
+    """The compile step of :func:`check_table`: everything about a
+    validation that does not depend on the rows, for one (spec, input
+    schema, config, dims, extra checks). :meth:`apply` binds it to a
+    frame of that schema and only builds DataFrames, so a stream
+    compiles once and binds every micro-batch
+    (:func:`~..streaming.checks.foreach_batch_validator`).
+
+    Held: the spec-level issues; the compiled, runnable and
+    exclusion-pruned checks with the row key and partition; the
+    uniqueness and foreign-key checks that run; and every Column
+    expression of the fused branch (failing-check array, observed
+    aggregates, literal lookup arrays, instance ``CaseWhen``) and of the
+    exclusion filter. The instance carry columns are resolved on the
+    first frame and kept."""
+
+    def __init__(
+        self,
+        df: DataFrame,
+        spec: TableSpec,
+        config: Optional[CheckConfig] = None,
+        dims: Optional[dict[str, DataFrame]] = None,
+        extra_checks: Optional[list[CompiledCheck]] = None,
+    ):
+        from ..compile import compile_table_checks, schema_conforms
+        from ..extensions import compile_extensions
+        from ..spec import strict_spec_issues, validate_spec, validate_spec_against
+
+        config = config or CheckConfig()
+        dims = dims or {}
+        self.spec, self.config = spec, config
+        self.schema, self.streaming = df.schema, df.isStreaming
+
+        actual_cols = set(self.schema.fieldNames())
+        pk_present = [k for k in spec.primary_key if k in actual_cols]
+        row_key: Optional[Union[str, list]]
+        if len(pk_present) == 1:
+            row_key = pk_present[0]
+        elif pk_present:
+            row_key = pk_present
+        else:
+            row_key = None
+        self.row_key = row_key
+
+        spec_issues = list(validate_spec(spec, version=config.version))
+        spec_issues.extend(schema_conforms(df, spec))
+        if config.strict:
+            spec_issues.extend(strict_spec_issues(spec))
+
+        # extra_checks accepts CompiledCheck objects AND raw extension
+        # objects (CustomCheck/RequiredCheck — ref check(extensions=...),
+        # check.py:250); those and config.extensions compile here against
+        # the physical schema so jsonpath targets resolve.
+        extra = compile_extensions(
+            [*(extra_checks or ()), *config.extensions], schema=self.schema
+        )
+        checks = compile_table_checks(spec, extra=extra, schema=self.schema)
+        # dotted column paths (nested RequiredCheck targets) are runnable
+        # when their ROOT column exists
+        self.runnable = [
+            c
+            for c in checks
+            if c.column is None or c.column.split(".", 1)[0] in actual_cols
+        ]
+        self.partition = spec.partition_by[0] if spec.partition_by else None
+
+        # plan pruning: checks whose every violation a type/whole-column
+        # exclusion would drop are never computed (U4 pushdown)
+        emitted = prune_excluded_checks(self.runnable, config.exclusions, spec.name)
+        self.observe = bool(emitted) and self.partition is None and not self.streaming
+        self.branch: Optional[_FusedBranch] = None
+        if self.observe:
+            # one failing-check array over ALL runnable checks: the
+            # observed summary counts every check, the explode emits only
+            # the unpruned ones
+            keep = {id(ck) for ck in emitted}
+            self.branch = _FusedBranch(
+                self.runnable,
+                [i for i, ck in enumerate(self.runnable) if id(ck) in keep],
+                spec.name,
+                row_key,
+                None,
+            )
+            self.metrics = _ObservedSummary.metrics(len(self.runnable))
+        elif emitted:
+            self.branch = _FusedBranch(
+                emitted, range(len(emitted)), spec.name, row_key, self.partition
+            )
+
+        # Gate (R1, ref check.py:330-337): skip data-level key checks whose
+        # declaration is itself broken.
+        bad_paths = {i.jsonpath for i in spec_issues}
+        self.unique_keys: list[list[str]] = []
+        pk_ok = spec.primary_key and not any("primaryKey" in p for p in bad_paths)
+        if pk_ok and all(k in actual_cols for k in spec.primary_key):
+            self.unique_keys.append(list(spec.primary_key))
+        for cols in spec.unique_keys:
+            if all(k in actual_cols for k in cols):
+                self.unique_keys.append(list(cols))
+        for fs in spec.fields:
+            if fs.constraints.unique and fs.name in actual_cols and (fs.name,) != spec.primary_key:
+                self.unique_keys.append([fs.name])
+
+        #: (fk, destination frame or None for the validated frame itself)
+        self.foreign_keys: list[tuple] = []
+        for j, fk in enumerate(spec.foreign_keys):
+            if any(f"foreignKeys[{j}]" in p for p in bad_paths):
+                continue
+            if not fk.reference_resource:
+                self.foreign_keys.append((fk, None))
+                continue
+            dest_df = dims.get(fk.reference_resource)
+            if dest_df is None:
+                continue
+            # declaration-level cross-resource check needs the dest spec;
+            # here dims are DataFrames so only existence was checkable —
+            # field existence validated against the DataFrame columns.
+            if any(c not in dest_df.columns for c in fk.reference_fields):
+                spec_issues.extend(
+                    validate_spec_against(
+                        spec,
+                        {fk.reference_resource: TableSpec(name=fk.reference_resource, fields=tuple())},
+                    )
+                )
+                continue
+            self.foreign_keys.append((fk, dest_df))
+
+        self.spec_issues = finalize_issues(spec_issues)
+        self.kept = _kept_by_exclusions(config.exclusions)
+
+    def matches(self, df: DataFrame) -> bool:
+        """True when ``df`` has the schema (and streaming-ness) this plan
+        was compiled for."""
+        return df.isStreaming == self.streaming and df.schema == self.schema
+
+    def apply(self, df: DataFrame) -> ValidationResult:
+        """Bind the plan to ``df``: builds the violation and summary
+        frames, runs nothing. Each call observes with a fresh
+        ``Observation``."""
+        from ..operators.dedup import _spread
+        from ..operators.referential import referential_violations
+        from ..operators.uniqueness import uniqueness_violations
+
+        spec, row_key, partition = self.spec, self.row_key, self.partition
+        # Under-split inputs (a single small parquet file arrives as 1-2
+        # partitions) would run the whole fused plan through one task —
+        # measured 20-30 s for 15 jsonSchema checks over 100k one-partition
+        # rows vs ~2 s spread. A production 10^12-row table always has
+        # orders of magnitude more partitions than cores, so this never
+        # fires there. Skipped when there is no primary key: the positional
+        # jsonpath fallback (monotonically_increasing_id) must stay tied to
+        # the INPUT layout, not a round-robin shuffle's.
+        if row_key is not None:
+            df = _spread(df)
+
+        observed = None
+        if self.branch is None:
+            v = df.sparkSession.createDataFrame([], schema=VIOLATION_FULL_SCHEMA)
+        else:
+            framed = self.branch.frame(df)
+            if self.observe:
+                observed = _ObservedSummary(self.runnable, framed, self.metrics)
+                framed = observed.observed
+            v = self.branch.violations(framed)
+        parts = [v]
+        for keys in self.unique_keys:
+            parts.append(uniqueness_violations(df, keys, spec.name, partition=partition))
+        for fk, dest_df in self.foreign_keys:
+            parts.append(
+                referential_violations(
+                    df,
+                    df if dest_df is None else dest_df,
+                    list(fk.fields),
+                    list(fk.reference_fields),
+                    spec.name,
+                    fk.reference_resource or spec.name,
+                    row_key=row_key,
+                    partition=partition,
+                )
+            )
+        all_v = reduce(DataFrame.unionByName, parts)
+        if self.kept is not None:
+            all_v = all_v.where(self.kept)
+        if self.config.max_examples_per_check:
+            all_v = cap_examples(all_v, self.config.max_examples_per_check)
+        unordered = dedup_violations(all_v)
+
+        runnable = self.runnable
+        return ValidationResult(
+            spec_issues=list(self.spec_issues),
+            violations=order_violations(unordered),
+            _summary_plan=lambda: summary_plan(df, runnable, partition=partition).orderBy(
+                *(["partition"] if partition else []), "check"
+            ),
+            _observed=observed,
+            _unordered=unordered,
+        )
 
 
 def check_table(
@@ -532,7 +764,9 @@ def check_table(
     dims: Optional[dict[str, DataFrame]] = None,
     extra_checks: Optional[list[CompiledCheck]] = None,
 ) -> ValidationResult:
-    """Full validation lifecycle — the engine's ``check()`` analog.
+    """Full validation lifecycle — the engine's ``check()`` analog:
+    :class:`ValidationPlan` compiled for ``df``'s schema, then applied to
+    ``df``.
 
     Mirrors ref check.py:250-291 staging:
       1. spec self-validation (driver; ref Draft7Validator.check_schema)
@@ -544,160 +778,4 @@ def check_table(
       5. exclusions filter (ref exclusion.py)
       6. dedup + canonical order (ref check.py:279)
     """
-    from ..compile import compile_table_checks, schema_conforms
-    from ..extensions import compile_extensions
-    from ..operators.dedup import _spread
-    from ..operators.referential import referential_violations
-    from ..operators.uniqueness import uniqueness_violations
-    from ..spec import validate_spec, validate_spec_against
-
-    config = config or CheckConfig()
-    dims = dims or {}
-
-    actual_cols = set(df.columns)
-    pk_present = [k for k in spec.primary_key if k in actual_cols]
-    row_key: Optional[Union[str, list]]
-    if len(pk_present) == 1:
-        row_key = pk_present[0]
-    elif pk_present:
-        row_key = pk_present
-    else:
-        row_key = None
-
-    # Under-split inputs (a single small parquet file arrives as 1-2
-    # partitions) would run the whole fused plan through one task —
-    # measured 20-30 s for 15 jsonSchema checks over 100k one-partition
-    # rows vs ~2 s spread. A production 10^12-row table always has
-    # orders of magnitude more partitions than cores, so this never
-    # fires there. Skipped when there is no primary key: the positional
-    # jsonpath fallback (monotonically_increasing_id) must stay tied to
-    # the INPUT layout, not a round-robin shuffle's.
-    if row_key is not None:
-        df = _spread(df)
-
-    spec_issues = list(validate_spec(spec, version=config.version))
-    spec_issues.extend(schema_conforms(df, spec))
-    if config.strict:
-        from ..spec import strict_spec_issues
-
-        spec_issues.extend(strict_spec_issues(spec))
-
-    # extra_checks accepts CompiledCheck objects AND raw extension
-    # objects (CustomCheck/RequiredCheck — ref check(extensions=...),
-    # check.py:250); those and config.extensions compile here against
-    # the physical schema so jsonpath targets resolve.
-    extra = compile_extensions(
-        [*(extra_checks or ()), *config.extensions], schema=df.schema
-    )
-    checks = compile_table_checks(spec, extra=extra, schema=df.schema)
-    # dotted column paths (nested RequiredCheck targets) are runnable
-    # when their ROOT column exists
-    runnable = [
-        c
-        for c in checks
-        if c.column is None or c.column.split(".", 1)[0] in actual_cols
-    ]
-    partition = spec.partition_by[0] if spec.partition_by else None
-
-    # plan pruning: checks whose every violation a type/whole-column
-    # exclusion would drop are never computed (U4 pushdown)
-    emitted = prune_excluded_checks(runnable, config.exclusions, spec.name)
-    observed = None
-    if emitted and partition is None and not df.isStreaming:
-        # one failing-check array over ALL runnable checks: the observed
-        # summary counts every check, the explode emits only the
-        # unpruned ones
-        keep = {id(ck) for ck in emitted}
-        observed = _ObservedSummary(runnable)
-        v = _explode_violations(
-            observed.attach(_with_failing_checks(df, runnable)),
-            runnable,
-            [i for i, ck in enumerate(runnable) if id(ck) in keep],
-            spec.name,
-            row_key,
-            None,
-        )
-    else:
-        v = violations_plan(
-            df, emitted, spec.name, row_key=row_key, partition=partition
-        )
-    parts = [v]
-
-    # Gate (R1, ref check.py:330-337): skip data-level key checks whose
-    # declaration is itself broken.
-    bad_paths = {i.jsonpath for i in spec_issues}
-
-    pk_ok = spec.primary_key and not any("primaryKey" in p for p in bad_paths)
-    if pk_ok and all(k in actual_cols for k in spec.primary_key):
-        parts.append(
-            uniqueness_violations(
-                df, list(spec.primary_key), spec.name, partition=partition
-            )
-        )
-    for cols in spec.unique_keys:
-        if all(k in actual_cols for k in cols):
-            parts.append(
-                uniqueness_violations(df, list(cols), spec.name, partition=partition)
-            )
-    for fs in spec.fields:
-        if fs.constraints.unique and fs.name in actual_cols and (fs.name,) != spec.primary_key:
-            parts.append(
-                uniqueness_violations(df, [fs.name], spec.name, partition=partition)
-            )
-
-    for j, fk in enumerate(spec.foreign_keys):
-        if any(f"foreignKeys[{j}]" in p for p in bad_paths):
-            continue
-        dest_df = df if not fk.reference_resource else dims.get(fk.reference_resource)
-        if dest_df is None:
-            continue
-        if fk.reference_resource and fk.reference_resource in dims:
-            # declaration-level cross-resource check needs the dest spec;
-            # here dims are DataFrames so only existence was checkable —
-            # field existence validated against the DataFrame columns.
-            missing = [c for c in fk.reference_fields if c not in dest_df.columns]
-            if missing:
-                spec_issues.extend(
-                    validate_spec_against(
-                        spec,
-                        {
-                            fk.reference_resource: TableSpec(
-                                name=fk.reference_resource,
-                                fields=tuple(),
-                            )
-                        },
-                    )
-                )
-                continue
-        parts.append(
-            referential_violations(
-                df,
-                dest_df,
-                list(fk.fields),
-                list(fk.reference_fields),
-                spec.name,
-                fk.reference_resource or spec.name,
-                row_key=row_key,
-                partition=partition,
-            )
-        )
-
-    all_v = parts[0]
-    for p in parts[1:]:
-        all_v = all_v.unionByName(p)
-
-    all_v = exclusion_filter(all_v, config.exclusions)
-    if config.max_examples_per_check:
-        all_v = cap_examples(all_v, config.max_examples_per_check)
-    all_v = finalize_violations(all_v)
-
-    from ..issue import finalize_issues
-
-    return ValidationResult(
-        spec_issues=finalize_issues(spec_issues),
-        violations=all_v,
-        _summary_plan=lambda: summary_plan(df, runnable, partition=partition).orderBy(
-            *(["partition"] if partition else []), "check"
-        ),
-        _observed=observed,
-    )
+    return ValidationPlan(df, spec, config=config, dims=dims, extra_checks=extra_checks).apply(df)

@@ -5,13 +5,28 @@ settings scale out: AQE on (runtime re-plan + skew-join backstop),
 shuffle partitions ≈ cores locally (on a cluster: 2-3× total cores or
 AQE-coalesced), Arrow enabled for the pandas-UDF path, UTC timezone
 pinned for oracle comparability.
+
+A session :func:`get_spark` creates also has pyspark's DataFrame
+debugging off (``spark.python.sql.dataFrameDebugging.enabled=false``).
+With it on, every Column call records its Python call site through
+several extra py4j round trips; building one validation plan makes
+thousands of them. The cost: analysis errors no longer name the Python
+line that built the failing expression. pyspark reads the flag once per
+process, on the first Column call, so it is set when the session is
+created. A session that already exists (a host application's) is
+returned with its own setting.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+#: pyspark's per-Column call-site capture (see the module docstring)
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def get_spark(
@@ -20,6 +35,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    creating = SparkContext._active_spark_context is None
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
@@ -55,6 +71,8 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
     )
+    if creating:
+        builder = builder.config(DATAFRAME_DEBUGGING, "false")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

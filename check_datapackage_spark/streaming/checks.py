@@ -13,6 +13,10 @@ validating data as it lands:
 * :func:`foreach_batch_validator` — exactly-once micro-batch validation:
   run the full batch plan (incl. uniqueness/referential, which need
   joins not allowed in pure append streams) per epoch via foreachBatch.
+  The plan is compiled once per stream and batch schema
+  (:class:`~..plans.validation.ValidationPlan`): every later epoch only
+  binds its batch to the same checks and Column expressions, and a
+  changed batch schema compiles afresh.
 """
 
 from __future__ import annotations
@@ -76,9 +80,11 @@ def windowed_violation_counts(
         .groupBy(win.alias("window"))
         .agg(*fails)
     )
-    stack_args = ", ".join(f"'{ck.name}', _c{i}" for i, ck in enumerate(checks))
-    return wide.selectExpr(
-        "window", f"stack({len(checks)}, {stack_args}) as (check, fail_count)"
+    stack_args: list = []
+    for i, ck in enumerate(checks):
+        stack_args += [F.lit(ck.name), F.col(f"_c{i}")]
+    return wide.select(
+        "window", F.stack(F.lit(len(checks)), *stack_args).alias("check", "fail_count")
     )
 
 
@@ -93,14 +99,25 @@ def foreach_batch_validator(
 
     Use: ``stream.writeStream.foreachBatch(foreach_batch_validator(spec,
     dims, sink)).start()``. ``sink(violations_df, epoch_id)`` persists
-    results (e.g. append to the audit ledger).
+    results (e.g. append to the audit ledger); it gets the deduplicated
+    violations without their canonical order
+    (:attr:`~..plans.validation.ValidationResult.unordered_violations`).
+
+    The first batch compiles the validation plan; later batches of the
+    same schema reuse it, so an epoch pays only for building and running
+    its DataFrames. A batch with another schema compiles a new plan.
     """
-    from ..plans.validation import check_table
+    from ..plans.validation import ValidationPlan
+
+    plan: Optional[ValidationPlan] = None
 
     def _run(batch_df: DataFrame, epoch_id: int) -> None:
-        res = check_table(batch_df, spec, dims=dims, extra_checks=extra_checks)
+        nonlocal plan
+        if plan is None or not plan.matches(batch_df):
+            plan = ValidationPlan(batch_df, spec, dims=dims, extra_checks=extra_checks)
+        res = plan.apply(batch_df)
         if sink is not None:
-            sink(res.violations, epoch_id)
+            sink(res.unordered_violations, epoch_id)
 
     return _run
 

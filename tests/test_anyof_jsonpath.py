@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from check_datapackage_spark.compile import compile_any_of_required
 from check_datapackage_spark.plans.validation import violations_plan
-from check_datapackage_spark.spec import Exclusion, SpecTypeError, is_jsonpath
+from check_datapackage_spark.spec import CheckConfig, Exclusion, SpecTypeError, is_jsonpath
 
 
 def test_any_of_required(spark):
@@ -133,3 +133,46 @@ def test_name_union_whole_column_exclusion_prunes_both_checks(spark):
         checks, [Exclusion(jsonpath="$.t[doc-1]['n_tok','source']")], "t"
     )
     assert kept == checks
+
+
+def test_unusual_row_keys_are_escaped_and_excluded(spark):
+    """An empty row key or one holding ``]`` or a backslash gets an
+    escaped address that ``[*]`` and ``..`` still select, so the same
+    exclusion drops those rows whether it prunes the check (check_table)
+    or only filters its output (exclusion_filter); ordinary keys keep
+    their byte-identical address."""
+    from check_datapackage_spark import TableSpec, check_table
+    from check_datapackage_spark.plans.validation import exclusion_filter
+
+    df = spark.createDataFrame(
+        [("", -1), ("a]b", -2), ("c\\", -3), ("k1", -4), ("k2", 5)],
+        "id string, n int",
+    )
+    spec = TableSpec.from_dict(
+        {
+            "name": "t",
+            "schema": {
+                "fields": [
+                    {"name": "id", "type": "string"},
+                    {"name": "n", "type": "integer", "constraints": {"minimum": 0}},
+                ],
+                "primaryKey": "id",
+            },
+        }
+    )
+    addresses = sorted(r["jsonpath"] for r in check_table(df, spec).violations.collect())
+    assert addresses == ["$.t[].n", "$.t[a\\]b].n", "$.t[c\\\\].n", "$.t[k1].n"]
+
+    from check_datapackage_spark.compile import compile_table_checks
+
+    checks = compile_table_checks(spec, schema=df.schema)
+    for pattern in ("$.t[*].n", "..n", "$.t[*].*"):
+        ex = (Exclusion(jsonpath=pattern),)
+        pruned = check_table(df, spec, config=CheckConfig(exclusions=ex))
+        assert pruned.violations.collect() == [], pattern
+        filtered = exclusion_filter(violations_plan(df, checks, "t", row_key="id"), ex)
+        assert filtered.collect() == [], pattern
+    # a row-key selector still picks out one ordinary row
+    ex = (Exclusion(jsonpath="$.t[k1].n"),)
+    left = check_table(df, spec, config=CheckConfig(exclusions=ex)).violations
+    assert sorted(r["row_key"] for r in left.collect()) == ["", "a]b", "c\\"]

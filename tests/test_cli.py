@@ -328,3 +328,39 @@ def test_cli_keeps_host_session_settings(spark, sf_dir, tmp_path):
         assert spark.conf.get(key) == "5"
     finally:
         spark.conf.set(key, old)
+
+
+def test_engine_session_has_dataframe_debugging_off(spark):
+    """get_spark created the suite's session, so pyspark's per-Column
+    call-site capture is off in it."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from check_datapackage_spark.session import DATAFRAME_DEBUGGING
+
+    assert spark.conf.get(DATAFRAME_DEBUGGING) == "false"
+    assert is_debugging_enabled() is False
+
+
+_HOST_SESSION = """
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import SparkSession, functions as F
+
+host = SparkSession.builder.master("local[1]").appName("host").getOrCreate()
+F.col("a") + 1
+from check_datapackage_spark.session import DATAFRAME_DEBUGGING, get_spark
+
+s = get_spark("engine", cores=1)
+print("RESULT", s is host, s.conf.get(DATAFRAME_DEBUGGING), is_debugging_enabled())
+s.stop()
+"""
+
+
+def test_host_session_keeps_dataframe_debugging():
+    """A session that existed before get_spark keeps its own setting."""
+    out = subprocess.run(
+        [sys.executable, "-c", _HOST_SESSION],
+        capture_output=True, text=True, cwd=REPO, timeout=900,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
+    assert lines == ["RESULT True true True"], out.stdout + out.stderr

@@ -44,6 +44,93 @@ def test_foreach_batch_validator(spark, tmp_path):
     assert seen and sum(n for _, n in seen) == 7
 
 
+
+def _counting_compiles(monkeypatch):
+    """Count compile_table_checks calls (the compile step of a plan)."""
+    from check_datapackage_spark import compile as compile_mod
+
+    calls = []
+    real = compile_mod.compile_table_checks
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(compile_mod, "compile_table_checks", counted)
+    return calls
+
+
+def _violation_rows(df):
+    from check_datapackage_spark.issue import VIOLATION_COLUMNS
+
+    return sorted(map(tuple, df.select(VIOLATION_COLUMNS).collect()), key=str)
+
+
+def test_foreach_batch_validator_compiles_once(spark, tmp_path, monkeypatch):
+    """Three micro-batches, one compile: the validator binds each batch
+    to the plan its first batch compiled, and every epoch's sink rows are
+    check_table's violations for that batch."""
+    from check_datapackage_spark import check_table
+    from check_datapackage_spark.streaming.checks import foreach_batch_validator
+
+    src = str(tmp_path / "in")
+    df, _ = sequences_with_violations(spark, 300)
+    for lo in (0, 100, 200):
+        part = df.where((F.col("_row") >= lo) & (F.col("_row") < lo + 100))
+        part.drop("_row").coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    dims = {"allowed_sources": allowed_sources_df(spark)}
+
+    sunk: dict = {}
+    batches: dict = {}
+    validator = foreach_batch_validator(
+        sequences_spec(), dims=dims,
+        sink=lambda v, epoch: sunk.__setitem__(epoch, _violation_rows(v)),
+    )
+
+    def run(batch, epoch):
+        batches[epoch] = batch.collect()
+        validator(batch, epoch)
+
+    calls = _counting_compiles(monkeypatch)
+    q = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        .writeStream.foreachBatch(run).start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(sunk) == sorted(batches) and len(batches) == 3
+    assert len(calls) == 1
+    for epoch, rows in batches.items():
+        want = check_table(spark.createDataFrame(rows, schema), sequences_spec(), dims=dims)
+        assert sunk[epoch] == _violation_rows(want.violations), epoch
+    assert any(sunk.values())
+
+
+def test_foreach_batch_validator_recompiles_on_schema_change(spark, monkeypatch):
+    from check_datapackage_spark import check_table
+    from check_datapackage_spark.streaming.checks import foreach_batch_validator
+
+    df, _ = sequences_with_violations(spark, 100)
+    first = df.drop("_row")
+    wider = first.withColumn("note", F.lit("x"))  # one more column
+    dims = {"allowed_sources": allowed_sources_df(spark)}
+    sunk: list = []
+    validator = foreach_batch_validator(
+        sequences_spec(), dims=dims, sink=lambda v, epoch: sunk.append(_violation_rows(v))
+    )
+    calls = _counting_compiles(monkeypatch)
+    for epoch, batch in enumerate((first, first, wider)):
+        validator(batch, epoch)
+    assert len(calls) == 2  # the first batch, then the changed schema
+    want = _violation_rows(check_table(first, sequences_spec(), dims=dims).violations)
+    assert sunk[0] == sunk[1] == want
+    assert sunk[2] == _violation_rows(check_table(wider, sequences_spec(), dims=dims).violations)
+    assert sunk[2]
+
+
 def test_windowed_violation_counts(spark, tmp_path):
     from check_datapackage_spark.compile import compile_invariant
     from check_datapackage_spark.streaming.checks import windowed_violation_counts

@@ -304,3 +304,58 @@ def test_passed_reuses_violation_count(spark, valid_df):
     assert res.violation_count() == 0
     res.violations = None  # passed() must not touch the plan again
     assert res.passed()
+
+
+def test_violations_collect_in_canonical_order(spark, bad):
+    """violations keep the reference's sorted(set(issues)) order
+    (check.py:279); unordered_violations, what sinks get, holds the same
+    rows."""
+    df = bad[0].drop("_row")
+    for res in (run_check(spark, df), _flat_check(spark, df)):
+        rows = [tuple(r) for r in res.violations.collect()]
+        keys = [r[:3] for r in rows]
+        assert keys == sorted(keys) and len(set(keys)) == len(keys)
+        assert sorted(rows, key=str) == sorted(
+            (tuple(r) for r in res.unordered_violations.collect()), key=str
+        )
+        assert res.violation_count() == len(rows)
+
+
+def test_summaries_with_a_quoted_field_name(spark):
+    """Check names reach the summary unpivots as literals, never as SQL
+    text: a field named ``it's`` used to fail with PARSE_SYNTAX_ERROR in
+    the partitioned summary, the pre-action fallback summary and the
+    windowed stream counts."""
+    import dataclasses
+
+    from check_datapackage_spark import TableSpec, compile_table_checks
+    from check_datapackage_spark.streaming.checks import windowed_violation_counts
+
+    df = spark.createDataFrame(
+        [(1, -1, "a", "2024-01-01 00:00:00"), (2, 3, "b", "2024-01-01 00:01:00")],
+        "id int, `it's` int, part string, ts string",
+    )
+    spec = TableSpec.from_dict(
+        {
+            "name": "t",
+            "schema": {
+                "fields": [
+                    {"name": "id", "type": "integer"},
+                    {"name": "it's", "type": "integer", "constraints": {"minimum": 0}},
+                    {"name": "part", "type": "string"},
+                ],
+                "primaryKey": "id",
+            },
+            "partitionBy": "part",
+        }
+    )
+    fails = lambda res: {
+        (r["check"], r["fail_count"]) for r in res.summary.collect() if r["fail_count"]
+    }
+    partitioned = check_table(df, spec)
+    assert fails(partitioned) == {("it's.minimum", 1)}
+    flat = check_table(df, dataclasses.replace(spec, partition_by=()))
+    assert fails(flat) == {("it's.minimum", 1)}  # before any action: summary_plan
+    [ck] = [c for c in compile_table_checks(spec, schema=df.schema) if c.name == "it's.minimum"]
+    counts = windowed_violation_counts(df, [ck], ts_col="ts", window="1 hour")
+    assert [(r["check"], r["fail_count"]) for r in counts.collect()] == [("it's.minimum", 1)]
