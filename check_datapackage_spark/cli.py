@@ -123,22 +123,33 @@ def load_toml_config(path: str = ".cdp.toml") -> dict:
 
 
 @contextmanager
-def _executed_once(violations):
-    """Persist the violations for one report: the first action executes
-    the plan (and completes its observed summary), every later one
-    reads the cached rows. The cache is released on the way out."""
-    violations.persist()
+def _executed_once(results):
+    """Persist each result's unordered violations for one report: the
+    first action executes the plans (and completes their observed
+    summaries), every later one reads the cached rows, sorted or not.
+    The cache is released on the way out."""
+    frames = [r.unordered_violations for r in results]
+    for v in frames:
+        v.persist()
     try:
         yield
     finally:
-        violations.unpersist()
+        for v in frames:
+            v.unpersist()
 
 
-def _report(v, n: int, results: list, issues: list, audit, sunk=None) -> int:
-    """Sink, summaries and sample of one run; 1 when it failed. The sink
-    gets ``sunk`` (the same rows unordered) when given, else ``v``."""
-    if audit and v is not None:
-        write_violations(v if sunk is None else sunk, audit)
+def _report(unordered, ordered, results: list, issues: list, audit) -> int:
+    """Spec issues, count, sink, summaries and sample of one run; 1 when
+    it failed. The count and the sink read ``unordered``; the 20-row
+    sample is ``ordered``, the same rows sorted. Both are None for a
+    package without resources."""
+    if issues:
+        # pretty_print renders the [u]/[red] markup (rich when
+        # available, stripped otherwise) instead of printing literal tags
+        pretty_print(explain(issues, subject="datapackage.json"), file=sys.stderr)
+    n = 0 if unordered is None else unordered.count()
+    if audit and unordered is not None:
+        write_violations(unordered, audit)
     for name, r in results:
         if name is not None:
             print(f"== {name}")
@@ -147,8 +158,8 @@ def _report(v, n: int, results: list, issues: list, audit, sunk=None) -> int:
         print("All checks passed!")  # ref cli.py:84
         return 0
     print(f"{n} violation row(s) found.", file=sys.stderr)
-    if v is not None:
-        v.show(20, truncate=False)
+    if ordered is not None:
+        ordered.show(20, truncate=False)
     return 1
 
 
@@ -246,36 +257,23 @@ def main(argv=None) -> int:
         )
         if args.table is None:
             # package mode: every resource, FK dims wired automatically
-            import json as _json
-
             from .package import check_package
 
-            with open(parse_source(args.spec)) as fh:
-                _doc = _json.load(fh)
             pres = check_package(
                 spark,
-                _doc,
+                parse_source(args.spec),
                 config=config,
                 loader=lambda s, n: load_table(s, args.data, n),
                 spec_transform=strictify if strict else None,
             )
             all_issues = list(pres.descriptor_issues) + [
-                i
-                for r in pres.resources.values()
-                for i in (r.spec_issues or [])
+                i for r in pres.resources.values() for i in (r.spec_issues or [])
             ]
-            if all_issues:
-                pretty_print(
-                    explain(all_issues, subject="datapackage.json"),
-                    file=sys.stderr,
+            with _executed_once(pres.resources.values()):
+                rc = _report(
+                    pres.unordered_violations(), pres.violations(),
+                    list(pres.resources.items()), all_issues, args.audit,
                 )
-            v = pres.violations()
-            if v is None:
-                rc = _report(None, 0, [], all_issues, args.audit)
-            else:
-                with _executed_once(v):
-                    results = list(pres.resources.items())
-                    rc = _report(v, v.count(), results, all_issues, args.audit)
             return rc if args.error else 0
 
         df = load_table(spark, args.data, args.table)
@@ -337,21 +335,10 @@ def main(argv=None) -> int:
             if "resources" in _doc:
                 pkg_issues = validate_package(_doc)
         all_issues = pkg_issues + list(res.spec_issues or [])
-        if all_issues:
-            # pretty_print renders the [u]/[red] markup (rich when
-            # available, stripped otherwise) instead of printing
-            # literal tags (ADVICE r2)
-            pretty_print(
-                explain(all_issues, subject="datapackage.json"),
-                file=sys.stderr,
-            )
-        # the count and the sink read the unordered rows; only the
-        # sample is sorted (a top-20 over the cached rows)
-        with _executed_once(res.unordered_violations):
-            n = res.violation_count()
+        with _executed_once([res]):
             rc = _report(
-                res.violations, n, [(None, res)], all_issues, args.audit,
-                sunk=res.unordered_violations,
+                res.unordered_violations, res.violations, [(None, res)],
+                all_issues, args.audit,
             )
         return rc if args.error else 0
     except DataPackageError:

@@ -17,12 +17,18 @@ Reference semantics preserved:
 * ``check()`` returns ``sorted(set(issues))``
   (``check.py:279``) → :func:`finalize_issues` /
   :func:`finalize_violations`.
+
+:func:`violation_address` is the one owner of the violation address
+format ``$.<table>[<key>]<suffix>`` — the row's identity for dedup, order
+and exclusions — and :func:`violation_columns` of the row's columns:
+every emitter (fused, nested, unique, foreign key) writes through them.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -141,13 +147,41 @@ def order_violations(violations: DataFrame) -> DataFrame:
     return violations.orderBy(*[F.col(c) for c in key]) if key else violations
 
 
-def address_key(key: Column) -> Column:
-    """A row key as written between the brackets of a violation address
-    ``$.<table>[<key>]...``: backslash and ``]`` are backslash-escaped, so
-    the bracket closes where the key ends and ``[*]``/``..``
-    (:func:`~.jsonpath.address_regex`) select every key, the empty one
-    included. Keys without either character are written unchanged."""
-    return F.regexp_replace(key, r"([\\\]])", r"\\$1")
+_ESCAPED = re.compile(r"([\\\]])")
+
+
+def violation_address(table_name: str, key: Union[str, Column], *suffix: Union[str, Column]):
+    """``$.<table>[<key>]<suffix>``, the one writer of the violation
+    address. In the key, backslash and ``]`` are backslash-escaped, so
+    ``[*]`` and ``..`` (:func:`~.jsonpath.address_regex`) select every
+    key, the empty one included; a NULL key is written ``?``. ``suffix``
+    parts are text or string Columns. A text ``key`` gives the address
+    as a Python string (driver-side matching), a Column key a Column."""
+    if isinstance(key, str):
+        return f"$.{table_name}[" + _ESCAPED.sub(r"\\\1", key) + "]" + "".join(suffix)
+    return F.concat(
+        F.lit(f"$.{table_name}["),
+        F.coalesce(F.regexp_replace(key, _ESCAPED.pattern, r"\\$1"), F.lit("?")),
+        F.lit("]"),
+        *[F.lit(s) if isinstance(s, str) else s for s in suffix],
+    )
+
+
+def row_key_text(row_key: Union[str, Sequence[str]]) -> Column:
+    """A row key as text: one column cast (NULL stays NULL), or a
+    composite key joined with ``|`` (``concat_ws`` skips NULL parts)."""
+    parts = [F.col(k).cast("string") for k in ([row_key] if isinstance(row_key, str) else row_key)]
+    return parts[0] if len(parts) == 1 else F.concat_ws("|", *parts)
+
+
+def violation_columns(jsonpath, type, message, instance, check, column, row_key, partition):
+    """The VIOLATION_FULL_SCHEMA columns, aliased and string-typed; each
+    value is a Column or literal text (None is NULL)."""
+    values = (jsonpath, type, message, instance, check, column, row_key, partition)
+    return [
+        (v if isinstance(v, Column) else F.lit(v)).cast("string").alias(name)
+        for name, v in zip(VIOLATION_COLUMNS, values)
+    ]
 
 
 def issues_from_rows(rows: list) -> list[Issue]:

@@ -144,7 +144,7 @@ def _bracket(body: str, i: int, alt: str) -> tuple[tuple, int]:
 
 _DOT_NAME = r"\.[^.\[\]]+"
 #: a bracket segment: a row key (``]`` and backslash escaped, see
-#: ``issue.address_key``; possibly empty) or an index
+#: ``issue.violation_address``; possibly empty) or an index
 _BRACKET = r"\[(?:[^\]\\]|\\.)*\]"
 _SEGMENT = rf"(?:{_DOT_NAME}|{_BRACKET})"
 

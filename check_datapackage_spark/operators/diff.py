@@ -75,13 +75,12 @@ def snapshot_diff(
             for c in cols
         ],
     )
-    # unpivot the per-column change counts: |columns| rows out
-    stack = F.expr(
-        "stack({n}, {args}) AS (column, n_changed)".format(
-            n=len(cols),
-            args=", ".join(f"'{c}', _chg_{c}" for c in cols),
-        )
-    )
+    # unpivot the per-column change counts: |columns| rows out; names
+    # are literals, never pasted into SQL text
+    stack = F.stack(
+        F.lit(len(cols)),
+        *[a for c in cols for a in (F.lit(c), F.col(f"_chg_{c}"))],
+    ).alias("column", "n_changed")
     return agg.select("n_common", "n_added", "n_removed", stack).select(
         "column", "n_common", "n_added", "n_removed", "n_changed"
     )

@@ -19,7 +19,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..issue import VIOLATION_COLUMNS, address_key
+from ..issue import row_key_text, violation_address, violation_columns
 
 
 def missing_keys(
@@ -75,38 +75,25 @@ def referential_violations(
         if row_key is not None or partition is not None:
             raise ValueError("distinct=True requires default row_key/partition")
         misses = misses.select(*fact_keys).dropDuplicates(fact_keys)
-    key_str = F.concat_ws("|", *[F.col(k).cast("string") for k in fact_keys])
+    key_str = row_key_text(fact_keys)
     col_name = ",".join(fact_keys)
-    if isinstance(row_key, (list, tuple)):
-        rk_cols = [k for k in row_key if k in fact.columns]
-        rk = (
-            F.concat_ws("|", *[F.col(k).cast("string") for k in rk_cols])
-            if rk_cols
-            else key_str
-        )
-    elif row_key and row_key in fact.columns:
-        rk = F.col(row_key).cast("string")
-    else:
-        rk = key_str
-    part = (
-        F.col(partition).cast("string")
-        if partition and partition in fact.columns
-        else F.lit(None).cast("string")
-    )
+    # the plan's row key where the fact has it, else the FK value
+    rk_cols = [row_key] if isinstance(row_key, str) else list(row_key or ())
+    rk_cols = [k for k in rk_cols if k in fact.columns]
+    rk = row_key_text(rk_cols) if rk_cols else key_str
+    part = F.col(partition) if partition and partition in fact.columns else None
     return misses.select(
-        F.concat(
-            F.lit(f"$.{table_name}["), address_key(rk), F.lit(f"].{col_name}")
-        ).alias("jsonpath"),
-        F.lit("foreign-key").alias("type"),
-        F.lit(
-            f"value of `{col_name}` not found in `{dim_name}`"
-        ).alias("message"),
-        key_str.alias("instance"),
-        F.lit(f"{col_name}.foreign-key").alias("check"),
-        F.lit(col_name).alias("column"),
-        rk.alias("row_key"),
-        part.alias("partition"),
-    ).select(*VIOLATION_COLUMNS)
+        *violation_columns(
+            jsonpath=violation_address(table_name, rk, f".{col_name}"),
+            type="foreign-key",
+            message=f"value of `{col_name}` not found in `{dim_name}`",
+            instance=key_str,
+            check=f"{col_name}.foreign-key",
+            column=col_name,
+            row_key=rk,
+            partition=part,
+        )
+    )
 
 
 def reconcile(

@@ -90,12 +90,13 @@ def null_rates(df: DataFrame, columns: Optional[Sequence[str]] = None, by: Optio
         for i, c in enumerate(columns)
     ]
     wide = df.groupBy(*group).agg(*aggs)
-    stack = ", ".join(f"'{c}', _n{i}" for i, c in enumerate(columns))
+    # names are literals, never pasted into SQL text
+    stack_args = [a for i, c in enumerate(columns) for a in (F.lit(c), F.col(f"_n{i}"))]
     return (
-        wide.selectExpr(
+        wide.select(
             *group,
             "n_rows",
-            f"stack({len(columns)}, {stack}) as (column, n_null)",
+            F.stack(F.lit(len(columns)), *stack_args).alias("column", "n_null"),
         )
         .withColumn("null_rate", F.col("n_null") / F.col("n_rows"))
     )

@@ -28,7 +28,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..issue import VIOLATION_COLUMNS, address_key
+from ..issue import row_key_text, violation_address, violation_columns
 
 
 def dup_key_counts(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -82,9 +82,9 @@ def uniqueness_violations(
     """
     keys = list(keys)
     dups = dup_key_counts_salted(df, keys) if salted else dup_key_counts(df, keys)
-    key_str = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
+    key_str = row_key_text(keys)
     col_name = ",".join(keys)
-    jp = F.concat(F.lit(f"$.{table_name}["), address_key(key_str), F.lit(f"].{col_name}"))
+    jp = violation_address(table_name, key_str, f".{col_name}")
     if order_by_jsonpath:
         # r6 (guide §2.3): build jsonpath ONCE on the narrow key frame
         # and sort on it BEFORE the other violation strings are built —
@@ -95,14 +95,14 @@ def uniqueness_violations(
         dups = dups.withColumn("jsonpath", jp).orderBy("jsonpath")
         jp = F.col("jsonpath")
     return dups.select(
-        jp.alias("jsonpath"),
-        F.lit("unique").alias("type"),
-        F.lit(
-            f"value of `{col_name}` must be unique but appears more than once"
-        ).alias("message"),
-        key_str.alias("instance"),
-        F.lit(f"{col_name}.unique").alias("check"),
-        F.lit(col_name).alias("column"),
-        key_str.alias("row_key"),
-        F.lit(None).cast("string").alias("partition"),
-    ).select(*VIOLATION_COLUMNS)
+        *violation_columns(
+            jsonpath=jp,
+            type="unique",
+            message=f"value of `{col_name}` must be unique but appears more than once",
+            instance=key_str,
+            check=f"{col_name}.unique",
+            column=col_name,
+            row_key=key_str,
+            partition=None,
+        )
+    )

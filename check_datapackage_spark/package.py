@@ -44,17 +44,24 @@ class PackageResult:
     resources: dict[str, ValidationResult]
 
     def violations(self) -> Optional[DataFrame]:
-        """All resources' violation rows, tagged with ``resource``.
+        """All resources' violation rows, tagged with ``resource``, each
+        resource's rows in canonical order.
 
         Plan-level union — each branch keeps its own pushed-down scan;
         None when the package has no resources."""
+        return self._union(lambda r: r.violations)
+
+    def unordered_violations(self) -> Optional[DataFrame]:
+        """The rows of :meth:`violations` without each resource's global
+        sort, for sinks (see :attr:`ValidationResult.unordered_violations`)."""
+        return self._union(lambda r: r.unordered_violations)
+
+    def _union(self, rows: Callable[[ValidationResult], DataFrame]) -> Optional[DataFrame]:
         parts = [
-            r.violations.select(F.lit(name).alias("resource"), "*")
+            rows(r).select(F.lit(name).alias("resource"), "*")
             for name, r in self.resources.items()
         ]
-        if not parts:
-            return None
-        return reduce(DataFrame.unionByName, parts)
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
     def passed(self) -> bool:
         """True iff the descriptor is clean and every resource passed

@@ -9,21 +9,26 @@ TableSpec, emitting violation rows addressed
 normalized-path convention (``['x']`` → ``.x``).
 
 Scale shape: one ``posexplode`` projection (no shuffle — explode is a
-generator in the same stage), then the SAME fused single-scan violation
-plan over the exploded frame. Catalyst prunes the scan to the array
-column + row key.
+generator in the same stage), then the fused branch of
+:mod:`.validation` over the element frame, so the violation rows are
+built after its explode, on violating elements only. Catalyst prunes
+the scan to the array column + row key.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..compile import CompiledCheck, compile_field_checks
-from ..issue import VIOLATION_COLUMNS
+from ..compile import compile_field_checks
+from ..issue import VIOLATION_FULL_SCHEMA, row_key_text
 from ..spec import TableSpec
+from .validation import ELEMENT_INDEX, _FusedBranch
+
+#: the row key column of the element frame
+_ROW = "__cdp_row"
 
 
 def nested_violations(
@@ -36,57 +41,30 @@ def nested_violations(
     """Validate each struct element of ``df[array_col]``.
 
     ``element_spec.fields`` declare constraints on the struct's fields.
-    Output: VIOLATION_FULL_SCHEMA with ``[i]``-indexed jsonpaths.
+    Output: VIOLATION_FULL_SCHEMA with ``[i]``-indexed jsonpaths. Without
+    ``row_key`` a positional id addresses each input row.
     """
-    key = F.col(row_key).cast("string") if row_key else F.lit("*")
-    base = df.select(
-        key.alias("_rk"),
-        F.posexplode_outer(F.col(array_col)).alias("_i", "_e"),
-    ).where(F.col("_e").isNotNull())
-
-    # flatten the struct fields into columns so compile_field_checks'
-    # F.col(name) references resolve
-    elem_fields = base.select("_rk", "_i", "_e.*")
-
-    checks: list[CompiledCheck] = []
-    for fs in element_spec.fields:
-        if fs.name in elem_fields.columns:
-            checks.extend(compile_field_checks(fs, table_name))
-
-    if not checks:
-        from ..issue import VIOLATION_FULL_SCHEMA
-
-        return df.sparkSession.createDataFrame([], VIOLATION_FULL_SCHEMA)
-
-    from .validation import bind_check_lets
-
-    elem_fields = bind_check_lets(elem_fields, checks)
-
-    elems = []
-    for ck in checks:
-        jsonpath = F.concat(
-            F.lit(f"$.{table_name}["),
-            F.col("_rk"),
-            F.lit(f"].{array_col}["),
-            F.col("_i").cast("string"),
-            F.lit(f"].{ck.column}"),
-        )
-        struct = F.struct(
-            jsonpath.alias("jsonpath"),
-            F.lit(ck.issue_type).alias("type"),
-            F.lit(ck.message).alias("message"),
-            ck.instance.alias("instance"),
-            F.lit(f"{array_col}[].{ck.name}").alias("check"),
-            F.lit(f"{array_col}[].{ck.column}").alias("column"),
-            F.col("_rk").alias("row_key"),
-            F.lit(None).cast("string").alias("partition"),
-        )
-        elems.append(F.when(~ck.ok, struct))
-
-    arr = F.array_compact(F.array(*elems))
-    return (
-        elem_fields.select(arr.alias("_v"))
-        .where(F.size("_v") > 0)
-        .select(F.explode("_v").alias("v"))
-        .select([F.col(f"v.{c}").alias(c) for c in VIOLATION_COLUMNS])
+    # the key is taken before the explode: a positional id must number
+    # the input rows, not their elements
+    key = row_key_text(row_key) if row_key else F.monotonically_increasing_id()
+    keyed = df.select(key.cast("string").alias(_ROW), F.col(array_col))
+    # one row per non-NULL element, its struct fields flattened into
+    # columns so compile_field_checks' F.col(name) references resolve
+    elems = (
+        keyed.select(_ROW, F.posexplode(array_col).alias(ELEMENT_INDEX, "_e"))
+        .where(F.col("_e").isNotNull())
+        .select(_ROW, ELEMENT_INDEX, "_e.*")
     )
+
+    checks = [
+        ck
+        for fs in element_spec.fields
+        if fs.name in elems.columns
+        for ck in compile_field_checks(fs, table_name)
+    ]
+    if not checks:
+        return df.sparkSession.createDataFrame([], VIOLATION_FULL_SCHEMA)
+    branch = _FusedBranch(
+        checks, range(len(checks)), table_name, _ROW, None, element=array_col
+    )
+    return branch.violations(branch.frame(elems))

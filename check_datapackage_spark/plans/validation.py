@@ -4,11 +4,11 @@ The reference walks the JSON document once and collects ALL violations
 (``check.py:544-561`` — "All schema violations are collected"). Our plan
 does the table analog in one scan:
 
-* **violations**: every compiled check becomes a
-  ``when(~ok, struct(...))`` element of one array; ``filter`` + one
-  ``explode`` yields violation rows. No shuffle, no Python — the whole
-  expression runs inside whole-stage codegen, and Catalyst prunes the
-  scan down to exactly the checked columns.
+* **violations**: one array per row of the indices of the checks it
+  fails; one ``explode``, then the row is written through
+  :mod:`..issue`'s writer, on violating rows only. Nested elements run
+  on this branch too (:mod:`.nested`). No shuffle, no Python, and
+  Catalyst prunes the scan down to exactly the checked columns.
 * **summary**: without ``partitionBy``, an ``Observation`` on the
   pre-explode frame counts ``n_rows`` and one fail count per check from
   the same failing-check array, so the action that executes the
@@ -43,10 +43,12 @@ from pyspark.sql import functions as F
 from ..compile import CompiledCheck
 from ..issue import (
     VIOLATION_FULL_SCHEMA,
-    address_key,
     dedup_violations,
     finalize_issues,
     order_violations,
+    row_key_text,
+    violation_address,
+    violation_columns,
 )
 from ..jsonpath import address_regex
 from ..spec import CheckConfig, Exclusion, TableSpec
@@ -82,6 +84,8 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
 
 #: the failing-check index array column of the fused branch
 _FAILS = "__cdp_fails"
+#: the element index column of a frame of array elements (nested.py)
+ELEMENT_INDEX = "__cdp_i"
 
 
 class _FusedBranch:
@@ -92,7 +96,11 @@ class _FusedBranch:
     micro-batches builds the expressions once.
 
     Only the checks at the indices in ``emit`` are exploded; the array
-    (and an observed summary reading it) covers all of ``checks``."""
+    (and an observed summary reading it) covers all of ``checks``.
+
+    With ``element``, the rows are elements of that array column with
+    their index in :data:`ELEMENT_INDEX`: addresses get the segment
+    ``.<element>[<i>]``, checks and columns the prefix ``<element>[].``."""
 
     def __init__(
         self,
@@ -101,6 +109,7 @@ class _FusedBranch:
         table_name: str,
         row_key: Optional[Union[str, list]],
         partition: Optional[str],
+        element: Optional[str] = None,
     ):
         self.checks = list(checks)
         self.emit_checks = [self.checks[i] for i in emit]
@@ -111,12 +120,8 @@ class _FusedBranch:
             F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(self.checks)])
         )
 
-        if row_key is None:
-            key_col = F.monotonically_increasing_id().cast("string")
-        elif isinstance(row_key, (list, tuple)):
-            key_col = F.concat_ws("|", *[F.col(k).cast("string") for k in row_key])
-        else:
-            key_col = F.col(row_key)
+        # with no key, a positional id stands in for the reference's [i]
+        key_col = F.monotonically_increasing_id() if row_key is None else row_key_text(row_key)
         part_col = F.col(partition).cast("string") if partition else F.lit(None).cast("string")
         fails = F.col(_FAILS)
         if len(emit) < len(self.checks):
@@ -127,6 +132,8 @@ class _FusedBranch:
         # every row (13× measured with interpreted variant checks) — the
         # rule is excluded session-wide (session.exclude_infer_filters).
         self._head = [key_col.cast("string").alias("_k"), part_col.alias("_p")]
+        if element:
+            self._head.append(F.col(ELEMENT_INDEX))
         self._explode = F.explode(fails).alias("_ci")
         #: input columns the instances reference, per input schema — see
         #: :meth:`violations`
@@ -146,14 +153,8 @@ class _FusedBranch:
             expression, no N-branch CASE)."""
             return F.element_at(F.array(*[F.lit(fn(ck)) for ck in self.checks]), idx)
 
-        # jsonpath = $.<table>[<key>]<.column-suffix> — suffix precomputed
-        # per check so table-level checks (column None) get no suffix
-        jsonpath = F.concat(
-            F.lit(f"$.{table_name}["),
-            F.coalesce(address_key(F.col("_k")), F.lit("?")),
-            F.lit("]"),
-            const(_column_suffix),
-        )
+        segment = [f".{element}[", F.col(ELEMENT_INDEX).cast("string"), "]"] if element else []
+        prefix = f"{element}[]." if element else ""
         # ONE flat CaseWhen (when().when()...), never nested otherwise() —
         # nesting would embed the whole previous chain per branch: O(N²)
         # expression size, measured 90 s vs ~3 s on the 29-check q07
@@ -161,17 +162,18 @@ class _FusedBranch:
         for i in emit:
             branch = (F.col("_ci") == i, self.checks[i].instance.cast("string"))
             instance = F.when(*branch) if instance is None else instance.when(*branch)
-        instance = instance.otherwise(F.lit(None).cast("string"))
-        self._payload = [
-            jsonpath.alias("jsonpath"),
-            const(lambda ck: ck.issue_type).alias("type"),
-            const(lambda ck: ck.message).alias("message"),
-            instance.alias("instance"),
-            const(lambda ck: ck.name).alias("check"),
-            const(lambda ck: ck.column).cast("string").alias("column"),
-            F.col("_k").alias("row_key"),
-            F.col("_p").alias("partition"),
-        ]
+        self._payload = violation_columns(
+            # the address suffix is precomputed per check, so table-level
+            # checks (column None) get none
+            jsonpath=violation_address(table_name, F.col("_k"), *segment, const(_column_suffix)),
+            type=const(lambda ck: ck.issue_type),
+            message=const(lambda ck: ck.message),
+            instance=instance.otherwise(F.lit(None).cast("string")),
+            check=const(lambda ck: prefix + ck.name),
+            column=const(lambda ck: ck.column and prefix + ck.column),
+            row_key=F.col("_k"),
+            partition=F.col("_p"),
+        )
 
     def frame(self, df: DataFrame) -> DataFrame:
         """``df`` plus the checks' shared columns and ``__cdp_fails``:
@@ -387,7 +389,7 @@ def prune_excluded_checks(
     ]
 
     def covered(ck: CompiledCheck) -> bool:
-        address = f"$.{table_name}[{_ANY_ROW}]{_column_suffix(ck)}"
+        address = violation_address(table_name, _ANY_ROW, _column_suffix(ck))
         return any(
             (t is None or t == ck.issue_type)
             and (p is None or p.match(address) is not None)

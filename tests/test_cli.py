@@ -313,6 +313,41 @@ def test_cli_in_process_package_mode(spark, sf_dir, tmp_path):
     assert [(r["resource"], r["type"]) for r in sink] == [("region", "maximum")]
 
 
+def test_cli_package_mode_sinks_unordered_rows(spark, sf_dir, tmp_path, monkeypatch):
+    """Package mode sinks the rows of check_package's violations without
+    a global sort, from the execution that also feeds the count."""
+    import re
+
+    from check_datapackage_spark import cli, check_package
+    from check_datapackage_spark.issue import VIOLATION_COLUMNS
+    from check_datapackage_spark.sources.registry import load_table
+
+    spec_path = _orders_spec(tmp_path)
+    sunk = []
+    write = cli.write_violations
+    monkeypatch.setattr(
+        cli, "write_violations", lambda v, path: (sunk.append(v), write(v, path))
+    )
+    audit = str(tmp_path / "violations")
+    rc = _in_process(
+        spark, tmp_path, "--data", sf_dir, "--spec", spec_path, "--audit", audit, "--error"
+    )
+    assert rc == 1  # 'P' status rows violate the enum
+
+    cols = ["resource", *VIOLATION_COLUMNS]
+    rows = lambda df: sorted(map(tuple, df.select(cols).collect()), key=str)
+    with open(spec_path) as fh:
+        doc = json.load(fh)
+    want = check_package(
+        spark, doc, loader=lambda s, n: load_table(s, sf_dir, n)
+    ).violations()
+    assert rows(spark.read.parquet(audit)) == rows(want)
+    assert rows(want)
+    [v] = sunk
+    plan = v._jdf.queryExecution().executedPlan().toString()
+    assert not re.search("rangepartitioning", plan, re.I), plan
+
+
 def test_cli_keeps_host_session_settings(spark, sf_dir, tmp_path):
     """--cores shapes only a session the CLI creates: a host's session
     keeps its shuffle partitions."""
@@ -364,3 +399,35 @@ def test_host_session_keeps_dataframe_debugging():
     )
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
     assert lines == ["RESULT True true True"], out.stdout + out.stderr
+
+
+_HOST_CONFS = """
+from pyspark.sql import SparkSession
+
+OTHER = "org.apache.spark.sql.catalyst.optimizer.ConstantFolding"
+host = (
+    SparkSession.builder.master("local[1]").appName("host")
+    .config("spark.sql.shuffle.partitions", "3")
+    .config("spark.sql.optimizer.excludedRules", OTHER)
+    .getOrCreate()
+)
+from check_datapackage_spark.session import INFER_FILTERS_RULE, get_spark
+
+s = get_spark("engine", cores=2)
+rules = s.conf.get("spark.sql.optimizer.excludedRules")
+print("RESULT", s is host, s.conf.get("spark.sql.shuffle.partitions"),
+      rules == OTHER + "," + INFER_FILTERS_RULE)
+s.stop()
+"""
+
+
+def test_host_session_keeps_its_confs():
+    """get_spark returns a host's session unchanged, except that the
+    InferFiltersFromGenerate rule is appended to its own exclusions."""
+    out = subprocess.run(
+        [sys.executable, "-c", _HOST_CONFS],
+        capture_output=True, text=True, cwd=REPO, timeout=900,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
+    assert lines == ["RESULT True 3 True"], out.stdout + out.stderr

@@ -60,6 +60,15 @@ def test_snapshot_diff_compound_key_and_subset_cols(spark):
     assert out == {"v": 1}
 
 
+def test_snapshot_diff_quoted_column_name(spark):
+    """Column names reach the unpivot as literals, never as SQL text: a
+    column named ``it's`` used to fail with a ParseException."""
+    old = spark.createDataFrame([(1, 5), (2, 6)], "id long, `it's` long")
+    new = spark.createDataFrame([(1, 5), (2, 7)], "id long, `it's` long")
+    (row,) = diff.snapshot_diff(old, new, ["id"]).collect()
+    assert (row["column"], row["n_changed"], row["n_common"]) == ("it's", 1, 2)
+
+
 def test_heavy_hitters_skew_profile(spark):
     from check_datapackage_spark.operators import stats
 

@@ -43,6 +43,14 @@ def test_null_rates_matches_duckdb(spark, li, ddb):
     assert got["l_orderkey"] == (exp_null, exp_n)
 
 
+def test_null_rates_quoted_column_name(spark):
+    """Column names reach the unpivot as literals, never as SQL text: a
+    column named ``it's`` used to fail with a ParseException."""
+    df = spark.createDataFrame([(1, None), (2, 3)], "id int, `it's` int")
+    got = {(r["column"], r["n_null"], r["n_rows"]) for r in stats.null_rates(df).collect()}
+    assert got == {("id", 0, 2), ("it's", 1, 2)}
+
+
 def test_minmax_matches_duckdb(spark, li, ddb):
     row = stats.minmax(li, "l_quantity").collect()[0]
     exp = ddb.sql(

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -359,3 +361,118 @@ def test_summaries_with_a_quoted_field_name(spark):
     [ck] = [c for c in compile_table_checks(spec, schema=df.schema) if c.name == "it's.minimum"]
     counts = windowed_violation_counts(df, [ck], ts_col="ts", window="1 hour")
     assert [(r["check"], r["fail_count"]) for r in counts.collect()] == [("it's.minimum", 1)]
+
+
+# ---------------------------------------------------------------------------
+# One address format across every emitter: fused, unique, foreign key, nested
+# ---------------------------------------------------------------------------
+
+#: row keys "", "a]b", "c\" and NULL, each on two rows (a duplicated
+#: primary key and ``u`` value); every row fails ``n >= 0``, has a
+#: ``ref`` missing from the dimension and an element without a title
+_ODD_KEYS = ["", "a]b", "c\\", None]
+_MATRIX_SPEC = {
+    "name": "t",
+    "schema": {
+        "fields": [
+            {"name": "id", "type": "string"},
+            {"name": "n", "type": "integer", "constraints": {"minimum": 0}},
+            {"name": "u", "type": "string", "constraints": {"unique": True}},
+            {"name": "ref", "type": "string"},
+        ],
+        "primaryKey": "id",
+        "foreignKeys": [
+            {"fields": "ref", "reference": {"resource": "d", "fields": "code"}}
+        ],
+    },
+}
+_ELEMENT_SPEC = {
+    "name": "t",
+    "schema": {
+        "fields": [{"name": "title", "type": "string", "constraints": {"required": True}}]
+    },
+}
+#: the address of each emitter's violation on one row, by row key
+_ADDRESSES = {
+    "n.minimum": "$.t[{}].n",
+    "id.unique": "$.t[{}].id",
+    "u.unique": "$.t[{}].u",
+    "ref.foreign-key": "$.t[{}].ref",
+    "contributors[].title.required": "$.t[{}].contributors[0].title",
+}
+
+
+@pytest.fixture(scope="module")
+def odd_keys(spark):
+    from check_datapackage_spark import TableSpec
+
+    rows = [(k, -1, k, "zz", [{"title": None}]) for k in _ODD_KEYS for _ in range(2)]
+    df = spark.createDataFrame(
+        rows,
+        "id string, n int, u string, ref string, contributors array<struct<title:string>>",
+    )
+    dims = {"d": spark.createDataFrame([("ok",)], "code string")}
+    return df, TableSpec.from_dict(_MATRIX_SPEC), dims
+
+
+def _matrix_rows(df, spec, dims, config=None):
+    from check_datapackage_spark.plans.nested import nested_violations
+    from check_datapackage_spark.spec import TableSpec
+
+    nested = nested_violations(
+        df, "contributors", TableSpec.from_dict(_ELEMENT_SPEC), "t", row_key="id"
+    )
+    res = check_table(df, spec, config=config, dims=dims)
+    return res.violations.collect() + nested.collect()
+
+
+def test_every_emitter_writes_one_address_format(spark, odd_keys):
+    """Odd and NULL row keys get the same escaped address from the fused,
+    unique, foreign-key and nested rows (NULL is ``?``); no address is
+    NULL, and ``[*]`` and ``..`` select every one of them."""
+    from check_datapackage_spark.jsonpath import address_regex
+
+    rows = _matrix_rows(*odd_keys)
+    assert all(r["jsonpath"] is not None for r in rows)
+    escaped = ["", "a\\]b", "c\\\\", "?"]
+    got = {(r["check"], r["jsonpath"]) for r in rows}
+    for check, template in _ADDRESSES.items():
+        for key in escaped:
+            assert (check, template.format(key)) in got, (check, key)
+    for r in rows:
+        column = r["column"].split(".")[-1]
+        wildcard = template_of(r["jsonpath"]).replace("[0]", "[*]")
+        assert re.match(address_regex(wildcard), r["jsonpath"]), r["jsonpath"]
+        assert re.match(address_regex(f"..{column}"), r["jsonpath"]), r["jsonpath"]
+
+
+def template_of(address: str) -> str:
+    """``$.t[*]<suffix>`` for a ``$.t[<key>]<suffix>`` address."""
+    suffix = re.sub(r"^\$\.t\[(?:[^\]\\]|\\.)*\]", "", address)
+    return "$.t[*]" + suffix
+
+
+def test_nested_violations_without_row_key_address_each_row(spark, odd_keys):
+    """With no row key, a positional id taken before the explode gives
+    each input row its own address, so the Issue dedup keeps them all."""
+    from check_datapackage_spark.issue import dedup_violations
+    from check_datapackage_spark.plans.nested import nested_violations
+    from check_datapackage_spark.spec import TableSpec
+
+    df = odd_keys[0]
+    v = nested_violations(df, "contributors", TableSpec.from_dict(_ELEMENT_SPEC), "t")
+    addresses = [r["jsonpath"] for r in dedup_violations(v).collect()]
+    assert len(addresses) == df.count() == len(set(addresses))
+    assert all(a.endswith("].contributors[0].title") for a in addresses)
+
+
+def test_unrelated_exclusion_keeps_null_key_foreign_key_row(spark, odd_keys):
+    """An exclusion naming another column keeps the FK violation of the
+    row whose primary key is NULL."""
+    df, spec, dims = odd_keys
+    ex = CheckConfig(exclusions=(Exclusion(jsonpath="$.t[*].doc_id"),))
+    got = {r["jsonpath"] for r in check_table(df, spec, config=ex, dims=dims).violations.collect()}
+    assert "$.t[?].ref" in got
+    assert {a for a in got if a.endswith(".ref")} == {
+        "$.t[].ref", "$.t[a\\]b].ref", "$.t[c\\\\].ref", "$.t[?].ref"
+    }
