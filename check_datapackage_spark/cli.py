@@ -300,18 +300,22 @@ def main(argv=None) -> int:
             # checkpoint/resume: restrict to pending (source,bucket) units
             from .operators.audit import ResumableRun
 
-            key = args.bucket_key or (spec.primary_key[0] if spec.primary_key else None)
-            if key is None or "source" not in df.columns:
-                raise SystemExit("--resume-ledger needs a bucket key and a 'source' column")
+            # the ledger finds each violation's unit by its row key, the
+            # primary key: without one, rows are addressed by position
+            if not spec.primary_key or "source" not in df.columns:
+                raise SystemExit("--resume-ledger needs a primary key and a 'source' column")
             run = ResumableRun(
-                ledger_path=args.resume_ledger, n_buckets=args.n_buckets, key=key
+                ledger_path=args.resume_ledger,
+                n_buckets=args.n_buckets,
+                key=args.bucket_key or spec.primary_key[0],
+                row_key=list(spec.primary_key),
             )
             holder = {}
 
             def _validate(pending):
                 r = check_table(pending.drop("_bucket"), spec, config=config, dims=dims, extra_checks=extra)
                 holder["res"] = r
-                return r.violations, r
+                return r.unordered_violations, r
 
             violations, n_units = run.run(df, _validate)
             if n_units == 0:

@@ -39,12 +39,11 @@ class CompiledCheck:
     them themselves.
 
     ``instance`` may reference ANY columns of the checked DataFrame
-    (not just ``column``): the violations plan derives the columns it
-    must carry through its explode from the instance expressions
-    themselves (``plans.validation._instance_carry_columns``) and
-    evaluates them on violating rows only. It must not reference
-    columns absent from the input — that is rejected at plan-build
-    time with the check named.
+    (not just ``column``): the violations plan carries every input
+    column through its explode, Catalyst prunes the ones no instance
+    reads, and the instances are evaluated on violating rows only. It
+    must not reference columns absent from the input — that is
+    rejected at plan-build time with the check named.
     """
 
     name: str  # unique check id, e.g. "doc_id.required"

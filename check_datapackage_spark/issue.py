@@ -168,10 +168,13 @@ def violation_address(table_name: str, key: Union[str, Column], *suffix: Union[s
 
 
 def row_key_text(row_key: Union[str, Sequence[str]]) -> Column:
-    """A row key as text: one column cast (NULL stays NULL), or a
-    composite key joined with ``|`` (``concat_ws`` skips NULL parts)."""
+    """A row key as text: one column cast (NULL stays NULL, and the
+    address writes it ``?``), or a composite key joined with ``|``, a
+    NULL part written ``?`` so that distinct keys keep distinct texts."""
     parts = [F.col(k).cast("string") for k in ([row_key] if isinstance(row_key, str) else row_key)]
-    return parts[0] if len(parts) == 1 else F.concat_ws("|", *parts)
+    if len(parts) == 1:
+        return parts[0]
+    return F.concat_ws("|", *[F.coalesce(p, F.lit("?")) for p in parts])
 
 
 def violation_columns(jsonpath, type, message, instance, check, column, row_key, partition):

@@ -20,10 +20,12 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..issue import row_key_text
 
 
 def with_bucket(df: DataFrame, key: str = "doc_id", n_buckets: int = 64) -> DataFrame:
@@ -158,20 +160,22 @@ def record_units(
         out.write.mode("append").parquet(ledger)
 
 
-def unit_summary(df: DataFrame, violations: DataFrame) -> DataFrame:
+def unit_summary(
+    df: DataFrame, violations: DataFrame, row_key: Union[str, list] = "doc_id"
+) -> DataFrame:
     """Per-(source, bucket) row/violation counts for the ledger.
 
-    ``violations`` must carry ``partition`` (=source) and ``row_key``;
-    buckets are recomputed from row_key with the same hash — one tiny
-    agg each, broadcast-joined.
+    Each violation row counts in the unit of the row of ``df`` it came
+    from: the one whose ``row_key`` column(s), as text
+    (:func:`..issue.row_key_text`), equal its ``row_key``. One tiny agg
+    each, joined.
     """
     rows = df.groupBy("source", "_bucket").agg(F.count(F.lit(1)).alias("n_rows"))
+    units = df.select(row_key_text(row_key).alias("_rk"), "source", "_bucket").distinct()
     v = (
-        violations.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col("row_key")), F.lit(64)).cast("int"),
-        )
-        .groupBy(F.col("partition").alias("source"), "_bucket")
+        violations.select(F.col("row_key").alias("_vk"))
+        .join(units, F.col("_vk").eqNullSafe(F.col("_rk")))
+        .groupBy("source", "_bucket")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )
     return rows.join(v, ["source", "_bucket"], "left").fillna(
@@ -195,6 +199,9 @@ class ResumableRun:
     ledger_path: str
     n_buckets: int = 64
     key: str = "doc_id"
+    #: the column(s) whose text the violations carry as ``row_key`` (the
+    #: validated table's primary key); ``key`` when None
+    row_key: Optional[Union[str, list]] = None
 
     def run(self, df: DataFrame, validate_fn, run_id: Optional[str] = None):
         """``validate_fn(df_pending) -> (violations, _)``; processes only
@@ -206,6 +213,6 @@ class ResumableRun:
         if n_pending == 0:
             return None, 0
         violations, _ = validate_fn(pending)
-        summ = unit_summary(pending, violations)
+        summ = unit_summary(pending, violations, self.row_key or self.key)
         record_units(summ, self.ledger_path, run_id)
         return violations, n_pending

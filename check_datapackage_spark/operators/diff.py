@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,17 +42,19 @@ def snapshot_diff(
         if compare_cols is not None
         else [c for c in old.columns if c not in keys and c in new.columns]
     )
+    # input columns by quoted name (a dotted name is not struct access),
+    # own columns by position
     o = old.select(
-        *[F.col(k).alias(f"_k_{k}") for k in keys],
+        *[_quoted(k).alias(f"_k{i}") for i, k in enumerate(keys)],
         F.lit(1).alias("_in_old"),
-        *[F.col(c).alias(f"_o_{c}") for c in cols],
+        *[_quoted(c).alias(f"_o{i}") for i, c in enumerate(cols)],
     )
     n = new.select(
-        *[F.col(k).alias(f"_k_{k}") for k in keys],
+        *[_quoted(k).alias(f"_k{i}") for i, k in enumerate(keys)],
         F.lit(1).alias("_in_new"),
-        *[F.col(c).alias(f"_n_{c}") for c in cols],
+        *[_quoted(c).alias(f"_n{i}") for i, c in enumerate(cols)],
     )
-    j = o.join(n, [f"_k_{k}" for k in keys], "full_outer")
+    j = o.join(n, [f"_k{i}" for i in range(len(keys))], "full_outer")
     both = F.col("_in_old").isNotNull() & F.col("_in_new").isNotNull()
     agg = j.agg(
         F.sum(both.cast("long")).alias("n_common"),
@@ -68,22 +70,27 @@ def snapshot_diff(
         ).alias("n_removed"),
         *[
             F.sum(
-                (both & ~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))).cast(
+                (both & ~F.col(f"_o{i}").eqNullSafe(F.col(f"_n{i}"))).cast(
                     "long"
                 )
-            ).alias(f"_chg_{c}")
-            for c in cols
+            ).alias(f"_chg{i}")
+            for i in range(len(cols))
         ],
     )
     # unpivot the per-column change counts: |columns| rows out; names
     # are literals, never pasted into SQL text
     stack = F.stack(
         F.lit(len(cols)),
-        *[a for c in cols for a in (F.lit(c), F.col(f"_chg_{c}"))],
+        *[a for i, c in enumerate(cols) for a in (F.lit(c), F.col(f"_chg{i}"))],
     ).alias("column", "n_changed")
     return agg.select("n_common", "n_added", "n_removed", stack).select(
         "column", "n_common", "n_added", "n_removed", "n_changed"
     )
+
+
+def _quoted(name: str) -> Column:
+    """The column named ``name``, quoted so that dots are part of it."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def schema_diff(old: DataFrame, new: DataFrame) -> list:

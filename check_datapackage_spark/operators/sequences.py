@@ -50,24 +50,33 @@ def structure_flags(
     """
 
     def flags_of(t: Column) -> Column:
-        first = F.try_element_at(t, F.lit(1))
-        last = F.try_element_at(t, F.lit(-1))
-        n_pad = F.size(F.filter(t, lambda x: x == F.lit(pad)))
-        interior_pads = (
-            n_pad
-            - F.coalesce((first == pad).cast("int"), F.lit(0))
-            - F.coalesce((last == pad).cast("int"), F.lit(0))
-        )
+        first, last, interior_pads, oov = _structure_terms(t, pad, max_id)
         return F.struct(
             F.coalesce(first != bos, F.lit(True)).alias("missing_bos"),
             F.coalesce(last != eos, F.lit(True)).alias("bad_eos"),
             (interior_pads > 0).alias("pad_interior"),
-            F.exists(
-                t, lambda x: (x < F.lit(0)) | (x > F.lit(max_id))
-            ).alias("oov"),
+            oov.alias("oov"),
         )
 
     return let_col(tokens, flags_of)
+
+
+def _structure_terms(t: Column, pad: int, max_id: int) -> tuple:
+    """The terms both :func:`structure_flags` and
+    :func:`structure_checks` test, over a token array ``t``: its first
+    and last ids (NULL when empty, ``try_element_at`` is ANSI-safe), the
+    number of pads between them (all pads, less the endpoints), and
+    whether any id lies outside ``[0, max_id]``."""
+    first = F.try_element_at(t, F.lit(1))
+    last = F.try_element_at(t, F.lit(-1))
+    n_pad = F.size(F.filter(t, lambda x: x == F.lit(pad)))
+    interior_pads = (
+        n_pad
+        - F.coalesce((first == pad).cast("int"), F.lit(0))
+        - F.coalesce((last == pad).cast("int"), F.lit(0))
+    )
+    oov = F.exists(t, lambda x: (x < F.lit(0)) | (x > F.lit(max_id)))
+    return first, last, interior_pads, oov
 
 
 def structure_summary(
@@ -117,14 +126,7 @@ def structure_checks(
     from ..compile import compile_invariant
 
     t = F.col(column)
-    first = F.try_element_at(t, F.lit(1))
-    last = F.try_element_at(t, F.lit(-1))
-    n_pad = F.size(F.filter(t, lambda x: x == F.lit(pad)))
-    interior_pads = (
-        n_pad
-        - F.coalesce((first == pad).cast("int"), F.lit(0))
-        - F.coalesce((last == pad).cast("int"), F.lit(0))
-    )
+    first, last, interior_pads, oov = _structure_terms(t, pad, max_id)
     null_ok = t.isNull()
     return [
         compile_invariant(
@@ -153,8 +155,7 @@ def structure_checks(
         ),
         compile_invariant(
             name=f"{column}.in_vocab",
-            ok=null_ok
-            | ~F.exists(t, lambda x: (x < F.lit(0)) | (x > F.lit(max_id))),
+            ok=null_ok | ~oov,
             issue_type="structure",
             message=f"token ids must be in [0, {max_id}]",
             column=column,

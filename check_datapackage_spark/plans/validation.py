@@ -5,10 +5,12 @@ The reference walks the JSON document once and collects ALL violations
 does the table analog in one scan:
 
 * **violations**: one array per row of the indices of the checks it
-  fails; one ``explode``, then the row is written through
-  :mod:`..issue`'s writer, on violating rows only. Nested elements run
-  on this branch too (:mod:`.nested`). No shuffle, no Python, and
-  Catalyst prunes the scan down to exactly the checked columns.
+  fails; one ``explode`` that carries the whole row, then the row is
+  written through :mod:`..issue`'s writer, on violating rows only.
+  Nested elements run on this branch too (:mod:`.nested`). No shuffle,
+  no Python, and Catalyst prunes the scan (and the explode) down to
+  exactly the columns the checks and their instances read — nothing
+  derives them by hand.
 * **summary**: without ``partitionBy``, an ``Observation`` on the
   pre-explode frame counts ``n_rows`` and one fail count per check from
   the same failing-check array, so the action that executes the
@@ -21,9 +23,10 @@ does the table analog in one scan:
   |checks| longs regardless of table size.
 * **compile once, apply per frame**: :class:`ValidationPlan` holds
   everything that does not depend on the rows (spec issues, compiled
-  and pruned checks, every Column expression of the fused branch);
-  ``apply`` only builds DataFrames. :func:`check_table` is the two in a
-  row; a stream reuses one plan while its batch schema holds.
+  and pruned checks, every Column expression of the fused branch) and
+  keeps no per-frame state; ``apply`` only builds DataFrames.
+  :func:`check_table` is the two in a row; a stream reuses one plan
+  while its batch schema holds.
 
 Never ``limit`` violations (mirror the reference's no-short-circuit
 rule, SURVEY §4); optionally cap *persisted examples* per check with a
@@ -37,6 +40,7 @@ from dataclasses import dataclass, field as dc_field
 from functools import reduce
 from typing import Callable, Optional, Sequence, Union
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -82,8 +86,9 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
     return df
 
 
-#: the failing-check index array column of the fused branch
-_FAILS = "__cdp_fails"
+#: the fused branch's own columns; the prefix keeps them apart from
+#: table columns
+_FAILS, _KEY, _PART, _CI = "__cdp_fails", "__cdp_k", "__cdp_p", "__cdp_ci"
 #: the element index column of a frame of array elements (nested.py)
 ELEMENT_INDEX = "__cdp_i"
 
@@ -91,9 +96,9 @@ ELEMENT_INDEX = "__cdp_i"
 class _FusedBranch:
     """The fused branch of ``checks`` as Column expressions that do not
     depend on the input frame: the let layers, the failing-check array
-    and the violation payload. Built once; :meth:`frame` and
-    :meth:`violations` only build DataFrames, so a plan reused across
-    micro-batches builds the expressions once.
+    and the violation payload. It holds nothing per frame: :meth:`frame`
+    and :meth:`violations` only build DataFrames, so a plan reused
+    across micro-batches builds the expressions once.
 
     Only the checks at the indices in ``emit`` are exploded; the array
     (and an observed summary reading it) covers all of ``checks``.
@@ -131,13 +136,15 @@ class _FusedBranch:
         # a size(_v) > 0 Filter that DUPLICATES the array expression on
         # every row (13× measured with interpreted variant checks) — the
         # rule is excluded session-wide (session.exclude_infer_filters).
-        self._head = [key_col.cast("string").alias("_k"), part_col.alias("_p")]
-        if element:
-            self._head.append(F.col(ELEMENT_INDEX))
-        self._explode = F.explode(fails).alias("_ci")
-        #: input columns the instances reference, per input schema — see
-        #: :meth:`violations`
-        self._carry: Optional[list[Column]] = None
+        # Every input column rides through the explode for the instances,
+        # which may read any of them; Catalyst prunes the Generate down to
+        # the columns the payload reads, so the rest never leave the scan.
+        self._exploded = [
+            key_col.cast("string").alias(_KEY),
+            part_col.alias(_PART),
+            "*",
+            F.explode(fails).alias(_CI),
+        ]
 
         # All payload — jsonpath, constants, the instance value — is
         # resolved AFTER the explode, i.e. on violating rows only. The
@@ -146,7 +153,7 @@ class _FusedBranch:
         # any staging when-chains per row inside one giant interpreted
         # expression (variant checks disable codegen): q38 measured
         # 14.2 s per execution vs ~2 s with this emission at sf0.1.
-        idx = F.col("_ci") + 1  # element_at is 1-based
+        idx = F.col(_CI) + 1  # element_at is 1-based
 
         def const(fn) -> Column:
             """Per-check constant via literal-array lookup (one
@@ -160,19 +167,19 @@ class _FusedBranch:
         # expression size, measured 90 s vs ~3 s on the 29-check q07
         instance: Optional[Column] = None
         for i in emit:
-            branch = (F.col("_ci") == i, self.checks[i].instance.cast("string"))
+            branch = (F.col(_CI) == i, self.checks[i].instance.cast("string"))
             instance = F.when(*branch) if instance is None else instance.when(*branch)
         self._payload = violation_columns(
             # the address suffix is precomputed per check, so table-level
             # checks (column None) get none
-            jsonpath=violation_address(table_name, F.col("_k"), *segment, const(_column_suffix)),
+            jsonpath=violation_address(table_name, F.col(_KEY), *segment, const(_column_suffix)),
             type=const(lambda ck: ck.issue_type),
             message=const(lambda ck: ck.message),
             instance=instance.otherwise(F.lit(None).cast("string")),
             check=const(lambda ck: prefix + ck.name),
             column=const(lambda ck: ck.column and prefix + ck.column),
-            row_key=F.col("_k"),
-            partition=F.col("_p"),
+            row_key=F.col(_KEY),
+            partition=F.col(_PART),
         )
 
     def frame(self, df: DataFrame) -> DataFrame:
@@ -187,21 +194,23 @@ class _FusedBranch:
     def violations(self, framed: DataFrame) -> DataFrame:
         """Violation rows (VIOLATION_FULL_SCHEMA) of a :meth:`frame`.
 
-        The post-explode payload may reference ANY input column
-        (cross-column invariants, column=None checks — the full
-        compile_invariant contract). The referenced columns come from
-        one driver-side analysis of the instances (~50 ms, no
-        execution) on the first frame; the branch belongs to one input
-        schema, so later frames reuse them. Carrying them through the
-        Generate is free (Generate appends to the input row) and keeps
-        column pruning intact — unreferenced table columns never leave
-        the scan."""
-        if self._carry is None:
-            self._carry = [
-                F.col(c) for c in _instance_carry_columns(framed, self.emit_checks)
-            ]
-        exploded = framed.select(*self._head, *self._carry, self._explode)
-        return exploded.select(*self._payload)
+        The post-explode payload may read ANY input column (cross-column
+        invariants, column=None checks — the full compile_invariant
+        contract). An instance that reads a column ``framed`` lacks is
+        rejected here, with the check named."""
+        exploded = framed.select(*self._exploded)
+        try:
+            return exploded.select(*self._payload)
+        except AnalysisException:
+            for ck in self.emit_checks:
+                try:
+                    framed.select(ck.instance)
+                except AnalysisException as e:
+                    raise ValueError(
+                        f"check {ck.name!r}: instance expression does not "
+                        f"resolve against the input columns {framed.columns}: {e}"
+                    ) from e
+            raise
 
 
 def violations_plan(
@@ -230,56 +239,6 @@ def _column_suffix(ck: CompiledCheck) -> str:
     """The address suffix after ``$.<table>[<row key>]``: ``.<column>``,
     or nothing for a table-level check."""
     return f".{ck.column}" if ck.column else ""
-
-
-def _instance_carry_columns(
-    df: DataFrame, checks: Sequence[CompiledCheck]
-) -> list[str]:
-    """Input columns referenced by any check's ``instance`` expression.
-
-    ONE analysis pass (never executed): project every instance against
-    ``df`` and read each aliased expression's references off the
-    analyzed plan. An instance that references a column absent from
-    ``df`` fails here, at plan-build time, with the offending check
-    named — not later with a bare AnalysisException from deep inside
-    the exploded plan. Falls back to each check's declared-column root
-    if the JVM plan introspection is unavailable (e.g. Spark Connect,
-    where ``_jdf`` does not exist)."""
-    try:
-        probe = df.select(
-            [ck.instance.alias(f"_i{i}") for i, ck in enumerate(checks)]
-        )
-        exprs = probe._jdf.queryExecution().analyzed().expressions()
-        refs: set[str] = set()
-        for i in range(exprs.length()):
-            it = exprs.apply(i).references().iterator()
-            while it.hasNext():
-                refs.add(it.next().name())
-        return [c for c in df.columns if c in refs]
-    except AttributeError:
-        # no classic-mode JVM handle — conservative fallback: declared
-        # column roots (documented on CompiledCheck as the portable
-        # contract for instance expressions)
-        carry: list[str] = []
-        seen: set[str] = set()
-        for ck in checks:
-            root = (ck.column or "").split(".", 1)[0]
-            if root and root in df.columns and root not in seen:
-                seen.add(root)
-                carry.append(root)
-        return carry
-    except Exception:
-        # combined analysis failed → per-check probes to name the
-        # culprit in the error
-        for ck in checks:
-            try:
-                df.select(ck.instance)._jdf.queryExecution().analyzed()
-            except Exception as e:
-                raise ValueError(
-                    f"check {ck.name!r}: instance expression does not "
-                    f"resolve against the input columns {df.columns}: {e}"
-                ) from e
-        raise
 
 
 def summary_plan(
@@ -573,8 +532,11 @@ class ValidationPlan:
     uniqueness and foreign-key checks that run; and every Column
     expression of the fused branch (failing-check array, observed
     aggregates, literal lookup arrays, instance ``CaseWhen``) and of the
-    exclusion filter. The instance carry columns are resolved on the
-    first frame and kept."""
+    exclusion filter. Nothing is kept per frame.
+
+    A streaming frame cannot be validated here: the dedup window and the
+    observed summary need a batch frame (a stream goes through
+    :func:`~..streaming.checks.foreach_batch_validator`)."""
 
     def __init__(
         self,
@@ -591,7 +553,7 @@ class ValidationPlan:
         config = config or CheckConfig()
         dims = dims or {}
         self.spec, self.config = spec, config
-        self.schema, self.streaming = df.schema, df.isStreaming
+        self.schema = df.schema
 
         actual_cols = set(self.schema.fieldNames())
         pk_present = [k for k in spec.primary_key if k in actual_cols]
@@ -629,25 +591,24 @@ class ValidationPlan:
         # plan pruning: checks whose every violation a type/whole-column
         # exclusion would drop are never computed (U4 pushdown)
         emitted = prune_excluded_checks(self.runnable, config.exclusions, spec.name)
-        self.observe = bool(emitted) and self.partition is None and not self.streaming
-        self.branch: Optional[_FusedBranch] = None
-        if self.observe:
-            # one failing-check array over ALL runnable checks: the
-            # observed summary counts every check, the explode emits only
-            # the unpruned ones
-            keep = {id(ck) for ck in emitted}
-            self.branch = _FusedBranch(
-                self.runnable,
-                [i for i, ck in enumerate(self.runnable) if id(ck) in keep],
+        #: the unpartitioned summary is observed on the fused branch: then
+        #: its failing-check array covers ALL runnable checks and the
+        #: explode emits only the unpruned ones
+        self.observe = bool(emitted) and self.partition is None
+        covered = self.runnable if self.observe else emitted
+        keep = {id(ck) for ck in emitted}
+        self.branch = (
+            _FusedBranch(
+                covered,
+                [i for i, ck in enumerate(covered) if id(ck) in keep],
                 spec.name,
                 row_key,
-                None,
+                self.partition,
             )
-            self.metrics = _ObservedSummary.metrics(len(self.runnable))
-        elif emitted:
-            self.branch = _FusedBranch(
-                emitted, range(len(emitted)), spec.name, row_key, self.partition
-            )
+            if emitted
+            else None
+        )
+        self.metrics = _ObservedSummary.metrics(len(covered)) if self.observe else None
 
         # Gate (R1, ref check.py:330-337): skip data-level key checks whose
         # declaration is itself broken.
@@ -691,9 +652,8 @@ class ValidationPlan:
         self.kept = _kept_by_exclusions(config.exclusions)
 
     def matches(self, df: DataFrame) -> bool:
-        """True when ``df`` has the schema (and streaming-ness) this plan
-        was compiled for."""
-        return df.isStreaming == self.streaming and df.schema == self.schema
+        """True when ``df`` has the schema this plan was compiled for."""
+        return df.schema == self.schema
 
     def apply(self, df: DataFrame) -> ValidationResult:
         """Bind the plan to ``df``: builds the violation and summary

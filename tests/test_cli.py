@@ -431,3 +431,42 @@ def test_host_session_keeps_its_confs():
     )
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
     assert lines == ["RESULT True 3 True"], out.stdout + out.stderr
+
+
+def test_cli_resume_ledger_records_violations_per_unit(spark, sf_dir, tmp_path):
+    """The ledger counts each violation row in the work unit of the row
+    it came from: its violation counts sum to the violation rows, and no
+    unit holding a violating row is recorded passed."""
+    from pyspark.sql import functions as F
+
+    from check_datapackage_spark import check_table
+    from check_datapackage_spark.operators.audit import with_bucket
+    from check_datapackage_spark.sources.registry import load_table, read_spec
+
+    spec = {"resources": [{"name": "documents", "schema": {
+        "fields": [{"name": "doc_id", "type": "integer", "constraints": {"required": True}},
+                   {"name": "n_chars", "type": "integer", "constraints": {"maximum": 400}}],
+        "primaryKey": "doc_id"}}]}
+    spec_path = tmp_path / "datapackage.json"
+    spec_path.write_text(json.dumps(spec))
+    ledger = str(tmp_path / "ledger")
+    rc = _in_process(
+        spark, tmp_path, "--data", sf_dir, "--table", "documents",
+        "--spec", str(spec_path), "--resume-ledger", ledger, "--n-buckets", "4",
+    )
+    assert rc == 0
+
+    docs = load_table(spark, sf_dir, "documents")
+    v = check_table(docs, read_spec(str(spec_path), resource="documents")).violations
+    n_violations = v.count()
+    assert n_violations > 0
+    violating = {
+        (r["source"], r["_bucket"])
+        for r in with_bucket(docs, "doc_id", 4)
+        .join(v, F.col("doc_id").cast("string") == F.col("row_key"), "left_semi")
+        .select("source", "_bucket").distinct().collect()
+    }
+    led = spark.read.parquet(ledger).collect()
+    assert sum(r["n_violations"] for r in led) == n_violations
+    assert violating
+    assert not [r for r in led if r["passed"] and (r["source"], r["bucket"]) in violating]

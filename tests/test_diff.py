@@ -69,6 +69,16 @@ def test_snapshot_diff_quoted_column_name(spark):
     assert (row["column"], row["n_changed"], row["n_common"]) == ("it's", 1, 2)
 
 
+def test_snapshot_diff_dotted_column_name(spark):
+    """A column named ``a.b`` (key or compared) is that column, not a
+    struct field access."""
+    old = spark.createDataFrame([(1, 5, "x"), (2, 6, "y")], "`k.id` long, `a.b` long, c string")
+    new = spark.createDataFrame([(1, 5, "x"), (2, 7, "y"), (3, 1, "z")], "`k.id` long, `a.b` long, c string")
+    rows = {r["column"]: r for r in diff.snapshot_diff(old, new, ["k.id"]).collect()}
+    assert {c: r["n_changed"] for c, r in rows.items()} == {"a.b": 1, "c": 0}
+    assert (rows["a.b"]["n_common"], rows["a.b"]["n_added"], rows["a.b"]["n_removed"]) == (2, 1, 0)
+
+
 def test_heavy_hitters_skew_profile(spark):
     from check_datapackage_spark.operators import stats
 

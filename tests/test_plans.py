@@ -305,3 +305,29 @@ def test_funnel_counts_no_history_collection(spark, sf_dir):
     out = funnel_counts(ev, ["view", "click", "purchase"])
     rows = {r.step: r.n_users for r in out.collect()}
     assert rows["view"] >= rows["click"] >= rows["purchase"]
+
+
+def test_violations_plan_reads_only_checked_and_instance_columns(spark, tmp_path):
+    """The explode carries the whole row, yet the scan reads only the
+    key, the checked columns and the columns instances read."""
+    from check_datapackage_spark import TableSpec, compile_table_checks, violations_plan
+    from check_datapackage_spark.compile import compile_invariant
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [(1, -1, "a", "x" * 10)], "id int, n int, note string, unread string"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    spec = TableSpec.from_dict({"name": "t", "schema": {"fields": [
+        {"name": "n", "type": "integer", "constraints": {"minimum": 0}}]}})
+    note = compile_invariant(
+        name="n.small", ok=F.col("n") < 10, issue_type="maximum",
+        message="n must be < 10", column="n", instance=F.col("note"),
+    )
+    checks = compile_table_checks(spec, schema=df.schema) + [note]
+    v = violations_plan(df, checks, "t", row_key="id")
+    [read_schema] = [l for l in plan_of(v).splitlines() if "ReadSchema" in l]
+    for c in ("id", "n", "note"):
+        assert f"{c}:" in read_schema, read_schema
+    assert "unread" not in read_schema, read_schema
+    assert v.count() == 1

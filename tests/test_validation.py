@@ -476,3 +476,86 @@ def test_unrelated_exclusion_keeps_null_key_foreign_key_row(spark, odd_keys):
     assert {a for a in got if a.endswith(".ref")} == {
         "$.t[].ref", "$.t[a\\]b].ref", "$.t[c\\\\].ref", "$.t[?].ref"
     }
+
+
+def _invariant_table(spark):
+    """Rows (id, n, note, _k, _p, _ci) with table columns named like the
+    fused branch's old working columns."""
+    return spark.createDataFrame(
+        [(1, 5, "a", 1, "x", 0), (2, -1, "b", -7, "y", 1), (3, -2, "c", 3, "z", -4)],
+        "id int, n int, note string, _k int, _p string, _ci int",
+    )
+
+
+def test_table_columns_named_like_branch_columns(spark):
+    """Columns ``_k``, ``_p`` and ``_ci`` are ordinary table columns:
+    instances read them and the fields on them validate."""
+    from check_datapackage_spark import TableSpec
+    from check_datapackage_spark.compile import compile_invariant
+
+    spec = TableSpec.from_dict({"name": "t", "schema": {"primaryKey": "id", "fields": [
+        {"name": "id", "type": "integer"},
+        {"name": "_ci", "type": "integer", "constraints": {"minimum": 0}}]}})
+    k_positive = compile_invariant(
+        name="_k.positive", ok=F.col("_k") > 0, issue_type="minimum",
+        message="_k must be positive", column="_k",
+        instance=F.concat_ws(":", F.col("_k"), F.col("_p")),
+    )
+    rows = check_table(_invariant_table(spark), spec, extra_checks=[k_positive]).violations
+    got = {(r["jsonpath"], r["check"], r["instance"]) for r in rows.collect()}
+    assert got == {
+        ("$.t[2]._k", "_k.positive", "-7:y"),
+        ("$.t[3]._ci", "_ci.minimum", "-4"),
+    }
+
+
+def test_invariant_instance_reads_another_column(spark):
+    """An invariant's instance may read a column other than its own."""
+    from check_datapackage_spark import TableSpec
+    from check_datapackage_spark.compile import compile_invariant
+
+    spec = TableSpec.from_dict({"name": "t", "schema": {
+        "primaryKey": "id", "fields": [{"name": "id", "type": "integer"}]}})
+    check = compile_invariant(
+        name="n.nonneg", ok=F.col("n") >= 0, issue_type="minimum",
+        message="n must be >= 0", column="n", instance=F.col("note"),
+    )
+    rows = check_table(_invariant_table(spark), spec, extra_checks=[check]).violations
+    assert [(r["jsonpath"], r["instance"]) for r in rows.collect()] == [
+        ("$.t[2].n", "b"), ("$.t[3].n", "c")
+    ]
+
+
+def test_instance_of_absent_column_names_the_check(spark):
+    """An instance that reads a column the table lacks fails when the
+    plan is built, with the check named."""
+    from check_datapackage_spark import TableSpec
+    from check_datapackage_spark.compile import compile_invariant
+
+    spec = TableSpec.from_dict({"name": "t", "schema": {
+        "primaryKey": "id", "fields": [{"name": "id", "type": "integer"}]}})
+    check = compile_invariant(
+        name="n.nonneg", ok=F.col("n") >= 0, issue_type="minimum",
+        message="n must be >= 0", column="n", instance=F.col("absent"),
+    )
+    with pytest.raises(ValueError, match="'n.nonneg'.*does not resolve"):
+        check_table(_invariant_table(spark), spec, extra_checks=[check])
+
+
+def test_composite_key_null_parts_keep_rows_apart(spark):
+    """A NULL part of a composite row key is written ``?``, so keys that
+    differ only in where the NULL sits keep distinct addresses."""
+    from check_datapackage_spark import TableSpec
+
+    spec = TableSpec.from_dict({"name": "t", "schema": {"primaryKey": ["a", "b"], "fields": [
+        {"name": "a", "type": "string"}, {"name": "b", "type": "string"},
+        {"name": "n", "type": "integer", "constraints": {"minimum": 0}}]}})
+    df = spark.createDataFrame(
+        [(None, "x", -1), ("x", None, -2), ("x", "y", -3)], "a string, b string, n int"
+    )
+    rows = check_table(df, spec).violations.where(F.col("type") == "minimum").collect()
+    assert [(r["jsonpath"], r["instance"], r["row_key"]) for r in rows] == [
+        ("$.t[?|x].n", "-1", "?|x"),
+        ("$.t[x|?].n", "-2", "x|?"),
+        ("$.t[x|y].n", "-3", "x|y"),
+    ]
