@@ -9,6 +9,11 @@ check <source>`` analog (ref cli.py:50-85, SURVEY §3.2).
 
 Exit code = 1 when violations were found and --error is set
 (ref check.py:288-289: error=True raises DataPackageError).
+
+The CLI adds no validation rules: ``--strict`` (or TOML ``strict``)
+only sets ``CheckConfig.strict``, which the library applies. With
+``--resume-ledger``, one ``check_table`` call over the pending work
+units feeds the count, the sink and the ledger.
 """
 
 from __future__ import annotations
@@ -22,54 +27,8 @@ from .issue import DataPackageError, explain, pretty_print
 from .plans.validation import check_table
 from .session import get_spark
 from .sources.registry import load_table, parse_source, read_spec, write_violations
-from .spec import (
-    SEMVER_PATTERN,
-    STRICT_NAME_PATTERN,
-    CheckConfig,
-    Exclusion,
-    strict_spec_issues,
-    validate_package,
-)
-
-
-def strictify(spec):
-    """Strict profile — the full reference rule set
-    (ref _set_should_fields_to_required, check.py:516-538):
-
-    * every declared field promoted to required (SHOULD → REQUIRED)
-    * ``name`` field: strict name pattern
-    * ``version`` field: semver pattern (ref check.py:522-527)
-    * ``contributors`` / ``sources`` fields: every item must have a
-      ``title`` (ref check.py:533-534) — compiled via the jsonSchema
-      ``items.required`` constraint, which routes on the physical type
-      (array<struct> forall / JSON-string from_json)
-    * the table name itself must match the strict name pattern (ref
-      resources/items name pattern, check.py:535-537) — surfaced as a
-      spec-level issue via :func:`~.spec.strict_spec_issues`, which
-      check_table applies whenever ``config.strict`` is set.
-    """
-    from dataclasses import replace
-
-    fields = []
-    for f in spec.fields:
-        c = f.constraints
-        if f.name == "name" and c.pattern is None:
-            c = replace(c, pattern=STRICT_NAME_PATTERN)
-        if f.name == "version" and c.pattern is None:
-            c = replace(c, pattern=SEMVER_PATTERN)
-        if f.name in ("contributors", "sources"):
-            js = dict(c.json_schema or {})
-            items = dict(js.get("items") or {})
-            req = list(items.get("required") or [])
-            if "title" not in req:
-                req.append("title")
-            items["required"] = req
-            js["items"] = items
-            c = replace(c, json_schema=js)
-        fields.append(replace(f, constraints=replace(c, required=True)))
-    return replace(spec, fields=tuple(fields))
-
-
+from .spec import CheckConfig, Exclusion, validate_package
+from .spec import strictify  # noqa: F401  (re-exported; lives in spec)
 
 
 #: ref CUSTOM_CHECKS_CONFIG_ERROR (cli.py:20-23): CustomCheck requires a
@@ -124,10 +83,10 @@ def load_toml_config(path: str = ".cdp.toml") -> dict:
 
 @contextmanager
 def _executed_once(results):
-    """Persist each result's unordered violations for one report: the
-    first action executes the plans (and completes their observed
-    summaries), every later one reads the cached rows, sorted or not.
-    The cache is released on the way out."""
+    """Persist each result's unordered violations for one report (and
+    resume-ledger write): the first action executes the plans (and
+    completes their observed summaries), every later one reads the
+    cached rows, sorted or not. The cache is released on the way out."""
     frames = [r.unordered_violations for r in results]
     for v in frames:
         v.persist()
@@ -232,9 +191,6 @@ def main(argv=None) -> int:
             resource=args.resource or args.table,
             allow_remote=args.allow_remote,
         )
-        strict = args.strict or toml_cfg.get("strict", False)
-        if strict:
-            spec = strictify(spec)
         # explicit CLI flag wins over TOML (same precedence as --strict)
         version = args.spec_version or toml_cfg.get("version") or "v2"
         if version not in ("v1", "v2"):
@@ -245,7 +201,7 @@ def main(argv=None) -> int:
             )
             return 1
         config = CheckConfig(
-            strict=strict,
+            strict=args.strict or toml_cfg.get("strict", False),
             version=version,
             exclusions=tuple(
                 [Exclusion(type=t) for t in args.exclude_type]
@@ -264,7 +220,6 @@ def main(argv=None) -> int:
                 parse_source(args.spec),
                 config=config,
                 loader=lambda s, n: load_table(s, args.data, n),
-                spec_transform=strictify if strict else None,
             )
             all_issues = list(pres.descriptor_issues) + [
                 i for r in pres.resources.values() for i in (r.spec_issues or [])
@@ -296,6 +251,7 @@ def main(argv=None) -> int:
             )
         dims = {d: load_table(spark, args.data, d) for d in args.dims}
 
+        run = None
         if args.resume_ledger:
             # checkpoint/resume: restrict to pending (source,bucket) units
             from .operators.audit import ResumableRun
@@ -310,20 +266,12 @@ def main(argv=None) -> int:
                 key=args.bucket_key or spec.primary_key[0],
                 row_key=list(spec.primary_key),
             )
-            holder = {}
-
-            def _validate(pending):
-                r = check_table(pending.drop("_bucket"), spec, config=config, dims=dims, extra_checks=extra)
-                holder["res"] = r
-                return r.unordered_violations, r
-
-            violations, n_units = run.run(df, _validate)
+            pending, n_units = run.pending(df)
             if n_units == 0:
                 print("All work units already complete — nothing to do.")
                 return 0
-            res = holder["res"]
-        else:
-            res = check_table(df, spec, config=config, dims=dims, extra_checks=extra)
+            df = pending.drop("_bucket")
+        res = check_table(df, spec, config=config, dims=dims, extra_checks=extra)
 
         # package-level G1/G2 adjudication (resource path/data oneOf,
         # path string-vs-array — ref check.py:616-680) on the raw
@@ -344,6 +292,9 @@ def main(argv=None) -> int:
                 res.unordered_violations, res.violations, [(None, res)],
                 all_issues, args.audit,
             )
+            if run is not None:
+                # after the sink: a unit is complete once its rows are out
+                run.record(pending, res.unordered_violations)
         return rc if args.error else 0
     except DataPackageError:
         return 1

@@ -98,18 +98,6 @@ def pending_units(df: DataFrame, spark: SparkSession, ledger_path: str) -> DataF
     )
 
 
-def filter_to_pending(
-    df: DataFrame, spark: SparkSession, ledger_path: str
-) -> DataFrame:
-    """Restrict the input to pending work units (broadcast semi-join on
-    the tiny unit list — partition pruning does the heavy lifting when
-    the table is Iceberg-partitioned by source)."""
-    pend = pending_units(df, spark, ledger_path)
-    return df.join(
-        F.broadcast(pend), ["source", "_bucket"], "left_semi"
-    )
-
-
 def record_units(
     summary_per_unit: DataFrame, ledger: str, run_id: Optional[str] = None
 ) -> None:
@@ -203,16 +191,29 @@ class ResumableRun:
     #: validated table's primary key); ``key`` when None
     row_key: Optional[Union[str, list]] = None
 
+    def pending(self, df: DataFrame) -> tuple[DataFrame, int]:
+        """The rows of ``df`` in work units the ledger has not recorded
+        complete, with their ``_bucket``, and the number of those units."""
+        b = with_bucket(df, self.key, self.n_buckets)
+        units = pending_units(b, df.sparkSession, self.ledger_path)
+        # a unit with a NULL source matches no row in the join below
+        units = units.where(F.col("source").isNotNull())
+        # broadcast semi-join on the tiny unit list (partition pruning does
+        # the heavy lifting when the table is partitioned by source)
+        return b.join(F.broadcast(units), ["source", "_bucket"], "left_semi"), units.count()
+
+    def record(self, pending: DataFrame, violations: DataFrame, run_id: Optional[str] = None):
+        """Append one ledger row per unit of ``pending``: its row and
+        ``violations`` counts (which execute here unless cached)."""
+        summ = unit_summary(pending, violations, self.row_key or self.key)
+        record_units(summ, self.ledger_path, run_id)
+
     def run(self, df: DataFrame, validate_fn, run_id: Optional[str] = None):
         """``validate_fn(df_pending) -> (violations, _)``; processes only
         pending units, records them, returns (violations, n_units_done)."""
-        spark = df.sparkSession
-        b = with_bucket(df, self.key, self.n_buckets)
-        pending = filter_to_pending(b, spark, self.ledger_path)
-        n_pending = plan_units(pending).count()
+        pending, n_pending = self.pending(df)
         if n_pending == 0:
             return None, 0
         violations, _ = validate_fn(pending)
-        summ = unit_summary(pending, violations, self.row_key or self.key)
-        record_units(summ, self.ledger_path, run_id)
+        self.record(pending, violations, run_id)
         return violations, n_pending

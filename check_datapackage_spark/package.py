@@ -85,7 +85,6 @@ def check_package(
     config: Optional[CheckConfig] = None,
     loader: Optional[Callable[[SparkSession, str], DataFrame]] = None,
     tables: Optional[dict[str, DataFrame]] = None,
-    spec_transform: Optional[Callable[[TableSpec], TableSpec]] = None,
 ) -> PackageResult:
     """Validate every resource in ``doc`` (a datapackage.json dict or a
     path to one) against its data.
@@ -94,6 +93,8 @@ def check_package(
     ``loader(spark, name)`` → parquet ``<data_dir>/<name>.parquet``.
     Sibling resources referenced by a resource's foreignKeys are passed
     as that resource's ``dims`` — loaded once, shared across resources.
+    ``config`` applies to every resource, ``strict`` included (each
+    resource's :func:`check_table` applies the strict rules).
     """
     if isinstance(doc, str):
         with open(doc) as f:
@@ -104,9 +105,6 @@ def check_package(
     for r in doc.get("resources", []):
         if isinstance(r, dict):
             spec = TableSpec.from_dict(r)
-            if spec_transform is not None:
-                # e.g. the CLI's strict-mode rewrite (E3), per resource
-                spec = spec_transform(spec)
             specs[spec.name] = spec
 
     if loader is None:

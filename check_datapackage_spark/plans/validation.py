@@ -532,7 +532,10 @@ class ValidationPlan:
     uniqueness and foreign-key checks that run; and every Column
     expression of the fused branch (failing-check array, observed
     aggregates, literal lookup arrays, instance ``CaseWhen``) and of the
-    exclusion filter. Nothing is kept per frame.
+    exclusion filter. Nothing is kept per frame. Under ``config.strict``
+    the spec is compiled as :func:`~..spec.strictify` rewrites it and the
+    table name is checked (:func:`~..spec.strict_spec_issues`): this is
+    the one place strict mode is applied.
 
     A streaming frame cannot be validated here: the dedup window and the
     observed summary need a batch frame (a stream goes through
@@ -548,10 +551,12 @@ class ValidationPlan:
     ):
         from ..compile import compile_table_checks, schema_conforms
         from ..extensions import compile_extensions
-        from ..spec import strict_spec_issues, validate_spec, validate_spec_against
+        from ..spec import strict_spec_issues, strictify, validate_spec, validate_spec_against
 
         config = config or CheckConfig()
         dims = dims or {}
+        if config.strict:
+            spec = strictify(spec)
         self.spec, self.config = spec, config
         self.schema = df.schema
 

@@ -314,7 +314,7 @@ def q07_check_orders_fused(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     res = check_table(orders, ORDERS_SPEC, dims={"customer": customer})
-    return _sorted(res.violations, "jsonpath", "type")
+    return _sorted(res.unordered_violations, "jsonpath", "type")
 
 
 Q07_SQL = """
@@ -964,7 +964,7 @@ def q25_excluded_violations(spark, sf_dir):
             exclusions=(Exclusion(jsonpath="$.orders[*].o_orderstatus", type="enum"),)
         ),
     )
-    return _sorted(res.violations, "jsonpath", "type")
+    return _sorted(res.unordered_violations, "jsonpath", "type")
 
 
 Q25_SQL = """
@@ -1280,7 +1280,7 @@ def q34_combinators(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type")
+    return _sorted(res.unordered_violations, "jsonpath", "type")
 
 
 Q34_SQL = """
@@ -1369,7 +1369,7 @@ def q35_json_schema_constraint(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type")
+    return _sorted(res.unordered_violations, "jsonpath", "type")
 
 
 Q35_SQL = """
@@ -1597,7 +1597,7 @@ def q38_json_schema_typed(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type", "check")
+    return _sorted(res.unordered_violations, "jsonpath", "type", "check")
 
 
 Q38_SQL = """
@@ -2083,7 +2083,7 @@ def q44_json_schema_combinators(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type", "check")
+    return _sorted(res.unordered_violations, "jsonpath", "type", "check")
 
 
 Q44_SQL = """
@@ -3310,7 +3310,7 @@ def q62_json_schema_propnames_deps(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type", "check")
+    return _sorted(res.unordered_violations, "jsonpath", "type", "check")
 
 
 Q62_SQL = """
@@ -3506,7 +3506,7 @@ def q65_json_schema_refs_formats(spark, sf_dir):
         }
     )
     res = check_table(staged, spec)
-    return _sorted(res.violations, "jsonpath", "type", "check")
+    return _sorted(res.unordered_violations, "jsonpath", "type", "check")
 
 
 Q65_SQL = """

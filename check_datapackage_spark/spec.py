@@ -18,7 +18,7 @@ read — spec parsing/validation is plan *construction*, not execution.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 from typing import Any, Optional, Union
 
 from .jsonpath import address_regex, parse as parse_jsonpath
@@ -74,11 +74,46 @@ SEMVER_PATTERN = (
 )
 
 
+def strictify(spec):
+    """Strict profile — the full reference rule set
+    (ref _set_should_fields_to_required, check.py:516-538):
+
+    * every declared field promoted to required (SHOULD → REQUIRED)
+    * ``name`` field: strict name pattern
+    * ``version`` field: semver pattern (ref check.py:522-527)
+    * ``contributors`` / ``sources`` fields: every item must have a
+      ``title`` (ref check.py:533-534) — compiled via the jsonSchema
+      ``items.required`` constraint, which routes on the physical type
+      (array<struct> forall / JSON-string from_json)
+
+    The table name itself is checked by :func:`strict_spec_issues`.
+    :class:`~.plans.validation.ValidationPlan` applies both whenever
+    ``config.strict`` is set; the rewrite is idempotent.
+    """
+    fields = []
+    for f in spec.fields:
+        c = f.constraints
+        if f.name == "name" and c.pattern is None:
+            c = replace(c, pattern=STRICT_NAME_PATTERN)
+        if f.name == "version" and c.pattern is None:
+            c = replace(c, pattern=SEMVER_PATTERN)
+        if f.name in ("contributors", "sources"):
+            js = dict(c.json_schema or {})
+            items = dict(js.get("items") or {})
+            req = list(items.get("required") or [])
+            if "title" not in req:
+                req.append("title")
+            items["required"] = req
+            js["items"] = items
+            c = replace(c, json_schema=js)
+        fields.append(replace(f, constraints=replace(c, required=True)))
+    return replace(spec, fields=tuple(fields))
+
+
 def strict_spec_issues(spec) -> list:
     """Spec-level strict checks: the table (resource) name must match
     the strict name pattern (ref resources/items name pattern,
-    check.py:535-537; tests/test_check.py:446-496). Applied by
-    check_table whenever ``config.strict`` is set."""
+    check.py:535-537; tests/test_check.py:446-496)."""
     import re as _re
 
     from .issue import Issue
@@ -323,7 +358,8 @@ class CheckConfig:
     """Engine run configuration (ref config.py:9-53).
 
     ``strict`` enables the strict-profile extra checks (ref
-    check.py:516-538); ``exclusions`` filter emitted violations;
+    check.py:516-538: :func:`strictify` and :func:`strict_spec_issues`,
+    applied by every validation entry point); ``exclusions`` filter emitted violations;
     ``extensions`` (CustomCheck/RequiredCheck) append user checks, which
     :func:`~.plans.validation.check_table` compiles against the table's
     schema (ref check(extensions=...), check.py:250).

@@ -67,14 +67,19 @@ def windowed_violation_counts(
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC so
     # the cast preserves the wall-clock instant
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    win = F.window(F.col(ts_col), window, slide)  # tumbling when slide is None
+    if not checks:
+        # the same columns, no rows (and still a stream when the input is)
+        return stream.where(F.lit(False)).select(
+            win.alias("window"),
+            F.lit(None).cast("string").alias("check"),
+            F.lit(None).cast("long").alias("fail_count"),
+        )
     stream = bind_check_lets(stream, checks)
     fails = [
         F.sum(F.when(~ck.ok, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
         for i, ck in enumerate(checks)
     ]
-    win = (
-        F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
-    )
     wide = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(win.alias("window"))

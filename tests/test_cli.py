@@ -470,3 +470,79 @@ def test_cli_resume_ledger_records_violations_per_unit(spark, sf_dir, tmp_path):
     assert sum(r["n_violations"] for r in led) == n_violations
     assert violating
     assert not [r for r in led if r["passed"] and (r["source"], r["bucket"]) in violating]
+
+
+def test_cli_strict_matches_library_strict(spark, tmp_path):
+    """--strict adds no rule of its own: check_table, check_package and
+    the CLI return the same rows under CheckConfig(strict=True) (every
+    field required, semver ``version``)."""
+    from check_datapackage_spark import CheckConfig, TableSpec, check_package, check_table
+
+    resource = {"name": "pkg", "path": "pkg.parquet", "schema": {
+        "fields": [{"name": "id", "type": "integer"},
+                   {"name": "title", "type": "string"},
+                   {"name": "version", "type": "string"}],
+        "primaryKey": "id"}}
+    doc = {"resources": [resource]}
+    spec_path = tmp_path / "datapackage.json"
+    spec_path.write_text(json.dumps(doc))
+    df = spark.createDataFrame([(1, None, "v1"), (2, "T", "1.2")], "id int, title string, version string")
+    df.write.parquet(str(tmp_path / "pkg.parquet"))
+    audit = str(tmp_path / "violations")
+    rc = _in_process(
+        spark, tmp_path, "--data", str(tmp_path), "--table", "pkg",
+        "--spec", str(spec_path), "--audit", audit, "--strict",
+    )
+    assert rc == 0
+
+    rows = lambda v: sorted(map(tuple, v.select("check", "instance").collect()), key=str)
+    strict = CheckConfig(strict=True)
+    cli_rows = rows(spark.read.parquet(audit))
+    assert cli_rows == sorted(
+        [("title.required", None), ("version.pattern", "1.2"), ("version.pattern", "v1")], key=str
+    )
+    assert rows(check_table(df, TableSpec.from_dict(resource), config=strict).violations) == cli_rows
+    pres = check_package(spark, doc, config=strict, tables={"pkg": df})
+    assert rows(pres.violations()) == cli_rows
+
+
+def test_cli_resume_ledger_validates_once(spark, sf_dir, tmp_path, monkeypatch):
+    """One --resume-ledger --audit run reads its pending rows as often as
+    a table-mode run reads the table: the ledger, the count and the sink
+    share one execution. The ledger counts exactly the rows sunk, and
+    nothing stays persisted."""
+    from pyspark.sql import functions as F
+
+    from check_datapackage_spark import cli
+
+    spec = {"resources": [{"name": "documents", "schema": {
+        "fields": [{"name": "doc_id", "type": "integer", "constraints": {"required": True}},
+                   {"name": "n_chars", "type": "integer", "constraints": {"maximum": 400}}],
+        "primaryKey": "doc_id"}}]}
+    spec_path = tmp_path / "datapackage.json"
+    spec_path.write_text(json.dumps(spec))
+    # every row check_table's input yields passes through this filter
+    reads = spark.sparkContext.accumulator(0)
+
+    def seen(_):
+        reads.add(1)
+        return True
+
+    probe = F.udf(seen, "boolean")
+    check_table = cli.check_table
+    monkeypatch.setattr(
+        cli, "check_table", lambda df, *a, **k: check_table(df.where(probe("doc_id")), *a, **k)
+    )
+    args = ("--data", sf_dir, "--table", "documents", "--spec", str(spec_path))
+
+    _in_process(spark, tmp_path, *args)
+    table_reads, reads.value = reads.value, 0
+    ledger, audit = str(tmp_path / "ledger"), str(tmp_path / "violations")
+    rc = _in_process(
+        spark, tmp_path, *args, "--resume-ledger", ledger, "--n-buckets", "4", "--audit", audit
+    )
+    assert rc == 0
+    assert table_reads > 0 and reads.value == table_reads
+    sunk = spark.read.parquet(audit).count()
+    assert sunk > 0
+    assert spark.read.parquet(ledger).agg(F.sum("n_violations")).collect()[0][0] == sunk

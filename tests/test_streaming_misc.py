@@ -164,6 +164,28 @@ def test_windowed_violation_counts(spark, tmp_path):
     assert all(r["check"] == "value.nonneg" for r in rows)
 
 
+def test_windowed_violation_counts_without_checks(spark, tmp_path):
+    """An empty check list gives an empty (window, check, fail_count)
+    frame, on a batch frame and on a stream."""
+    from check_datapackage_spark.streaming.checks import windowed_violation_counts
+
+    df = spark.createDataFrame([(1, "2024-01-01 00:00:00")], "id int, ts string")
+    counts = windowed_violation_counts(df, [], ts_col="ts", window="1 hour")
+    assert counts.columns == ["window", "check", "fail_count"]
+    assert counts.collect() == []
+
+    src = str(tmp_path / "ev")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    agg = windowed_violation_counts(stream, [], ts_col="ts", window="1 hour")
+    q = agg.writeStream.format("memory").queryName("wvc_empty").outputMode("append").start()
+    try:
+        q.processAllAvailable()
+        assert spark.sql("SELECT * FROM wvc_empty").collect() == []
+    finally:
+        q.stop()
+
+
 def test_ivf_topk_finds_planted(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 3).select(
