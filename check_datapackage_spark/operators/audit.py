@@ -91,11 +91,26 @@ def completed_units(spark: SparkSession, ledger: str) -> DataFrame:
     ).distinct()
 
 
+def _join_units(left: DataFrame, units: DataFrame, how: str) -> DataFrame:
+    """``left`` joined to ``units`` on (source, _bucket), where a NULL
+    source is a unit of its own and matches a NULL source; ``units``'
+    two key columns are not in the result.
+
+    ``units`` is broadcast: it has at most one row per unit, and a
+    shuffled null-safe join would hash on ``coalesce(source)`` and
+    re-shuffle inputs already grouped by (source, _bucket)."""
+    u = F.broadcast(units).withColumnsRenamed(
+        {"source": "_u_source", "_bucket": "_u_bucket"}
+    )
+    on = F.col("source").eqNullSafe(F.col("_u_source")) & (
+        F.col("_bucket") == F.col("_u_bucket")
+    )
+    return left.join(u, on, how).drop("_u_source", "_u_bucket")
+
+
 def pending_units(df: DataFrame, spark: SparkSession, ledger_path: str) -> DataFrame:
     """Anti-join: planned minus completed → the resume frontier."""
-    return plan_units(df).join(
-        completed_units(spark, ledger_path), ["source", "_bucket"], "left_anti"
-    )
+    return _join_units(plan_units(df), completed_units(spark, ledger_path), "left_anti")
 
 
 def record_units(
@@ -166,9 +181,7 @@ def unit_summary(
         .groupBy("source", "_bucket")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )
-    return rows.join(v, ["source", "_bucket"], "left").fillna(
-        0, subset=["n_violations"]
-    )
+    return _join_units(rows, v, "left").fillna(0, subset=["n_violations"])
 
 
 def _ledger_exists(path: str) -> bool:
@@ -196,11 +209,9 @@ class ResumableRun:
         complete, with their ``_bucket``, and the number of those units."""
         b = with_bucket(df, self.key, self.n_buckets)
         units = pending_units(b, df.sparkSession, self.ledger_path)
-        # a unit with a NULL source matches no row in the join below
-        units = units.where(F.col("source").isNotNull())
         # broadcast semi-join on the tiny unit list (partition pruning does
         # the heavy lifting when the table is partitioned by source)
-        return b.join(F.broadcast(units), ["source", "_bucket"], "left_semi"), units.count()
+        return _join_units(b, units, "left_semi"), units.count()
 
     def record(self, pending: DataFrame, violations: DataFrame, run_id: Optional[str] = None):
         """Append one ledger row per unit of ``pending``: its row and

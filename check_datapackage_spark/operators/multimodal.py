@@ -5,8 +5,7 @@ The container has no image/audio codecs, so the DECODE step is stubbed
 behind ``DecoderRegistry`` (deterministic fake by default,
 ``NotImplementedError`` for real codecs) — but the Spark-side plumbing
 is real and tested: schema contract, Arrow batch shape through
-``mapInPandas``, partition sizing, and metadata validation as compiled
-checks.
+``mapInPandas`` and partition sizing.
 
 Scale notes: binary payloads dominate row size — ``mapInPandas`` with
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` tuned down keeps Arrow
@@ -21,11 +20,9 @@ from typing import Callable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..compile import CompiledCheck, compile_invariant
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -36,53 +33,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def asset_checks(
-    payload_col: str = "payload",
-    meta_col: str = "meta",
-    allowed_media_types: tuple = ("image/png", "image/jpeg", "audio/wav"),
-    max_bytes: int = 16 * 1024 * 1024,
-) -> list[CompiledCheck]:
-    """Compiled checks over a multimodal column: payload present,
-    size-bounded, media_type in the allowed enum, dims positive.
-    Plugs straight into the fused validation plan."""
-    p, m = F.col(payload_col), F.col(meta_col)
-    return [
-        compile_invariant(
-            f"{payload_col}.present",
-            p.isNotNull() & (F.length(p) > 0),
-            "required",
-            f"{payload_col} must be non-empty binary",
-            column=payload_col,
-        ),
-        compile_invariant(
-            f"{payload_col}.max_bytes",
-            p.isNull() | (F.length(p) <= max_bytes),
-            "maxLength",
-            f"{payload_col} exceeds {max_bytes} bytes",
-            column=payload_col,
-            instance=F.length(p),
-        ),
-        compile_invariant(
-            f"{meta_col}.media_type",
-            m.isNull() | m["media_type"].isin(*allowed_media_types),
-            "enum",
-            f"media_type must be one of {list(allowed_media_types)}",
-            column=meta_col,
-            instance=m["media_type"],
-        ),
-        compile_invariant(
-            f"{meta_col}.dims",
-            m.isNull()
-            | m["width"].isNull()
-            | ((m["width"] > 0) & (m["height"] > 0)),
-            "minimum",
-            "image dimensions must be positive",
-            column=meta_col,
-            instance=F.concat_ws("x", m["width"], m["height"]),
-        ),
-    ]
 
 
 class DecoderRegistry:
@@ -168,21 +118,6 @@ def extract_features(
 
     pruned = df.select(id_col, payload_col, meta_col)
     return pruned.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_plan(
-    df: DataFrame,
-    n_frames: int = 8,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Video frame-sampling plumbing: emit (doc_id, frame_idx) rows with
-    deterministic frame indices; the actual frame decode is the stubbed
-    step. Shows the explode-side shape (one row per sampled frame)."""
-    idx = F.sequence(F.lit(0), F.lit(n_frames - 1))
-    return df.select(
-        F.col(id_col), F.length(F.col(payload_col)).alias("byte_len"), F.explode(idx).alias("frame_idx")
-    )
 
 
 def synth_assets(spark, n: int = 64) -> DataFrame:

@@ -360,248 +360,6 @@ def ivf_topk(
     return cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def train_residual_quantizer(
-    df: DataFrame,
-    dim: int,
-    n_cells1: int,
-    n_cells2: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_n: int = 8192,
-    iters: int = 8,
-    seed: int = 20260817,
-):
-    """Two-level coarse quantizer (residual VQ) — the 10^9-vector IVF
-    recipe :func:`semantic_dedup_exact`'s docstring names: level 1 is
-    the sampled spherical k-means of :func:`train_ivf_centroids`;
-    level 2 is plain Lloyd over the sample's RESIDUALS
-    ``x - cent1[assign(x)]`` (one shared residual codebook across
-    cells, the classic IVF-RVQ shape). Composite cell id =
-    ``c1 * n_cells2 + c2`` gives ``n_cells1 x n_cells2`` cells whose
-    sizes are bounded by CONSTRUCTION (two quantization levels split
-    any dense level-1 cell along its residual geometry) instead of by
-    cranking one n_cells knob. Driver cost is the same bounded sample
-    as level 1. Returns ``(cents1 (dim, n1), cents2 (dim, n2))``."""
-    import numpy as np
-
-    cents1 = train_ivf_centroids(
-        df, dim, n_cells1, id_col, vec_col, sample_n, iters, seed
-    )
-    rows = (
-        df.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(int(sample_n))
-        .select(vec_col)
-        .collect()
-    )
-    X = np.asarray([r[0] for r in rows], dtype=np.float64)
-    a1 = np.argmax(X @ cents1, axis=1)
-    R = X - cents1[:, a1].T
-    rng = np.random.default_rng(seed + 1)
-    k = min(n_cells2, len(R))
-    cents2 = R[rng.choice(len(R), k, replace=False)].copy()
-    for _ in range(iters):
-        d2 = (
-            (R * R).sum(axis=1)[:, None]
-            - 2.0 * (R @ cents2.T)
-            + (cents2 * cents2).sum(axis=1)[None, :]
-        )
-        assign = np.argmin(d2, axis=1)
-        own = d2[np.arange(len(R)), assign]
-        # reseed empty cells from worst-reconstructed DISTINCT points
-        reseed_order = iter(np.argsort(-own, kind="stable"))
-        for c in range(k):
-            members = R[assign == c]
-            if len(members):
-                cents2[c] = members.mean(axis=0)
-            else:
-                cents2[c] = R[next(reseed_order)]
-    if k < n_cells2:  # tiny sample: pad with wrap-around copies
-        cents2 = np.vstack([cents2, cents2[: n_cells2 - k]])
-    return cents1, cents2.T  # (dim, n1), (dim, n2)
-
-
-def _ivf2_corpus_assign_udf(cents1, cents2):
-    """Composite-cell assignment for corpus vectors: level 1 by max
-    dot (same criterion as :func:`_ivf_assign_udf`), level 2 by min
-    L2 of the residual to the residual codebook — i.e. the composite
-    centroid ``cent1 + cent2`` with the best reconstruction."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    c1 = np.asarray(cents1, dtype=np.float64)
-    c2 = np.asarray(cents2, dtype=np.float64)
-    n2 = c2.shape[1]
-    c2_sq = (c2 * c2).sum(axis=0)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        a1 = np.argmax(m @ c1, axis=1)
-        r = m - c1[:, a1].T
-        d2 = -2.0 * (r @ c2) + c2_sq[None, :]
-        a2 = np.argmin(d2, axis=1)
-        return pd.Series((a1 * n2 + a2).astype(np.int32))
-
-    return assign
-
-
-def _ivf2_probe_udf(cents1, cents2, n_probe: int):
-    """Top-``n_probe`` composite cells for a query, ranked by COSINE to
-    each cell's reconstruction ``cent1[c1] + cent2[c2]`` — the
-    normalization is load-bearing: raw ``q . recon`` lets big-norm
-    reconstructions dominate and the probe never visits the cells the
-    corpus assignment (min reconstruction error) actually fills
-    (measured: recall 0.0 unnormalized -> self-cell hit 5/5
-    normalized). The (dim, n1*n2) reconstruction matrix and its norms
-    are precomputed once in the closure; per batch it is ONE matmul."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    c1 = np.asarray(cents1, dtype=np.float64)
-    c2 = np.asarray(cents2, dtype=np.float64)
-    n1, n2 = c1.shape[1], c2.shape[1]
-    recon = (c1[:, :, None] + c2[:, None, :]).reshape(c1.shape[0], n1 * n2)
-    rnorm = np.linalg.norm(recon, axis=0)
-    rnorm[rnorm == 0] = 1.0
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        S = (m @ recon) / rnorm[None, :]
-        top = np.argsort(-S, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(top))
-
-    return probe
-
-
-def ivf2_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells1: int = 16,
-    n_cells2: int = 16,
-    n_probe: int = 8,
-    sample_n: int = 8192,
-) -> DataFrame:
-    """Two-level IVF top-k (residual quantizer): same plan shape as
-    :func:`ivf_topk` — corpus assigned to ONE composite cell map-side,
-    queries broadcast with their probed cells exploded, exact cosine
-    only inside probed cells, one window shuffle for the top-k — but
-    the cell population is ``n_cells1 x n_cells2`` with sizes bounded
-    by construction, so at 10^9+ vectors the Gram/candidate work per
-    cell stays executor-sized without a 10^5-wide level-1 codebook
-    (probe scoring is two small matmuls, not one n_cells-wide one).
-
-    Output: (query_id, vec_id, score, rank) — same contract as
-    ivf_topk/lsh_topk."""
-    cents1, cents2 = train_residual_quantizer(
-        corpus, dim, n_cells1, n_cells2, id_col, vec_col, sample_n
-    )
-    assign_c = _ivf2_corpus_assign_udf(cents1, cents2)
-    probe_q = _ivf2_probe_udf(cents1, cents2, n_probe)
-    c = _spread(corpus).select(
-        F.col(id_col), F.col(vec_col), assign_c(F.col(vec_col)).alias("cell")
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(probe_q(F.col(vec_col))).alias("cell"),
-        )
-    )
-    cands = (
-        c.join(q, "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            id_col,
-            cosine(F.col(vec_col), F.col("_qvec")).alias("score"),
-        )
-        .dropDuplicates(["query_id", id_col])
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.col(id_col))
-    return cands.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def semantic_dedup_two_level(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells1: int = 16,
-    n_cells2: int = 16,
-    threshold: float = 0.9,
-    sample_n: int = 8192,
-) -> DataFrame:
-    """Two-level (residual-quantized) SemDeDup — the scale variant of
-    :func:`semantic_dedup_exact` its docstring promises for 10^9+
-    vectors: composite cells bound the Gram tile per cell by
-    CONSTRUCTION, so sum(|cell|^2) stays executor-sized as the corpus
-    grows by widening n_cells1 x n_cells2 (~sqrt(N) x sqrt(target)),
-    not by trusting one codebook's balance. Same plan shape: one
-    map-side assignment UDF, ONE shuffle (groupBy cell), one float64
-    Gram matmul per cell. Output (cell, id_a, id_b, score), id_a <
-    id_b, score rounded to 6dp >= threshold.
-
-    q57 keeps the single-level integer-exact variant (its DuckDB twin
-    replays md5 centroids in SQL); this trained variant is pinned by
-    pytest (planted-pair recall, within-cell-only, determinism)."""
-    import numpy as np
-
-    cents1, cents2 = train_residual_quantizer(
-        df, dim, n_cells1, n_cells2, id_col, vec_col, sample_n
-    )
-    assign_c = _ivf2_corpus_assign_udf(cents1, cents2)
-    cu = _spread(df).select(F.col(id_col), F.col(vec_col)).withColumn(
-        "cell", assign_c(F.col(vec_col))
-    )
-
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        empty = pd.DataFrame(
-            {
-                "cell": np.empty(0, np.int32),
-                "id_a": np.empty(0, np.int64),
-                "id_b": np.empty(0, np.int64),
-                "score": np.empty(0, np.float64),
-            }
-        )
-        if len(ids) < 2:
-            return empty
-        order = np.argsort(ids)
-        ids = ids[order]
-        m = np.vstack(
-            [
-                np.asarray(v, dtype=np.float64)
-                for v in pdf[vec_col].to_numpy()[order]
-            ]
-        )
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        g = (m / n[:, None]) @ (m / n[:, None]).T
-        ia, ib = np.triu_indices(len(ids), k=1)
-        s = np.round(g[ia, ib], 6)
-        keep = s >= threshold
-        return pd.DataFrame(
-            {
-                "cell": np.full(int(keep.sum()), pdf["cell"].iloc[0], np.int32),
-                "id_a": ids[ia[keep]],
-                "id_b": ids[ib[keep]],
-                "score": s[keep],
-            }
-        )
-
-    return cu.groupBy("cell").applyInPandas(
-        cell_pairs, "cell int, id_a long, id_b long, score double"
-    )
-
-
 def cosine_near_dups(
     df: DataFrame,
     dim: int,

@@ -2,21 +2,21 @@
 (SURVEY §7 step 5).
 
 ``percentile_approx`` (QuantileSummaries) is the built-in scale path;
-this module adds a t-digest for the BASELINE's "quantiles via t-digest
-sketches" requirement: per-partition digests built in ``mapInPandas``
-(one pass, O(δ) state), merged on the driver (merge cost O(partitions·δ),
-never O(rows)).
+this module adds a per-group t-digest for the BASELINE's "quantiles via
+t-digest sketches" requirement: each group's digest is built in
+``applyInPandas`` (one pass, O(δ) state), and the salted variant merges
+bounded partial digests per group (merge cost O(salts·δ), never
+O(rows)).
 
 Determinism (SURVEY §7 hard-part 3): centroids are built by scanning
 values in sorted order with a fixed size bound per centroid — no RNG,
-no order sensitivity after the per-partition sort; the driver merge
-re-sorts all centroids before compressing, so results are independent
-of partition arrival order.
+no order sensitivity; every merge re-sorts its centroids before
+compressing, so results are independent of partition arrival order.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -59,82 +59,6 @@ def _compress(means: np.ndarray, weights: np.ndarray, delta: int) -> tuple[np.nd
     # properties back so downstream np.interp sees sorted x.
     out = np.maximum.accumulate(np.clip(out, means[0], means[-1]))
     return out, np.asarray(out_w)
-
-
-def partition_digests(df: DataFrame, column: str, delta: int = 200) -> DataFrame:
-    """One t-digest per input partition: rows (mean, weight).
-
-    mapInPandas keeps Arrow batches bounded; each task emits ≤ delta
-    rows regardless of partition size — the shuffle-free equivalent of
-    a partial aggregate.
-    """
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ms: list[np.ndarray] = []
-        ws: list[np.ndarray] = []
-        for pdf in batches:
-            v = pdf[column].dropna().to_numpy(dtype=np.float64)
-            if len(v):
-                ms.append(v)
-                ws.append(np.ones(len(v)))
-        if not ms:
-            yield pd.DataFrame({"mean": [], "weight": []})
-            return
-        m, w = _compress(np.concatenate(ms), np.concatenate(ws), delta)
-        yield pd.DataFrame({"mean": m, "weight": w})
-
-    return df.select(column).mapInPandas(build, schema="mean double, weight double")
-
-
-def tdigest_quantiles(
-    df: DataFrame,
-    column: str,
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-    delta: int = 200,
-    merge_buckets: int = 32,
-) -> dict[float, float]:
-    """Quantiles from merged per-partition t-digests.
-
-    TREE merge (r4 verdict #4): per-partition digests are partially
-    merged in ``merge_buckets`` executor-side groups before the driver
-    sees anything, so the collect is bounded at merge_buckets × delta
-    centroids regardless of task count — a flat partitions × delta
-    collect is fine to ~10^5 tasks but becomes driver traffic at 10^6+.
-    Bucket membership is a pure function of the centroid mean
-    (xxhash64), and every ``_compress`` re-sorts its inputs, so the
-    result stays independent of partition arrival order."""
-    digests = partition_digests(df, column, delta)
-    bucketed = digests.withColumn(
-        "_b",
-        F.pmod(F.xxhash64(F.col("mean").cast("string")), F.lit(merge_buckets)),
-    )
-
-    def partial_merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _compress(
-            pdf["mean"].to_numpy(dtype=np.float64),
-            pdf["weight"].to_numpy(dtype=np.float64),
-            delta,
-        )
-        return pd.DataFrame({"mean": m, "weight": w})
-
-    cent = (
-        bucketed.groupBy("_b")
-        .applyInPandas(partial_merge, schema="mean double, weight double")
-        .collect()
-    )
-    if not cent:
-        return {q: float("nan") for q in quantiles}
-    means = np.array([r["mean"] for r in cent])
-    weights = np.array([r["weight"] for r in cent])
-    m, w = _compress(means, weights, delta)
-    if len(m) == 0:
-        return {q: float("nan") for q in quantiles}
-    cum = np.cumsum(w) - w / 2
-    total = w.sum()
-    out = {}
-    for q in quantiles:
-        out[q] = float(np.interp(q * total, cum, m))
-    return out
 
 
 def tdigest_by_group(

@@ -2,10 +2,12 @@
 task brief): token counting, quality scoring, language ID, document
 fingerprinting.
 
-All hot-path expressions are built-in ``pyspark.sql.functions`` (JVM,
-whole-stage codegen). The oracle-matched variants use only functions
-with exact DuckDB equivalents (md5, regexp, length arithmetic) so the
-driver's value-hash comparison holds bit-for-bit.
+Token counts, language ID, quality scores and the hashed quality
+filter run in Arrow UDFs whose results equal their DuckDB oracle
+queries bit for bit (q10, q11, q12, q48); normalization, fingerprints
+and the corpus statistics are built-in ``pyspark.sql.functions`` (JVM,
+whole-stage codegen) with exact DuckDB equivalents (md5, regexp,
+length arithmetic).
 """
 
 from __future__ import annotations
@@ -25,70 +27,21 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "la", "los", "de", "que", "es", "en", "un", "por", "con"],
 }
 
-#: BPE-ish token regex: word pieces OR single non-space punctuation.
-TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def ws_token_count(col: Column) -> Column:
-    """Whitespace token count, equal to Python's ``len(s.split())``.
-
-    Built from length arithmetic (identical semantics in ANSI SQL /
-    DuckDB, unlike split-on-regex edge cases). Order matters: squash ALL
-    whitespace runs to single spaces FIRST, then trim — ``trim`` strips
-    only 0x20, so trimming first would leave leading tabs/newlines as
-    phantom tokens (caught by tests/test_fuzz.py).
-    """
-    squashed = F.trim(F.regexp_replace(col, r"\s+", " "))
-    return F.when(F.length(squashed) == 0, F.lit(0)).otherwise(
-        F.length(squashed) - F.length(F.replace(squashed, F.lit(" "), F.lit(""))) + 1
-    )
-
-
-def regex_token_count(col: Column) -> Column:
-    """BPE-ish token count: |matches of TOKEN_RE| via regexp_count."""
-    return F.regexp_count(col, F.lit(TOKEN_RE))
-
-
-def punct_ratio(col: Column) -> Column:
-    """Fraction of non-alnum, non-space chars."""
-    n = F.length(col)
-    punct = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
-
-
-def stopword_hits(col: Column, words: Sequence[str]) -> Column:
-    """Number of occurrences of any marker word (word-bounded, lc)."""
-    pat = r"\b(" + "|".join(words) + r")\b"
-    return F.regexp_count(F.lower(col), F.lit(pat))
-
-
-def quality_score(col: Column, n_chars: Optional[Column] = None) -> Column:
-    """Heuristic document quality in [0,1]: length band + punctuation +
-    stopword density. Deterministic arithmetic only (SQL-expressible)."""
-    n = n_chars if n_chars is not None else F.length(col)
-    toks = ws_token_count(col)
-    len_ok = F.when((n >= 200) & (n <= 20000), F.lit(1.0)).otherwise(
-        F.when(n < 200, n / 200.0).otherwise(F.lit(20000.0) / n)
-    )
-    p = punct_ratio(col)
-    punct_ok = F.when(p <= 0.1, F.lit(1.0)).otherwise(
-        F.greatest(F.lit(0.0), 1.0 - (p - 0.1) * 5.0)
-    )
-    sw = stopword_hits(col, LANG_MARKERS["en"])
-    sw_density = F.when(toks == 0, F.lit(0.0)).otherwise(sw / toks)
-    sw_ok = F.least(F.lit(1.0), sw_density * 5.0)
-    return F.round((len_ok + punct_ok + sw_ok) / 3.0, 6)
-
-
 #: Java regex ``\s`` (no UNICODE_CHARACTER_CLASS) is the ASCII set.
 _JAVA_WS = "[ \t\n\x0b\f\r]+"
 
 
 def token_counts_arrow(col: Column) -> Column:
-    """Both q10 token counts in ONE Arrow pass: struct(ws, re) with
-    counts bit-identical to :func:`ws_token_count` /
-    :func:`regex_token_count` (Python ``re`` with the same ASCII
-    classes; alternation preference matches Java's leftmost-first)."""
+    """Both q10 token counts in one Arrow pass: ``struct(ws, re)``,
+    NULL fields for a NULL text.
+
+    ``ws`` counts whitespace-separated words and ``re`` counts matches
+    of ``[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]`` (leftmost-first
+    alternation), both with Java's ASCII ``\\s``. q10's DuckDB oracle
+    computes the same two numbers: ``LENGTH(s) - LENGTH(REPLACE(s, ' ',
+    '')) + 1`` over ``s = TRIM(regexp_replace(text, '\\s+', ' '))``
+    (0 when ``s`` is empty), and ``LEN(regexp_extract_all(text,
+    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))``."""
     import re
 
     from pyspark.sql import types as T
@@ -159,10 +112,17 @@ def md5_tokens_arrow(col: Column, vocab: int) -> Column:
 
 
 def detect_lang_arrow(col: Column, default: str = "und") -> Column:
-    """Arrow twin of :func:`detect_lang`: marker hits counted with
-    Python ``re`` under ``re.ASCII`` (Java ``\\b``/``\\w`` are ASCII),
-    argmax with the same fixed tie order. Lowercasing stays JVM-side
-    (the locale-sensitive part)."""
+    """Stopword-marker language ID: per language of
+    :data:`LANG_MARKERS`, count the word-bounded marker hits in the
+    lowercased text; the language with the most hits wins, ties go to
+    the earlier language, and no hit (or a NULL text) gives
+    ``default``.
+
+    q11's DuckDB oracle is the same rule: ``LEN(regexp_extract_all(
+    LOWER(text), '\\b(the|and|...)\\b'))`` per language, then a CASE
+    over ``GREATEST`` in marker order. Hits are counted with Python
+    ``re`` under ``re.ASCII`` (Java's and DuckDB's ``\\b`` are ASCII);
+    lowercasing stays JVM-side (the locale-sensitive part)."""
     import re
 
     from pyspark.sql import types as T
@@ -197,12 +157,23 @@ def detect_lang_arrow(col: Column, default: str = "und") -> Column:
 
 
 def quality_score_arrow(col: Column, n_chars: Column) -> Column:
-    """Arrow twin of :func:`quality_score` — bit-identical doubles:
-    the integer signals (Java-ASCII ``\\s`` word count, punct count
-    with Java's UTF-16 length rule — a supplementary code point kept
-    by ``regexp_replace`` counts 2 code units — and ASCII-``\\b``
-    stopword hits) feed the same IEEE arithmetic, and the final
-    6-dp round replays Spark's BigDecimal HALF_UP exactly."""
+    """Heuristic document quality in [0, 1]: the mean of three
+    signals, rounded to 6 decimals HALF_UP; NULL when ``col`` or
+    ``n_chars`` is NULL.
+
+    * length: 1 for ``n_chars`` in [200, 20000], ``n/200`` below,
+      ``20000/n`` above;
+    * punctuation: the share ``p`` of characters outside
+      ``[A-Za-z0-9\\s]``; 1 up to 0.1, then ``max(0, 1 - (p-0.1)*5)``;
+    * stopwords: English marker hits per whitespace word, times 5,
+      capped at 1 (0 for a text with no words).
+
+    This is the score q12's DuckDB oracle computes. The integer
+    signals (Java-ASCII ``\\s`` word count, ASCII-``\\b`` stopword
+    hits, and lengths in UTF-16 code units, so a supplementary code
+    point counts 2) feed the same IEEE arithmetic as the SQL, and the
+    final round is HALF_UP on the shortest decimal repr
+    (``Decimal(repr(x))``), as Spark's ``ROUND`` on a double."""
     import re
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -221,9 +192,6 @@ def quality_score_arrow(col: Column, n_chars: Column) -> Column:
 
         out = []
         for t, n in zip(texts, ns):
-            # NULL text → every regex-derived signal is NULL in the JVM
-            # path, so the score is NULL; NULL n_chars → len_ok NULL →
-            # score NULL.
             if t is None or pd.isna(n):
                 out.append(None)
                 continue
@@ -261,26 +229,6 @@ def quality_score_arrow(col: Column, n_chars: Column) -> Column:
         return pd.Series(out, dtype="float64")
 
     return score(col, n_chars)
-
-
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language marker-hit counts."""
-    return {lang: stopword_hits(col, words) for lang, words in LANG_MARKERS.items()}
-
-
-def detect_lang(col: Column, default: str = "und") -> Column:
-    """Pick the language with the most marker hits; ties broken by the
-    fixed LANG_MARKERS order; zero hits → ``default``.
-
-    Pure CASE/greatest expression — reproducible in ANSI SQL.
-    """
-    scores = lang_scores(col)
-    best = F.greatest(*scores.values())
-    expr = F.lit(default)
-    # build reversed so earlier languages win ties
-    for lang in reversed(list(scores)):
-        expr = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(expr)
-    return expr
 
 
 def normalize_text(col: Column) -> Column:
@@ -419,49 +367,6 @@ def fingerprint_md5(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def rolling_fingerprints(col: Column, window: int = 8, step: int = 4) -> Column:
-    """Rolling-window fingerprints: hash every ``window``-word shingle
-    at ``step`` stride — array<long>. Basis for winnowing-style
-    near-dup fingerprinting; all JVM-side higher-order functions."""
-    def fps(words: Column) -> Column:
-        starts = F.sequence(
-            F.lit(1),
-            F.greatest(F.size(words) - window + 1, F.lit(1)),
-            F.lit(step),
-        )
-        return F.transform(
-            starts,
-            lambda s: F.xxhash64(F.array_join(F.slice(words, s, window), " ")),
-        )
-
-    # let-bound: the per-position lambda must not re-split the doc
-    return let_col(F.split(normalize_text(col), " "), fps)
-
-
-def text_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    by: Optional[str] = None,
-) -> DataFrame:
-    """One-pass text profile per group: doc count, token stats, quality,
-    language mix."""
-    c = F.col(text_col)
-    pre = df.select(
-        *([F.col(by)] if by else []),
-        ws_token_count(c).alias("_toks"),
-        quality_score(c).alias("_q"),
-        detect_lang(c).alias("_lang"),
-    )
-    group = [by] if by else []
-    return pre.groupBy(*group).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("_toks").alias("total_tokens"),
-        F.avg("_toks").alias("avg_tokens"),
-        F.avg("_q").alias("avg_quality"),
-        F.sum((F.col("_lang") == "en").cast("long")).alias("n_en"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # corpus vocabulary statistics (Heaps/Zipf health signals)
 # ---------------------------------------------------------------------------
@@ -521,73 +426,28 @@ def vocab_stats(
 _HQ_MOD = 2001
 
 
-def hashed_word_weight(w: Column) -> Column:
-    """Deterministic per-word weight in [-1000, 1000]: the first 8 hex
-    digits of md5(word) as an integer, mod 2001, shifted. Stands in for
-    a learned fasttext/logistic weight table — the SHAPE (hash word →
-    weight → sum → threshold) is exactly a linear text classifier with
-    hashed features; the weights here are hash-derived so both engines
-    reproduce them bit-exactly (same idiom as q39's token histogram).
-    """
-    h32 = F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")
-    return (h32 % _HQ_MOD) - F.lit(_HQ_MOD // 2)
-
-
-def hashed_linear_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-doc linear classifier score: sum of hashed word weights over
-    the normalized word stream, plus the keep decision (score > 0).
-
-    Output: (doc_id, n_words, score_sum, keep). Integer arithmetic
-    end-to-end — no FP accumulation-order hazard.
-
-    Plan: one ``aggregate`` higher-order function per row — zero
-    shuffle, zero UDF; md5/conv are JVM codegen expressions. At 100 TB
-    this fuses into any existing profile scan.
-    """
-    # stage the words array and the O(words) score through named
-    # projections — each is referenced more than once downstream, and
-    # CollapseProject keeps multi-referenced non-cheap aliases staged
-    return (
-        df.select(
-            F.col(id_col),
-            F.split(normalize_text(F.col(text_col)), " ").alias("_w"),
-        )
-        .select(
-            id_col,
-            F.size("_w").cast("long").alias("n_words"),
-            F.aggregate(
-                F.col("_w"),
-                F.lit(0).cast("long"),
-                lambda a, w: a + hashed_word_weight(w),
-            ).alias("score_sum"),
-        )
-        .select(
-            id_col,
-            "n_words",
-            "score_sum",
-            (F.col("score_sum") > 0).alias("keep"),
-        )
-    )
-
-
 def quality_filter_rates(
     df: DataFrame,
     text_col: str = "text",
     by: str = "source",
 ) -> DataFrame:
-    """Per-group keep rate of the hashed linear classifier — the
+    """Per-group keep rate of a hashed linear quality classifier — the
     aggregate a pipeline monitors when a filter model is deployed
     fleet-wide. Output: (source, n_docs, n_keep, keep_rate).
 
-    Plan: map-side scoring (see :func:`hashed_linear_scores`) then one
-    map-side-combinable groupBy — a single small shuffle. r6: the
-    per-word md5 weight runs in one Arrow pass (byte-identical ids —
-    same contract as :func:`md5_tokens_arrow`; normalization stays
-    JVM-side, integer sum is order-free)."""
+    A document's score is the sum, over the words of its normalized
+    text (:func:`normalize_text`, split on single spaces), of the
+    word's weight ``int(md5(w)[:8], 16) % 2001 - 1000``; the document
+    is kept when its score is > 0. q48's DuckDB oracle computes the
+    same weight as ``CAST('0x' || substr(md5(w), 1, 8) AS UBIGINT) %
+    2001 - 1000``. The hash-derived weights stand in for a learned
+    table: hash word → weight → sum → threshold is the shape of a
+    linear classifier with hashed features, and both engines
+    reproduce it exactly (integer sum, order-free).
+
+    Plan: normalization stays JVM-side, the per-word weights run in
+    one Arrow pass, then one map-side-combinable groupBy — a single
+    small shuffle."""
     import hashlib
 
     from pyspark.sql import types as T

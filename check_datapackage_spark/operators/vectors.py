@@ -111,8 +111,7 @@ def embedding_dim_drift(
     Elements are floor-quantized to ``scale`` (int64) BEFORE summation
     so group sums are order-independent and exact — float addition
     order would otherwise make the result shuffle-dependent (and
-    engine-dependent); the same integer-arithmetic trick as
-    ``text.hashed_linear_scores``. Means stay in INTEGER micro-units
+    engine-dependent). Means stay in INTEGER micro-units
     end-to-end: round-half-away(sq/n) computed as
     ``sign · ((2·|sq| + n) DIV (2·n))`` — pure int64 arithmetic, so
     the result is bit-identical across engines (a double division

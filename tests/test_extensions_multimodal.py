@@ -62,37 +62,6 @@ def assets(spark):
     return multimodal.synth_assets(spark, 60).cache()
 
 
-def test_asset_checks_pass_on_valid(spark, assets):
-    from check_datapackage_spark.plans.validation import violations_plan
-
-    checks = multimodal.asset_checks()
-    v = violations_plan(assets, checks, "assets", row_key="doc_id")
-    assert v.count() == 0
-
-
-def test_asset_checks_catch_bad_media_type(spark, assets):
-    from check_datapackage_spark.plans.validation import violations_plan
-
-    bad = assets.withColumn(
-        "meta",
-        F.when(
-            F.col("doc_id") == "doc-000003",
-            F.named_struct(
-                F.lit("media_type"), F.lit("video/mp4"),
-                F.lit("width"), F.col("meta.width"),
-                F.lit("height"), F.col("meta.height"),
-                F.lit("n_channels"), F.col("meta.n_channels"),
-                F.lit("duration_ms"), F.col("meta.duration_ms"),
-                F.lit("sample_rate"), F.col("meta.sample_rate"),
-            ),
-        ).otherwise(F.col("meta")),
-    )
-    checks = multimodal.asset_checks()
-    v = violations_plan(bad, checks, "assets", row_key="doc_id").collect()
-    assert len(v) == 1
-    assert v[0]["type"] == "enum" and v[0]["row_key"] == "doc-000003"
-
-
 def test_extract_features_deterministic(spark, assets):
     out1 = multimodal.extract_features(assets).orderBy("doc_id").collect()
     out2 = multimodal.extract_features(assets).orderBy("doc_id").collect()
@@ -100,12 +69,6 @@ def test_extract_features_deterministic(spark, assets):
     assert all(len(r["features"]) == 16 for r in out1)
     # payload = 12-byte id × 7 = 84 bytes (capped at 100)
     assert all(r["byte_len"] == 84 for r in out1)
-
-
-def test_frame_sample_plan(spark, assets):
-    fs = multimodal.frame_sample_plan(assets, n_frames=4)
-    assert fs.count() == 60 * 4
-    assert fs.groupBy("doc_id").count().where("count != 4").count() == 0
 
 
 # --- audit / resume -----------------------------------------------------------
@@ -166,6 +129,50 @@ def test_resume_processes_only_missing_units(spark):
         assert pend.count() == units.count() - 3
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_validates_and_records_null_source_rows(spark, tmp_path):
+    """Rows whose source is NULL form a unit of their own: the first
+    run validates them and records the unit with its violation count,
+    and a second run finds nothing pending."""
+    ledger = str(tmp_path / "ledger")
+    df = spark.createDataFrame(
+        [("d1", "s1", 5), ("d2", "s2", 3), ("d3", None, -1), ("d4", None, 7)],
+        "doc_id string, source string, n long",
+    )
+    spec = TableSpec.from_dict(
+        {
+            "name": "t",
+            "schema": {
+                "fields": [
+                    {"name": "doc_id", "type": "string"},
+                    {"name": "source", "type": "string"},
+                    {"name": "n", "type": "integer", "constraints": {"minimum": 0}},
+                ],
+                "primaryKey": ["doc_id"],
+            },
+        }
+    )
+    validated = []
+
+    def validate(pending):
+        validated.append(pending.count())
+        return check_table(pending, spec).violations, None
+
+    run = audit.ResumableRun(ledger_path=ledger, n_buckets=1)
+    _, n1 = run.run(df, validate, run_id="r1")
+    assert n1 == 3 and validated == [4]
+    led = {
+        r["source"]: (r["bucket"], r["n_rows"], r["n_violations"], r["passed"])
+        for r in spark.read.parquet(ledger).collect()
+    }
+    assert led == {
+        "s1": (0, 1, 0, True),
+        "s2": (0, 1, 0, True),
+        None: (0, 2, 1, False),
+    }
+    v2, n2 = run.run(df, validate, run_id="r2")
+    assert n2 == 0 and v2 is None and validated == [4]
 
 
 # --- streaming ----------------------------------------------------------------

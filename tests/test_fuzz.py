@@ -24,24 +24,22 @@ def _random_texts(n: int = 300) -> list[str]:
     return out
 
 
-def test_ws_token_count_equals_python_split(spark):
-    """The length-arithmetic formula must equal str.split() exactly —
-    this is what makes the SQL oracle twin trustworthy."""
+def test_token_counts_arrow_equal_python(spark):
+    """Both q10 counts equal their Python ground truth: ``ws`` is
+    ``str.split()``'s word count, ``re`` the number of regex tokens."""
+    import re
+
     texts = _random_texts()
     df = spark.createDataFrame([(t,) for t in texts], ["t"])
     got = [
-        r[0]
-        for r in df.select(text.ws_token_count(F.col("t"))).collect()
+        (r["tc"]["ws"], r["tc"]["re"])
+        for r in df.select(text.token_counts_arrow(F.col("t")).alias("tc")).collect()
     ]
-    exp = [len(t.split()) for t in texts]
+    exp = [
+        (len(t.split()), len(re.findall(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]", t)))
+        for t in texts
+    ]
     assert got == exp
-
-
-def test_punct_ratio_in_unit_interval(spark):
-    texts = _random_texts()
-    df = spark.createDataFrame([(t,) for t in texts], ["t"])
-    rows = df.select(text.punct_ratio(F.col("t")).alias("p")).collect()
-    assert all(0.0 <= r["p"] <= 1.0 for r in rows)
 
 
 def test_integer_conformance_equals_python(spark):

@@ -3,36 +3,12 @@ tests (the 15 Table Schema types, SURVEY §1.3)."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from check_datapackage_spark.functions import type_conforms, geopoint_array_ok
 from check_datapackage_spark.operators import sketch
 from tests.conftest import load
-
-
-def test_tdigest_accuracy_vs_exact(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    got = sketch.tdigest_quantiles(li, "l_extendedprice", [0.1, 0.5, 0.9])
-    con = duckdb.connect()
-    exact = con.sql(
-        f"""SELECT quantile_cont(l_extendedprice, 0.1),
-                   quantile_cont(l_extendedprice, 0.5),
-                   quantile_cont(l_extendedprice, 0.9)
-            FROM '{sf_dir}/lineitem.parquet'"""
-    ).fetchone()
-    lo, hi = exact[0], exact[2]
-    spread = hi - lo
-    for q, e in zip([0.1, 0.5, 0.9], exact):
-        assert abs(got[q] - e) / spread < 0.02, (q, got[q], e)
-
-
-def test_tdigest_deterministic(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    a = sketch.tdigest_quantiles(li, "l_quantity", [0.5])
-    b = sketch.tdigest_quantiles(li, "l_quantity", [0.5])
-    assert a == b
 
 
 def test_tdigest_by_group(spark, sf_dir):

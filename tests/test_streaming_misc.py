@@ -1,5 +1,5 @@
-"""foreachBatch validation, windowed stream counts, IVF ANN, rolling
-fingerprints — the remaining untested paths."""
+"""foreachBatch validation, windowed stream counts, IVF ANN — the
+remaining untested paths."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from check_datapackage_spark.fixtures import (
     sequences_spec,
     sequences_with_violations,
 )
-from check_datapackage_spark.operators import similarity, text
+from check_datapackage_spark.operators import similarity
 from tests.conftest import load
 
 
@@ -198,22 +198,6 @@ def test_ivf_topk_finds_planted(spark, sf_dir):
     assert top1 == {(5000, 0), (5001, 1), (5002, 2)}
 
 
-def test_rolling_fingerprints(spark):
-    df = spark.createDataFrame(
-        [
-            ("one two three four five six seven eight nine ten",),
-            ("one two three four five six seven eight nine ten",),
-            ("completely different words in this document here now",),
-        ],
-        ["text"],
-    )
-    fps = df.select(text.rolling_fingerprints(F.col("text"), window=4, step=2).alias("fp"))
-    rows = [r["fp"] for r in fps.collect()]
-    assert rows[0] == rows[1]  # identical docs → identical fingerprints
-    assert set(rows[0]).isdisjoint(set(rows[2]))
-    assert len(rows[0]) >= 2
-
-
 def test_asof_join_semantics(spark):
     from check_datapackage_spark.operators.asof import asof_join
 
@@ -269,143 +253,6 @@ def test_cli_strictify():
     assert s.field("name").constraints.pattern == r"^[a-z0-9._-]+$"
 
 
-def test_stateful_session_counts_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer agrees with the batch q16
-    sessionization on the same events."""
-    from check_datapackage_spark.queries import QUERIES
-    from check_datapackage_spark.streaming.checks import stateful_session_counts
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "ev")
-    ev = load(spark, sf, "events")
-    ev.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    out = stateful_session_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r["user_id"]: r["n_sessions"]
-        for r in spark.sql(
-            "SELECT user_id, max(n_sessions) AS n_sessions FROM sess GROUP BY user_id"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: r["n_sessions"]
-        for r in QUERIES["q16_sessions"](spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_streaming_dedup_drops_duplicate_keys(spark, tmp_path):
-    """dropDuplicatesWithinWatermark path: duplicate doc_ids arriving
-    within the horizon are suppressed; batch ground truth = distinct
-    keys of the input."""
-    import pyspark.sql.functions as F
-    from check_datapackage_spark.streaming.checks import streaming_dedup
-
-    src = str(tmp_path / "dup_docs")
-    rows = [(i % 50, f"2024-01-01 00:{i % 60:02d}:00") for i in range(200)]
-    df = (
-        spark.createDataFrame(rows, ["doc_id", "ts_s"])
-        .select("doc_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    )
-    df.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    out = streaming_dedup(stream, keys=("doc_id",), ts_col="ts", delay="2 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT doc_id FROM dedup_stream").collect()
-    ids = [r["doc_id"] for r in got]
-    assert sorted(ids) == sorted(set(ids)), "duplicates survived"
-    assert set(ids) == set(range(50))
-
-
-def test_streaming_pack_offsets_continues_across_batches(spark, tmp_path):
-    """streaming_pack_offsets: offsets continue across micro-batches
-    (state = one long per group) and match a hand-computed concat-and-
-    chunk layout in arrival order; zero-token docs emit NULL spans."""
-    import pandas as pd
-
-    from check_datapackage_spark.streaming.checks import streaming_pack_offsets
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    schema = "doc_id long, source string, n_tok int"
-    pa_schema = pa.schema(
-        [("doc_id", pa.int64()), ("source", pa.string()), ("n_tok", pa.int32())]
-    )
-
-    def land(name, rows):
-        cols = list(zip(*rows))
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array(cols[0], pa.int64()),
-                    "source": pa.array(cols[1], pa.string()),
-                    "n_tok": pa.array(cols[2], pa.int32()),
-                },
-                schema=pa_schema,
-            ),
-            str(src / name),
-        )
-
-    # trigger 1: A gets 5 then 3 tokens; B gets 2
-    land("f1.parquet", [(1, "A", 5), (2, "A", 3), (10, "B", 2)])
-
-    stream = (
-        spark.readStream.schema(
-            spark.createDataFrame([], schema).schema
-        ).option("maxFilesPerTrigger", "1").parquet(str(src))
-    )
-    out = streaming_pack_offsets(stream, seq_len=4, by="source")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pack")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # trigger 2: A continues at offset 8; zero-token doc in B
-        land("f2.parquet", [(3, "A", 4), (11, "B", 0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = {
-        r["doc_id"]: r for r in spark.sql("SELECT * FROM pack").collect()
-    }
-    assert (rows[1]["start_tok"], rows[1]["first_seq"], rows[1]["last_seq"]) == (0, 0, 1)
-    assert (rows[2]["start_tok"], rows[2]["first_seq"], rows[2]["last_seq"]) == (5, 1, 1)
-    # batch 2 continues A's stream at 8 — state carried the total
-    assert (rows[3]["start_tok"], rows[3]["first_seq"], rows[3]["last_seq"]) == (8, 2, 2)
-    assert (rows[10]["start_tok"], rows[10]["first_seq"]) == (0, 0)
-    assert rows[11]["first_seq"] is None and rows[11]["last_seq"] is None
-
-
 def test_lsh_topk_exact_finds_planted_twin(spark, sf_dir):
     """lsh_topk_exact: a +0.001-shifted copy of each query vector is
     near-identical (cosine ~1), so every query finds its source at
@@ -424,87 +271,6 @@ def test_lsh_topk_exact_finds_planted_twin(spark, sf_dir):
     out = lsh_topk_exact(emb, queries, dim=64, k=5).collect()
     top1 = {r["query_id"]: r["vec_id"] for r in out if r["rank"] == 1}
     assert top1 == {100000 + i: i for i in range(5)}
-
-
-def test_windowed_histogram_drift_monitor(spark, tmp_path):
-    from check_datapackage_spark.operators.drift import bucket_expr
-    from check_datapackage_spark.streaming.checks import (
-        windowed_drift_monitor,
-        windowed_histogram,
-    )
-
-    src = str(tmp_path / "ev_drift")
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    ev.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    # 5-day windows: ~165 events each — populated enough that the
-    # full-bucket-domain PSI (which rightly blows up on near-empty
-    # windows missing baseline buckets) stays small for same-
-    # distribution data
-    hist = windowed_histogram(
-        stream, "value", ts_col="ts", lo=0.0, hi=100.0, n_buckets=8,
-        window="5 days", watermark="1 hour",
-    )
-    # baseline = the BATCH histogram over the same data: live windows
-    # drawn from the same distribution should show near-zero drift
-    batch = (
-        spark.read.parquet(src)
-        .select(bucket_expr(F.col("value"), 0.0, 100.0, 8).alias("b"))
-        .groupBy("b").count().collect()
-    )
-    baseline = {r["b"]: float(r["count"]) for r in batch}
-
-    got: list = []
-
-    def sink(df, epoch_id):
-        got.extend(df.collect())
-
-    q = (
-        hist.writeStream.foreachBatch(windowed_drift_monitor(baseline, sink))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert len(got) >= 4  # 30 days of 5d windows, all but the tail closed
-    # same-distribution windows: drift exists (small windows) but PSI is
-    # finite and non-negative everywhere
-    assert all(r["psi"] >= -1e-9 for r in got)
-    import statistics
-
-    assert statistics.median(r["psi"] for r in got) < 1.0
-
-
-def test_drift_monitor_scores_vanished_baseline_bucket(spark):
-    """A baseline-heavy bucket with ZERO observed rows must contribute
-    its (0-pb)*log(eps/(pb+eps)) term (r4 ADVICE: the observed-rows-only
-    sum silently dropped it)."""
-    from check_datapackage_spark.streaming.checks import windowed_drift_monitor
-
-    batch = spark.createDataFrame(
-        [("w1", 1, 10)], "window string, bucket int, count long"
-    )
-    got: list = []
-    fn = windowed_drift_monitor({0: 0.5, 1: 0.5}, lambda df, e: got.extend(df.collect()))
-    fn(batch, 0)
-    assert len(got) == 1
-    # all mass moved out of bucket 0: PSI ≈ 0.5*log(0.5/eps)*2 >> 1;
-    # the old observed-only sum would report ~0.35
-    assert got[0]["psi"] > 5.0
-    # observed bucket OUTSIDE the baseline domain still enters with pb=0
-    got2: list = []
-    fn2 = windowed_drift_monitor({0: 1.0}, lambda df, e: got2.extend(df.collect()))
-    fn2(
-        spark.createDataFrame(
-            [("w1", 7, 5)], "window string, bucket int, count long"
-        ),
-        0,
-    )
-    assert got2[0]["psi"] > 5.0
 
 
 def test_session_window_counts_streaming_matches_batch(spark, tmp_path):
