@@ -103,6 +103,9 @@ VIOLATION_COLUMNS = [f.name for f in VIOLATION_FULL_SCHEMA.fields]
 #: Dedup key matching Issue equality (instance excluded, issue.py:52).
 DEDUP_KEY = ["jsonpath", "type", "message"]
 
+#: Tie-break among rows sharing a :data:`DEDUP_KEY`: the first survives.
+SURVIVOR_ORDER = ["instance", "check", "column", "row_key", "partition"]
+
 
 def finalize_violations(violations: DataFrame) -> DataFrame:
     """DataFrame analog of ``sorted(set(issues))`` (ref check.py:279):
@@ -121,17 +124,20 @@ def dedup_violations(violations: DataFrame) -> DataFrame:
     sorts of the violation stream, and the partial level reduces
     nothing when keys are mostly unique (measured 1.8 s of q34's 3.2 s
     at sf1.0). The window shape is exchange + ONE sort + a streaming
-    row_number. Which row survives per key is arbitrary in both
-    formulations (Issue equality ignores the non-key payload), so the
-    emitted set is identical — oracle-gated at sf0.01/sf0.1 across all
-    violation queries.
+    row_number. The window orders each key's rows by
+    :data:`SURVIVOR_ORDER`, so which row survives depends only on the
+    rows, never on their partitioning or arrival order. (The reference
+    keeps the first Issue in document order; row position is not a
+    sort key here yet.)
     """
     from pyspark.sql import Window as W
 
     key = [c for c in DEDUP_KEY if c in violations.columns]
     if not key:
         return violations.dropDuplicates()
-    w = W.partitionBy(*key).orderBy(F.lit(1))
+    # a frame of key columns alone has nothing to break ties on
+    order = [c for c in SURVIVOR_ORDER if c in violations.columns] or key
+    w = W.partitionBy(*key).orderBy(*order)
     return (
         violations.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

@@ -73,11 +73,12 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
-#: corpus-size gate between small-input plans (fewer jobs, join-based
-#: verify) and the at-scale plans (bucket-local Grams, bitmask aggs):
-#: below this many input rows the fixed per-job/per-group overheads of
-#: the scale plans outweigh their asymptotic wins (measured both ways
-#: at sf0.1 vs sf1.0). Probed with a bounded limit+count.
+#: corpus-size gate of :func:`source_overlap_matrix`,
+#: ``text.tfidf_top_terms`` and ``decontam.contaminated_docs``: below
+#: this many input rows the fixed per-job/per-stage overheads of their
+#: scale plans (bitmask aggs, Arrow passes) outweigh the asymptotic
+#: wins, and each plan wins on its own side (SCALE.md, "Corpus-operator
+#: size gates"). Probed with a bounded limit+count.
 _SMALL_CORPUS = 16384
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .dedup import _SMALL_CORPUS, _spread
+from .dedup import _spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -369,85 +369,34 @@ def cosine_near_dups(
     n_planes: int = 14,
     n_tables: int = 4,
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: multi-table LSH bucket join,
-    exact cosine verify on the candidates. Output (id_a, id_b, score).
+    """Embedding near-duplicate pairs: multi-table LSH buckets, exact
+    cosine verify on the candidates. Output (id_a, id_b, score).
 
     Buckets come from :func:`multitable_sketch_udf` — one Arrow matmul
     per batch (the interpreted per-plane ``aggregate(zip_with(...))``
-    sketch is ~100× slower and a single table caps recall). Only
-    (id, bucket) pairs flow through the self-join; vectors are joined
-    back onto the (distinct, persisted) candidate set afterwards, so
-    the corpus embeddings are never replicated ``n_tables``× through
-    the shuffle. The candidate set is eagerly materialized for the same
-    reason as minhash_near_dups: its two downstream consumers would
-    otherwise recompute the sketch pipeline concurrently.
+    sketch is ~100× slower and a single table caps recall). Verify
+    (guide §2.3 "shuffle keys and metadata", §4.2): the vectors travel
+    ONCE to their bucket and each bucket scores all its pairs in one
+    float64 BLAS Gram (applyInPandas) — a numpy PRE-FILTER at
+    ``threshold − 1e-4`` slack — instead of a bucket self-join whose
+    candidate pairs each ship two vector payloads through a shuffle.
+    Survivors (near-dups only, tiny by construction) are deduped
+    across tables and re-scored with the JVM :func:`cosine` expression
+    and the unslacked threshold: numpy-vs-JVM double summation differs
+    by ~1e-15, far inside the slack, so no pair crosses the final
+    filter differently from an exact pairwise verify. The candidate
+    set is eagerly materialized for the same reason as
+    minhash_near_dups: its two downstream consumers would otherwise
+    recompute the sketch pipeline concurrently.
     """
+    import numpy as np
+
     sketch = multitable_sketch_udf(dim, n_planes, n_tables)
-    # scale-adaptive verify (guide §1.2): the per-bucket Gram path wins
-    # big once buckets hold several vectors, but applyInPandas pays a
-    # per-GROUP conversion cost that dominates when the corpus is small
-    # and buckets are near-empty (measured 1.3 s → 4.6 s at 5 k docs,
-    # 16.2 s → 3.3 s at 50 k). The bounded limit+count probe stops at
-    # the threshold; both branches emit bit-identical rows.
-    small = df.limit(_SMALL_CORPUS + 1).count() <= _SMALL_CORPUS
-    if small:
-        b = _spread(df).select(
-            F.col(id_col).alias("_id"),
-            F.explode(sketch(F.col(vec_col))).alias("bucket"),
-        )
-        return _verify_pairs_cosine_join(df, b, threshold, id_col, vec_col)
     b = _spread(df).select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
         F.explode(sketch(F.col(vec_col))).alias("bucket"),
     )
-    return _verify_pairs_cosine(df, b, threshold, id_col, vec_col)
-
-
-def _verify_pairs_cosine_join(df, b, threshold, id_col, vec_col):
-    """Small-corpus verify: same-bucket self-join → distinct candidate
-    pairs (eagerly persisted) → vectors joined back → exact cosine ≥
-    threshold. Identical output to :func:`_verify_pairs_cosine`."""
-    l, r = b.alias("l"), b.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-        .persist()
-    )
-    pairs.count()
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine(F.col("_va"), F.col("_vb")).alias("score")
-        )
-        .where(F.col("score") >= threshold)
-    )
-
-
-def _verify_pairs_cosine(df, b, threshold, id_col, vec_col):
-    """Shared verify stage, r6 shape (guide §2.3 "shuffle keys and
-    metadata", §4.2): instead of a bucket self-join producing the full
-    candidate-pair stream and a pairwise join shipping every candidate
-    TWO vector payloads through a shuffle, the vectors travel ONCE to
-    their bucket (``b`` carries ``_v``) and each bucket scores all its
-    pairs in one float64 BLAS Gram (applyInPandas) — a numpy PRE-FILTER
-    at ``threshold − 1e-4`` slack. Survivors (near-dups only, tiny by
-    construction) are deduped across tables and re-scored with the
-    SAME JVM ``cosine`` expression and the unslacked threshold, so the
-    emitted (id_a, id_b, score) rows are bit-identical to the old
-    join plan: numpy-vs-JVM double summation differs by ~1e-15 — far
-    inside the slack — so no pair can cross the final filter
-    differently."""
-    import numpy as np
-
     slack = float(threshold) - 1e-4
 
     def bucket_pairs(ids, vecs):

@@ -559,3 +559,23 @@ def test_composite_key_null_parts_keep_rows_apart(spark):
         ("$.t[x|?].n", "-2", "x|?"),
         ("$.t[x|y].n", "-3", "x|y"),
     ]
+
+
+def test_duplicate_key_survivor_ignores_layout(spark):
+    """Two rows share an address and an Issue key; the surviving row's
+    ``instance`` is the same under every partitioning and row order."""
+    from check_datapackage_spark import TableSpec
+
+    spec = TableSpec.from_dict({"name": "t", "schema": {"primaryKey": ["a"], "fields": [
+        {"name": "a", "type": "string"},
+        {"name": "n", "type": "integer", "constraints": {"minimum": 0}}]}})
+    rows = [("a", -1), ("a", -2)]
+    seen = set()
+    for parts in (1, 4):
+        for order in (rows, rows[::-1]):
+            df = spark.createDataFrame(
+                spark.sparkContext.parallelize(order, parts), "a string, n int"
+            )
+            got = check_table(df, spec).violations.where(F.col("type") == "minimum")
+            seen.update(r["instance"] for r in got.collect())
+    assert len(seen) == 1, seen
