@@ -58,18 +58,14 @@ def contaminated_docs(
     # either way.
     from .dedup import _SMALL_CORPUS
 
-    if corpus.limit(_SMALL_CORPUS + 1).count() <= _SMALL_CORPUS:
-        sh = shingles
-        spread = lambda d: d  # noqa: E731
-    else:
-        sh = shingles_arrow
-        spread = _spread
+    small = corpus.limit(_SMALL_CORPUS + 1).count() <= _SMALL_CORPUS
+    sh = shingles if small else shingles_arrow
     bgrams = (
-        spread(bench)
+        _spread(bench)
         .select(F.explode(sh(F.col(bench_text), n)).alias("g"))
         .distinct()
     )
-    cgrams = spread(corpus).select(
+    cgrams = _spread(corpus).select(
         F.col(id_col), F.explode(sh(F.col(text_col), n)).alias("g")
     )
     return (

@@ -7,9 +7,8 @@ dimension.
 
 Scale design: the dimension's distinct key set is small (allowed
 ``source`` values ≈ hundreds) → ``F.broadcast`` makes the anti-join a
-map-side hash lookup with ZERO shuffle of the fact table. For large
-dimensions drop the broadcast hint and let AQE pick (it still converts
-to broadcast at runtime if the built side is under the threshold).
+map-side hash lookup with ZERO shuffle of the fact table. The hint is
+unconditional: every FK check broadcasts the dimension's key columns.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ def missing_keys(
     dim: DataFrame,
     fact_keys: Sequence[str],
     dim_keys: Optional[Sequence[str]] = None,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Fact rows whose key is absent from the dimension (NOT EXISTS).
 
@@ -39,9 +37,9 @@ def missing_keys(
     # no dropDuplicates: anti-join semantics ignore duplicate build keys,
     # and the distinct would add the plan's only shuffle (the broadcast
     # HashedRelation dedups keys for free)
-    keyed = dim.select(*[F.col(d).alias(f) for f, d in zip(fact_keys, dim_keys)])
-    if broadcast:
-        keyed = F.broadcast(keyed)
+    keyed = F.broadcast(
+        dim.select(*[F.col(d).alias(f) for f, d in zip(fact_keys, dim_keys)])
+    )
     non_null = fact
     for k in fact_keys:
         non_null = non_null.where(F.col(k).isNotNull())
@@ -57,7 +55,6 @@ def referential_violations(
     dim_name: str,
     row_key: Optional[str] = None,
     partition: Optional[str] = None,
-    broadcast: bool = True,
     distinct: bool = False,
 ) -> DataFrame:
     """Violation rows for FK misses (VIOLATION_FULL_SCHEMA).
@@ -70,7 +67,7 @@ def referential_violations(
     which are functions of the key columns.
     """
     fact_keys = list(fact_keys)
-    misses = missing_keys(fact, dim, fact_keys, dim_keys, broadcast=broadcast)
+    misses = missing_keys(fact, dim, fact_keys, dim_keys)
     if distinct:
         if row_key is not None or partition is not None:
             raise ValueError("distinct=True requires default row_key/partition")

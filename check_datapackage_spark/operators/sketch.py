@@ -61,6 +61,19 @@ def _compress(means: np.ndarray, weights: np.ndarray, delta: int) -> tuple[np.nd
     return out, np.asarray(out_w)
 
 
+def _quantile_rows(
+    by: str, group, means: np.ndarray, weights: np.ndarray, qs: list[float]
+) -> pd.DataFrame:
+    """(group, q, value) rows read off one group's centroids; no rows
+    for an empty digest."""
+    if len(means) == 0:
+        return pd.DataFrame({by: [], "q": [], "value": []})
+    cum = np.cumsum(weights) - weights / 2
+    total = weights.sum()
+    vals = [float(np.interp(q * total, cum, means)) for q in qs]
+    return pd.DataFrame({by: [group] * len(qs), "q": qs, "value": vals})
+
+
 def tdigest_by_group(
     df: DataFrame,
     column: str,
@@ -80,13 +93,8 @@ def tdigest_by_group(
 
     def per_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf[column].dropna().to_numpy(dtype=np.float64)
-        if len(v) == 0:
-            return pd.DataFrame({by: [], "q": [], "value": []})
         m, w = _compress(v, np.ones(len(v)), delta)
-        cum = np.cumsum(w) - w / 2
-        total = w.sum()
-        vals = [float(np.interp(q * total, cum, m)) for q in qs]
-        return pd.DataFrame({by: [key[0]] * len(qs), "q": qs, "value": vals})
+        return _quantile_rows(by, key[0], m, w, qs)
 
     return df.select(by, column).groupBy(by).applyInPandas(
         per_group, schema=f"{by} string, q double, value double"
@@ -136,12 +144,7 @@ def tdigest_by_group_salted(
             pdf["weight"].to_numpy(dtype=np.float64),
             delta,
         )
-        if len(m) == 0:
-            return pd.DataFrame({by: [], "q": [], "value": []})
-        cum = np.cumsum(w) - w / 2
-        total = w.sum()
-        vals = [float(np.interp(q * total, cum, m)) for q in qs]
-        return pd.DataFrame({by: [key[0]] * len(qs), "q": qs, "value": vals})
+        return _quantile_rows(by, key[0], m, w, qs)
 
     weighted = (
         df.where(F.col(column).isNotNull())

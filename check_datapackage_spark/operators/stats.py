@@ -13,6 +13,9 @@ Scale notes:
   across partitions, driver merge is O(sketch), never O(rows).
 * exact ``percentile`` exists for oracle tests; use the approx path at
   scale.
+* every exact quantile in the package (``exact_quantiles=True`` here,
+  q02, q27) is Spark's ``percentile``, which keeps one count per
+  distinct value; there is no hand-written copy.
 * grouped profiles shuffle only |groups| × |aggs| partial rows.
 """
 

@@ -69,7 +69,6 @@ def uniqueness_violations(
     keys: Sequence[str],
     table_name: str,
     partition: Optional[str] = None,
-    salted: bool = False,
     order_by_jsonpath: bool = False,
 ) -> DataFrame:
     """Violation rows (VIOLATION_FULL_SCHEMA) for duplicated keys.
@@ -81,7 +80,7 @@ def uniqueness_violations(
     narrow key frame before the strings are built.
     """
     keys = list(keys)
-    dups = dup_key_counts_salted(df, keys) if salted else dup_key_counts(df, keys)
+    dups = dup_key_counts(df, keys)
     key_str = row_key_text(keys)
     col_name = ",".join(keys)
     jp = violation_address(table_name, key_str, f".{col_name}")

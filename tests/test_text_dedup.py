@@ -7,7 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from check_datapackage_spark.operators import dedup, similarity, text
+from check_datapackage_spark.operators import decontam, dedup, similarity, text
 from tests.conftest import load
 
 
@@ -353,3 +353,45 @@ def test_md5_head8_int64_big_endian_fallback(monkeypatch):
     monkeypatch.setattr(sys, "byteorder", "big")
     monkeypatch.setattr(text, "_MD5_K", None)  # the rounds must not run
     assert list(text.md5_head8_int64(msgs)) == want
+
+
+# --- size gates (dedup._SMALL_CORPUS) ---------------------------------------
+
+
+def _gate_corpus(spark):
+    """40 docs over a 6-word vocabulary, 3 sources: short n-grams repeat
+    across docs and sources, so every operator below has rows."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    rows = [
+        (i, f"s{i % 3}", " ".join(rng.choice(vocab) for _ in range(rng.randint(6, 20))))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+
+_GATED = {
+    "contaminated_docs": lambda df: decontam.contaminated_docs(
+        df, df.where(F.col("doc_id") < 5), n=3
+    ),
+    "tfidf_top_terms": lambda df: text.tfidf_top_terms(df, k=2),
+    "source_overlap_matrix": lambda df: dedup.source_overlap_matrix(df, k=2),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_GATED))
+def test_size_gate_sides_agree(spark, monkeypatch, op):
+    """Both sides of the 16,384-row gate, each at 1 and 4 input
+    partitions, return the same rows; ``_SMALL_CORPUS = 0`` sends the
+    fixture down the large-corpus plan."""
+    corpus = _gate_corpus(spark)
+    runs = []
+    for threshold in (dedup._SMALL_CORPUS, 0):
+        monkeypatch.setattr(dedup, "_SMALL_CORPUS", threshold)
+        for n_parts in (1, 4):
+            rows = _GATED[op](corpus.repartition(n_parts)).collect()
+            runs.append(sorted(tuple(r) for r in rows))
+    assert runs[0]
+    assert all(r == runs[0] for r in runs[1:])
