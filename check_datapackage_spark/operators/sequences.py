@@ -114,8 +114,8 @@ def structure_checks(
     """The four structural invariants as compiled checks, pluggable
     into :func:`plans.validation.check_table` (batch, fused with every
     other declared check into the single-scan violations plan) and
-    :func:`streaming.checks.streaming_violations` (the predicates are
-    stateless projections, so they run unchanged in append mode).
+    :func:`plans.validation.violations_plan` on a stream (the predicates
+    are stateless projections, so they run unchanged in append mode).
 
     NULL arrays pass every structure check — ``required`` owns null
     handling, same convention as every field constraint. EMPTY arrays

@@ -23,7 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,16 +68,16 @@ def uniqueness_violations(
     df: DataFrame,
     keys: Sequence[str],
     table_name: str,
-    partition: Optional[str] = None,
     order_by_jsonpath: bool = False,
 ) -> DataFrame:
     """Violation rows (VIOLATION_FULL_SCHEMA) for duplicated keys.
 
     One row per duplicated key value (not per duplicate row) — matching
     the reference's one-Issue-per-violating-property shape and keeping
-    output proportional to |dup keys|. ``order_by_jsonpath=True``
-    returns the rows jsonpath-ordered, with the sort run over the
-    narrow key frame before the strings are built.
+    output proportional to |dup keys|. The rows carry a NULL
+    ``partition``: a duplicated key can span partitions.
+    ``order_by_jsonpath=True`` returns the rows jsonpath-ordered, with
+    the sort run over the narrow key frame before the strings are built.
     """
     keys = list(keys)
     dups = dup_key_counts(df, keys)

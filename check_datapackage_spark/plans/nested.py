@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..compile import compile_field_checks
 from ..issue import VIOLATION_FULL_SCHEMA, row_key_text
 from ..spec import TableSpec
-from .validation import ELEMENT_INDEX, _FusedBranch
+from .validation import ELEMENT_INDEX, _FailingChecks, _FusedBranch
 
 #: the row key column of the element frame
 _ROW = "__cdp_row"
@@ -64,7 +64,8 @@ def nested_violations(
     ]
     if not checks:
         return df.sparkSession.createDataFrame([], VIOLATION_FULL_SCHEMA)
+    failing = _FailingChecks(checks)
     branch = _FusedBranch(
-        checks, range(len(checks)), table_name, _ROW, None, element=array_col
+        failing, range(len(checks)), table_name, _ROW, None, element=array_col
     )
-    return branch.violations(branch.frame(elems))
+    return branch.violations(failing.frame(elems))

@@ -11,15 +11,15 @@ does the table analog in one scan:
   no Python, and Catalyst prunes the scan (and the explode) down to
   exactly the columns the checks and their instances read — nothing
   derives them by hand.
-* **summary**: without ``partitionBy``, an ``Observation`` on the
-  pre-explode frame counts ``n_rows`` and one fail count per check from
-  the same failing-check array, so the action that executes the
-  violations also yields the summary — no second scan, no extra job.
-  The array covers every runnable check, including those exclusions
-  prune from the explode. With ``partitionBy`` (an observation cannot
-  group), or when no complete observation exists, :func:`summary_plan`
-  builds it lazily: one ``groupBy(partition).agg`` of
-  ``sum(when(~ok, 1))`` per check, a light shuffle of |partitions| ×
+* **summary**: one aggregate list, ``n_rows`` plus one fail count per
+  check, over the same failing-check array the violations explode
+  (:class:`_FailingChecks`; it covers every runnable check, including
+  those exclusions prune from the explode). Without ``partitionBy`` an
+  ``Observation`` on the pre-explode frame reads it, so the action that
+  executes the violations also yields the summary — no second scan, no
+  extra job. With ``partitionBy`` (an observation cannot group), or
+  when no complete observation exists, a ``groupBy(partition)`` reads
+  it lazily (:func:`summary_plan`): a light shuffle of |partitions| ×
   |checks| longs regardless of table size.
 * **compile once, apply per frame**: :class:`ValidationPlan` holds
   everything that does not depend on the rows (spec issues, compiled
@@ -93,15 +93,82 @@ _FAILS, _KEY, _PART, _CI = "__cdp_fails", "__cdp_k", "__cdp_p", "__cdp_ci"
 ELEMENT_INDEX = "__cdp_i"
 
 
+class _FailingChecks:
+    """The failing-check array of ``checks`` and the fail counts read
+    from it, as Column expressions built once: every per-check fail
+    count of the engine (the observed summary, :func:`summary_plan`'s
+    matrix, the windowed stream counts) is an aggregate of this array.
+
+    ``aggs`` is ``n_rows`` plus one ``_c<i>`` count per check: observed
+    on the fused branch, or grouped by :meth:`matrix`."""
+
+    def __init__(self, checks: Sequence[CompiledCheck]):
+        self.checks = list(checks)
+        self.lets = _let_layers(self.checks)
+        # the per-row work is ONLY the ok predicates: the array carries
+        # the indices of failing checks (array<int>), nothing else
+        self.fails = F.array_compact(
+            F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(self.checks)])
+        )
+        fails = F.col(_FAILS)
+        self.aggs = [
+            F.count(F.lit(1)).alias("n_rows"),
+            *[
+                F.sum(F.when(F.array_contains(fails, i), 1).otherwise(0)).alias(f"_c{i}")
+                for i in range(len(self.checks))
+            ],
+        ]
+
+    def frame(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the checks' shared columns and ``__cdp_fails``:
+        the indices of the checks a row fails (``array<int>``, empty when
+        it passes). Each ``ok`` predicate is evaluated once, here."""
+        for layer in self.lets:
+            df = df.withColumns(layer)
+        return df.withColumn(_FAILS, self.fails)
+
+    def matrix(self, framed: DataFrame, *group: Column) -> DataFrame:
+        """The fail counts of a :meth:`frame` per ``group``, long form:
+        the ``group`` columns, then (n_rows, check, column, type,
+        fail_count), one row per (group, check). The wide aggregate runs
+        first (one shuffle of tiny partial aggregates), then a
+        driver-free ``stack`` unpivot; check names are literals, never
+        pasted into SQL text. Without checks: the same columns, no rows
+        (and still a stream when ``framed`` is one)."""
+        if not self.checks:
+            types = {
+                "n_rows": "long", "check": "string", "column": "string",
+                "type": "string", "fail_count": "long",
+            }
+            return framed.where(F.lit(False)).select(
+                *group, *[F.lit(None).cast(t).alias(c) for c, t in types.items()]
+            )
+        wide = framed.groupBy(*group).agg(*self.aggs)
+        stack_args: list[Column] = []
+        for i, ck in enumerate(self.checks):
+            stack_args += [F.lit(ck.name), F.lit(ck.column or ""), F.lit(ck.issue_type), F.col(f"_c{i}")]
+        return wide.select(
+            *wide.columns[: len(group)],
+            "n_rows",
+            F.stack(F.lit(len(self.checks)), *stack_args).alias("check", "column", "type", "fail_count"),
+        )
+
+    def summary(self, df: DataFrame, partition: Optional[str] = None) -> DataFrame:
+        """:func:`summary_plan` of these checks over ``df``."""
+        group = [F.col(partition).cast("string").alias("partition")] if partition else []
+        return self.matrix(self.frame(df), *group).withColumn("passed", F.col("fail_count") == 0)
+
+
 class _FusedBranch:
-    """The fused branch of ``checks`` as Column expressions that do not
-    depend on the input frame: the let layers, the failing-check array
-    and the violation payload. It holds nothing per frame: :meth:`frame`
-    and :meth:`violations` only build DataFrames, so a plan reused
-    across micro-batches builds the expressions once.
+    """The fused branch over a :class:`_FailingChecks`' array as Column
+    expressions that do not depend on the input frame: the explode and
+    the violation payload. It holds nothing per frame:
+    :meth:`violations` only builds DataFrames, so a plan reused across
+    micro-batches builds the expressions once.
 
     Only the checks at the indices in ``emit`` are exploded; the array
-    (and an observed summary reading it) covers all of ``checks``.
+    (and an observed summary reading it) covers all of ``failing``'s
+    checks.
 
     With ``element``, the rows are elements of that array column with
     their index in :data:`ELEMENT_INDEX`: addresses get the segment
@@ -109,21 +176,15 @@ class _FusedBranch:
 
     def __init__(
         self,
-        checks: Sequence[CompiledCheck],
+        failing: _FailingChecks,
         emit: Sequence[int],
         table_name: str,
         row_key: Optional[Union[str, list]],
         partition: Optional[str],
         element: Optional[str] = None,
     ):
-        self.checks = list(checks)
+        self.checks = failing.checks
         self.emit_checks = [self.checks[i] for i in emit]
-        self.lets = _let_layers(self.checks)
-        # the per-row work is ONLY the ok predicates: the array carries
-        # the indices of failing checks (array<int>), nothing else
-        self.fails = F.array_compact(
-            F.array(*[F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(self.checks)])
-        )
 
         # with no key, a positional id stands in for the reference's [i]
         key_col = F.monotonically_increasing_id() if row_key is None else row_key_text(row_key)
@@ -182,17 +243,9 @@ class _FusedBranch:
             partition=F.col(_PART),
         )
 
-    def frame(self, df: DataFrame) -> DataFrame:
-        """``df`` plus the checks' shared columns and ``__cdp_fails``:
-        the indices of the checks a row fails (``array<int>``, empty when
-        it passes). Each ``ok`` predicate is evaluated once, here; the
-        observed summary reads its fail counts from this same array."""
-        for layer in self.lets:
-            df = df.withColumns(layer)
-        return df.withColumn(_FAILS, self.fails)
-
     def violations(self, framed: DataFrame) -> DataFrame:
-        """Violation rows (VIOLATION_FULL_SCHEMA) of a :meth:`frame`.
+        """Violation rows (VIOLATION_FULL_SCHEMA) of a
+        :meth:`_FailingChecks.frame`.
 
         The post-explode payload may read ANY input column (cross-column
         invariants, column=None checks — the full compile_invariant
@@ -231,8 +284,9 @@ def violations_plan(
     """
     if not checks:
         return df.sparkSession.createDataFrame([], schema=VIOLATION_FULL_SCHEMA)
-    branch = _FusedBranch(checks, range(len(checks)), table_name, row_key, partition)
-    return branch.violations(branch.frame(df))
+    failing = _FailingChecks(checks)
+    branch = _FusedBranch(failing, range(len(checks)), table_name, row_key, partition)
+    return branch.violations(failing.frame(df))
 
 
 def _column_suffix(ck: CompiledCheck) -> str:
@@ -248,40 +302,12 @@ def summary_plan(
 ) -> DataFrame:
     """Per-partition pass/fail matrix in one agg pass.
 
-    Output: (partition, check, column, type, n_rows, fail_count, passed)
-    — long form, one row per (partition, check). The wide agg happens
-    first (one shuffle of tiny partial aggregates), then a driver-free
-    ``stack`` unpivot.
+    Output: (partition, n_rows, check, column, type, fail_count, passed)
+    — long form, one row per (partition, check); no partition column
+    without ``partition``. The counts are
+    :meth:`_FailingChecks.matrix` of the failing-check array.
     """
-    if not checks:
-        return df.sparkSession.createDataFrame(
-            [],
-            schema=(
-                "partition string, n_rows long, check string, column string,"
-                " type string, fail_count long, passed boolean"
-            ),
-        ).drop(*([] if partition else ["partition"]))
-
-    df = bind_check_lets(df, checks)
-    group = [F.col(partition).cast("string").alias("partition")] if partition else []
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for i, ck in enumerate(checks):
-        aggs.append(
-            F.sum(F.when(~ck.ok, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
-        )
-    wide = df.groupBy(*group).agg(*aggs)
-
-    # unpivot via stack — stays distributed, no collect; names are
-    # literals, never pasted into SQL text
-    stack_args: list[Column] = []
-    for i, ck in enumerate(checks):
-        stack_args += [F.lit(ck.name), F.lit(ck.column or ""), F.lit(ck.issue_type), F.col(f"_c{i}")]
-    cols = (["partition"] if partition else []) + ["n_rows"]
-    long = wide.select(
-        *cols,
-        F.stack(F.lit(len(checks)), *stack_args).alias("check", "column", "type", "fail_count"),
-    ).withColumn("passed", F.col("fail_count") == 0)
-    return long
+    return _FailingChecks(checks).summary(df, partition)
 
 
 # ---------------------------------------------------------------------------
@@ -358,9 +384,7 @@ def prune_excluded_checks(
     return [ck for ck in checks if not covered(ck)]
 
 
-def cap_examples(
-    violations: DataFrame, max_per_check: int, partition: bool = True
-) -> DataFrame:
+def cap_examples(violations: DataFrame, max_per_check: int) -> DataFrame:
     """Deterministically cap persisted example rows per (check, partition).
 
     Window row_number over (check, partition) ordered by jsonpath — used
@@ -369,8 +393,7 @@ def cap_examples(
     """
     from pyspark.sql import Window as W
 
-    keys = ["check"] + (["partition"] if partition else [])
-    w = W.partitionBy(*keys).orderBy("jsonpath")
+    w = W.partitionBy("check", "partition").orderBy("jsonpath")
     return (
         violations.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= max_per_check)
@@ -385,31 +408,19 @@ def cap_examples(
 
 class _ObservedSummary:
     """The unpartitioned summary as observed metrics of the fused
-    branch: ``n_rows`` plus one fail count per check, collected by
-    whichever action first executes the violations. The counts read the
-    failing-check array, not the ``ok`` predicates, which would evaluate
-    every check a second time per row."""
+    branch: :attr:`_FailingChecks.aggs`, collected by whichever action
+    first executes the violations. The counts read the failing-check
+    array, not the ``ok`` predicates, which would evaluate every check a
+    second time per row."""
 
-    def __init__(self, checks: Sequence[CompiledCheck], framed: DataFrame, metrics: list):
+    def __init__(self, failing: _FailingChecks, framed: DataFrame):
         from pyspark.sql import Observation
 
-        self.checks = list(checks)
+        self.checks = failing.checks
         self.spark = framed.sparkSession
         # an Observation serves one DataFrame: a fresh one per frame
         self.observation = Observation()
-        self.observed = framed.observe(self.observation, *metrics)
-
-    @staticmethod
-    def metrics(n_checks: int) -> list[Column]:
-        """The observed aggregates of a frame over ``n_checks`` checks."""
-        fails = F.col(_FAILS)
-        return [
-            F.count(F.lit(1)).alias("n_rows"),
-            *[
-                F.sum(F.when(F.array_contains(fails, i), 1).otherwise(0)).alias(f"_c{i}")
-                for i in range(n_checks)
-            ],
-        ]
+        self.observed = framed.observe(self.observation, *failing.aggs)
 
     def frame(self) -> Optional[DataFrame]:
         """The summary in :func:`summary_plan`'s schema, ordered by check;
@@ -586,34 +597,23 @@ class ValidationPlan:
         checks = compile_table_checks(spec, extra=extra, schema=self.schema)
         # dotted column paths (nested RequiredCheck targets) are runnable
         # when their ROOT column exists
-        self.runnable = [
+        runnable = [
             c
             for c in checks
             if c.column is None or c.column.split(".", 1)[0] in actual_cols
         ]
         self.partition = spec.partition_by[0] if spec.partition_by else None
 
+        #: the failing-check array covers ALL runnable checks: every fail
+        #: count of the summary reads it
+        self.failing = _FailingChecks(runnable)
         # plan pruning: checks whose every violation a type/whole-column
-        # exclusion would drop are never computed (U4 pushdown)
-        emitted = prune_excluded_checks(self.runnable, config.exclusions, spec.name)
-        #: the unpartitioned summary is observed on the fused branch: then
-        #: its failing-check array covers ALL runnable checks and the
-        #: explode emits only the unpruned ones
-        self.observe = bool(emitted) and self.partition is None
-        covered = self.runnable if self.observe else emitted
-        keep = {id(ck) for ck in emitted}
+        # exclusion would drop are never exploded (U4 pushdown)
+        keep = {id(ck) for ck in prune_excluded_checks(runnable, config.exclusions, spec.name)}
+        emit = [i for i, ck in enumerate(runnable) if id(ck) in keep]
         self.branch = (
-            _FusedBranch(
-                covered,
-                [i for i, ck in enumerate(covered) if id(ck) in keep],
-                spec.name,
-                row_key,
-                self.partition,
-            )
-            if emitted
-            else None
+            _FusedBranch(self.failing, emit, spec.name, row_key, self.partition) if emit else None
         )
-        self.metrics = _ObservedSummary.metrics(len(covered)) if self.observe else None
 
         # Gate (R1, ref check.py:330-337): skip data-level key checks whose
         # declaration is itself broken.
@@ -684,14 +684,14 @@ class ValidationPlan:
         if self.branch is None:
             v = df.sparkSession.createDataFrame([], schema=VIOLATION_FULL_SCHEMA)
         else:
-            framed = self.branch.frame(df)
-            if self.observe:
-                observed = _ObservedSummary(self.runnable, framed, self.metrics)
+            framed = self.failing.frame(df)
+            if partition is None:  # an observation cannot group
+                observed = _ObservedSummary(self.failing, framed)
                 framed = observed.observed
             v = self.branch.violations(framed)
         parts = [v]
         for keys in self.unique_keys:
-            parts.append(uniqueness_violations(df, keys, spec.name, partition=partition))
+            parts.append(uniqueness_violations(df, keys, spec.name))
         for fk, dest_df in self.foreign_keys:
             parts.append(
                 referential_violations(
@@ -712,11 +712,11 @@ class ValidationPlan:
             all_v = cap_examples(all_v, self.config.max_examples_per_check)
         unordered = dedup_violations(all_v)
 
-        runnable = self.runnable
+        failing = self.failing
         return ValidationResult(
             spec_issues=list(self.spec_issues),
             violations=order_violations(unordered),
-            _summary_plan=lambda: summary_plan(df, runnable, partition=partition).orderBy(
+            _summary_plan=lambda: failing.summary(df, partition).orderBy(
                 *(["partition"] if partition else []), "check"
             ),
             _observed=observed,

@@ -156,7 +156,7 @@ def read_csv_stream_typed(
 
     The cast staging is a stateless projection, so the stream stays
     append-mode with NO state store; compose with
-    ``streaming.checks.streaming_violations`` for validate-as-it-lands,
+    ``plans.validation.violations_plan`` for validate-as-it-lands,
     or ``foreach_batch_validator`` when key checks are needed.
     Streaming sources REQUIRE an explicit schema (no sniffing pass
     exists to infer one) — the spec-driven all-string schema is exactly
@@ -241,7 +241,7 @@ def read_jsonl_stream_typed(
 ) -> DataFrame:
     """Streaming twin of :func:`read_jsonl_typed`: watch a directory
     for JSONL files; every micro-batch lands staged + typed, ready for
-    streaming_violations."""
+    ``plans.validation.violations_plan``."""
     names = columns if columns is not None else [f.name for f in spec.fields]
     schema = T.StructType(
         [T.StructField(n, T.StringType(), True) for n in names]

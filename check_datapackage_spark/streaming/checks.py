@@ -4,12 +4,13 @@ Not in the reference (SURVEY §2.8: "no streaming operators exist
 anywhere in the reference") — this is the engine's extension for
 validating data as it lands:
 
-* :func:`streaming_violations` — the SAME compiled checks run on a
-  streaming DataFrame; the fused violation projection is stateless, so
-  it works unchanged in append mode (this is the payoff of compiling
-  checks to Column expressions).
+* :func:`~..plans.validation.violations_plan` takes a streaming
+  DataFrame as it is: the fused violation projection is stateless, so
+  the SAME compiled checks run unchanged in append mode (this is the
+  payoff of compiling checks to Column expressions).
 * :func:`windowed_violation_counts` — watermarked windowed pass/fail
-  counts (late data handled by the watermark).
+  counts (late data handled by the watermark), read from the same
+  failing-check array as the batch summary.
 * :func:`foreach_batch_validator` — exactly-once micro-batch validation:
   run the full batch plan (incl. uniqueness/referential, which need
   joins not allowed in pure append streams) per epoch via foreachBatch.
@@ -27,25 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import CompiledCheck
-from ..plans.validation import violations_plan
+from ..plans.validation import _FailingChecks
 from ..spec import TableSpec
-
-
-def streaming_violations(
-    stream: DataFrame,
-    checks: Sequence[CompiledCheck],
-    table_name: str,
-    row_key: Optional[str] = None,
-    partition: Optional[str] = None,
-) -> DataFrame:
-    """Stateless fused violation projection on a stream (append mode).
-
-    Identical plan to the batch path — per-row checks are pure
-    projections, so Spark runs them per micro-batch with no state store.
-    """
-    return violations_plan(
-        stream, checks, table_name, row_key=row_key, partition=partition
-    )
 
 
 def windowed_violation_counts(
@@ -62,35 +46,13 @@ def windowed_violation_counts(
     by the watermark; late rows beyond it are dropped, matching the
     standard Structured Streaming contract.
     """
-    from ..plans.validation import bind_check_lets
-
+    failing = _FailingChecks(checks)
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC so
     # the cast preserves the wall-clock instant
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    framed = failing.frame(stream).withWatermark(ts_col, watermark)
     win = F.window(F.col(ts_col), window, slide)  # tumbling when slide is None
-    if not checks:
-        # the same columns, no rows (and still a stream when the input is)
-        return stream.where(F.lit(False)).select(
-            win.alias("window"),
-            F.lit(None).cast("string").alias("check"),
-            F.lit(None).cast("long").alias("fail_count"),
-        )
-    stream = bind_check_lets(stream, checks)
-    fails = [
-        F.sum(F.when(~ck.ok, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
-        for i, ck in enumerate(checks)
-    ]
-    wide = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("window"))
-        .agg(*fails)
-    )
-    stack_args: list = []
-    for i, ck in enumerate(checks):
-        stack_args += [F.lit(ck.name), F.col(f"_c{i}")]
-    return wide.select(
-        "window", F.stack(F.lit(len(checks)), *stack_args).alias("check", "fail_count")
-    )
+    return failing.matrix(framed, win.alias("window")).select("window", "check", "fail_count")
 
 
 def foreach_batch_validator(

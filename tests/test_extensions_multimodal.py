@@ -181,7 +181,7 @@ def test_resume_validates_and_records_null_source_rows(spark, tmp_path):
 def test_streaming_violations_memory_sink(spark, tmp_path):
     """Drive the stateless fused checks through a real streaming query."""
     from check_datapackage_spark.compile import compile_table_checks
-    from check_datapackage_spark.streaming.checks import streaming_violations
+    from check_datapackage_spark.plans.validation import violations_plan
 
     src = str(tmp_path / "in")
     df, _ = __import__(
@@ -192,7 +192,7 @@ def test_streaming_violations_memory_sink(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     checks = compile_table_checks(sequences_spec(), schema=schema)
-    v = streaming_violations(stream, checks, "sequences", row_key="doc_id")
+    v = violations_plan(stream, checks, "sequences", row_key="doc_id")
     q = (
         v.writeStream.format("memory")
         .queryName("viol")

@@ -27,6 +27,8 @@ KEEP = {
     "issue.issues_from_rows": "turns violation rows back into the reference's Issue objects",
     "spec.is_jsonpath": "mirrors the reference's jsonpath validity test",
     "plans.validation.exclusion_filter": "applies the reference's exclusions to a violation frame",
+    "plans.validation.summary_plan": "exported pass/fail matrix of compiled checks over a frame",
+    "plans.validation.bind_check_lets": "exported: adds the let columns a check's ok predicate reads",
     "plans.nested.nested_violations": "validates nested array-of-struct fields for library callers",
     "sources.registry.raise_on_violations": "the reference's check(error=True) exception channel",
     "operators.infer.suggest_spec": "describe side: infers a spec from data",
@@ -38,7 +40,6 @@ KEEP = {
     "sources.csv.read_jsonl_typed": "typed JSONL reader for library callers",
     "sources.csv.read_jsonl_stream_typed": "typed JSONL stream reader for library callers",
     # streaming validation for library callers
-    "streaming.checks.streaming_violations": "the fused checks on an append-mode stream",
     "streaming.checks.windowed_violation_counts": "watermarked per-window fail counts of the checks",
     # test references and helpers
     "operators.similarity.brute_force_topk": "exact top-k, the ground truth for ivf_topk's recall test",

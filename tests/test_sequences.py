@@ -150,7 +150,7 @@ def test_structure_checks_in_check_table(spark):
 
 def test_structure_checks_streaming(spark, tmp_path):
     from check_datapackage_spark.operators.sequences import structure_checks
-    from check_datapackage_spark.streaming.checks import streaming_violations
+    from check_datapackage_spark.plans.validation import violations_plan
 
     BOS, EOS, PAD = 0, 1, 2
     src = str(tmp_path / "seq_in")
@@ -160,7 +160,7 @@ def test_structure_checks_streaming(spark, tmp_path):
     ).write.parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_violations(
+    out = violations_plan(
         stream,
         structure_checks("tokens", bos=BOS, eos=EOS, pad=PAD, max_id=10),
         table_name="seqs",

@@ -271,6 +271,44 @@ def test_observed_summary_keeps_pruned_check(spark, bad):
     assert [r["fail_count"] for r in row] == [1]
 
 
+def test_partitioned_summary_keeps_pruned_check(spark, bad):
+    """With partitionBy, an exclusion that prunes a check from the
+    explode still leaves its fail count in every partition of the
+    summary; the partitions add up to the flat observed summary, and the
+    violations are the unexcluded run's without the excluded type."""
+    from check_datapackage_spark import bind_check_lets, compile_table_checks
+
+    df = bad[0].drop("_row")
+    cfg = CheckConfig(exclusions=(Exclusion(type="pattern"),))
+    res = run_check(spark, df, config=cfg)
+    plain = run_check(spark, df)
+    assert sorted(res.violations.collect(), key=str) == sorted(
+        plain.violations.where(F.col("type") != "pattern").collect(), key=str
+    )
+
+    summary = res.summary.collect()
+    checks = compile_table_checks(
+        sequences_spec(), extra=token_invariant_checks(), schema=df.schema
+    )
+    [ck] = [c for c in checks if c.name == "doc_id.pattern"]
+    recount = {
+        r["source"]: r["count"]
+        for r in bind_check_lets(df, checks).where(~ck.ok).groupBy("source").count().collect()
+    }
+    got = {r["partition"]: r["fail_count"] for r in summary if r["check"] == ck.name}
+    assert got.keys() == {r["source"] for r in df.select("source").distinct().collect()}
+    assert {p: n for p, n in got.items() if n} == recount and sum(recount.values()) > 0
+
+    flat = _flat_check(spark, df, config=cfg)
+    flat.violations.count()
+    assert flat._observed.frame() is not None  # the observed path was taken
+    totals: dict = {}
+    for r in summary:
+        n, f = totals.get(r["check"], (0, 0))
+        totals[r["check"]] = (n + r["n_rows"], f + r["fail_count"])
+    assert totals == {r["check"]: (r["n_rows"], r["fail_count"]) for r in flat.summary.collect()}
+
+
 def test_observed_summary_after_is_empty(spark, bad):
     """A short-circuiting first action still observes every row: the
     dedup exchange runs the whole fused branch before any row is taken."""
@@ -358,9 +396,11 @@ def test_summaries_with_a_quoted_field_name(spark):
     assert fails(partitioned) == {("it's.minimum", 1)}
     flat = check_table(df, dataclasses.replace(spec, partition_by=()))
     assert fails(flat) == {("it's.minimum", 1)}  # before any action: summary_plan
-    [ck] = [c for c in compile_table_checks(spec, schema=df.schema) if c.name == "it's.minimum"]
-    counts = windowed_violation_counts(df, [ck], ts_col="ts", window="1 hour")
-    assert [(r["check"], r["fail_count"]) for r in counts.collect()] == [("it's.minimum", 1)]
+    # both rows fall in one window: the windowed counts are the summary's
+    checks = compile_table_checks(spec, schema=df.schema)
+    counts = windowed_violation_counts(df, checks, ts_col="ts", window="1 hour").collect()
+    assert sorted(r["check"] for r in counts) == sorted(ck.name for ck in checks)
+    assert {(r["check"], r["fail_count"]) for r in counts if r["fail_count"]} == fails(flat)
 
 
 # ---------------------------------------------------------------------------
